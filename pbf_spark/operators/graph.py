@@ -16,8 +16,8 @@ standard practice for iterative Spark). Near-dup graphs have tiny
 diameters (a dup cluster is nearly a clique), so 2-4 rounds suffice; for
 adversarially long path graphs the round count is the diameter, and the
 published fix is the large-star/small-star contraction (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14) which this
-module's API admits as a drop-in (same edge-list in, labels out).
+"Connected Components in MapReduce and Beyond", SoCC'14), which would
+fit the same API (edge list in, labels out) if such inputs appear.
 Driver actions: exactly one ``count()`` per round (the convergence
 check), bounded by ``max_iter`` — the same bounded-driver-round-trip
 pattern as knn_join's ring expansion (knn.py).
@@ -96,86 +96,3 @@ def connected_components(
         "(graph diameter exceeds max_iter)"
     )
 
-
-def connected_components_star(
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", SoCC'14): → (id, component)
-    with the SAME canonical min-id labeling as
-    :func:`connected_components`, but converging in O(log n) rounds on
-    any graph — the drop-in for long-diameter inputs (spatial chains,
-    road networks, ``range_join``→CC compositions) where min-label
-    propagation needs O(diameter) rounds.
-
-    Per round both operations are a groupBy-min plus an equi-join on the
-    node key — the identical shuffle shape as the label-propagation
-    algorithm, just over a shrinking edge list. Convergence: the edge
-    set reaches a fixpoint in which every component is a star rooted at
-    its minimum id; the roots are then the component labels.
-    """
-    from ..util import release_checkpoint as _release
-
-    # canonical (big, small) orientation, deduplicated
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    prev = e
-    converged = False
-    for _ in range(max_iter):
-        # large-star: every center links its LARGER neighbors to
-        # m = min(N(center) ∪ {center}) — output keeps (big, small)
-        sym = e.select("u", "v").union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("_mn")).select(
-            "u", F.least("u", "_mn").alias("m")
-        )
-        large = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: group by the big endpoint over its smaller
-        # neighbors; link them AND the center to the minimum
-        mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        withm = large.join(mins2, "u")
-        small = (
-            withm.select(F.col("v").alias("x"), "m")
-            .union(withm.select(F.col("u").alias("x"), "m"))
-            .where(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint()
-        )
-        converged = small.exceptAll(e).isEmpty() and e.exceptAll(small).isEmpty()
-        _release(prev)
-        prev = small
-        e = small
-        if converged:
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star: no convergence in {max_iter} rounds"
-        )
-    # at the fixpoint every edge is (member, root): labels fall out
-    labels = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = e.select(F.col("v").alias("id")).distinct().select(
-        "id", F.col("id").alias("component")
-    )
-    out = labels.union(roots)
-    if vertices is not None:
-        vs = vertices.select(F.col(vertices.columns[0]).alias("id")).distinct()
-        missing = vs.join(out.select("id"), "id", "left_anti").select(
-            "id", F.col("id").alias("component")
-        )
-        out = out.union(missing)
-    return out.distinct()

@@ -91,19 +91,16 @@ def knn_join(
     id_col: str = "id",
     max_rounds: int = 3,
     start_ring: int = 2,
-    eager: bool = True,
 ) -> DataFrame:
     """→ (query_id, {id_col}, dist_m, rank) with rank 1..k per query.
 
     ``points`` needs (id_col, lat, lon); ``queries`` needs
     (query_id, lat, lon). Deterministic: ties broken by entity id.
 
-    ``eager`` (default): the result is localCheckpointed and the
-    operator's internal caches (cell-indexed points, per-round remaining
-    queries) are released before returning — the expansion loop is
-    inherently iterative, so without this the caches would outlive the
-    call. Pass eager=False to keep the plan lazy (caller manages caches
-    via spark.catalog.clearCache()).
+    The result is localCheckpointed and the operator's internal caches
+    (cell-indexed points, per-round remaining queries) are released
+    before returning — the expansion loop is inherently iterative, so
+    without this the caches would outlive the call.
 
     Scale note: each expansion round issues one driver action
     (``remaining.isEmpty()``) to decide whether to widen the ring, so
@@ -204,10 +201,9 @@ def knn_join(
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        for df in cached:
-            df.unpersist()
+    out = out.localCheckpoint(eager=True)
+    for df in cached:
+        df.unpersist()
     return out
 
 

@@ -128,7 +128,7 @@ def pick_finest_level(
 
     Default rule: the PERIMETER budget — finest level whose boundary-cell
     estimate fits ``max_cells``. Measured on interleaved convergence-
-    gated runs (tools/pip_level_sweep.py, bench_out/pip_level_sweep.json):
+    gated runs (BASELINE.md, "PIP prefilter level"):
     with a dense point cloud, candidate over-fetch (∝ perimeter ×
     cell_size × point_density) dominates the broadcast cost of a finer
     covering, so small city polygons WANT level 16 (2.56 s vs 3.28 s at

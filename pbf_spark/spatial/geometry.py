@@ -62,62 +62,6 @@ def points_in_ring(lat: np.ndarray, lon: np.ndarray, ring: np.ndarray) -> np.nda
     return hit.sum(axis=1) % 2 == 1
 
 
-def points_in_ring_binned(lat: np.ndarray, lon: np.ndarray, ring: np.ndarray, bins: int = 256) -> np.ndarray:
-    """points_in_ring with a latitude-interval edge index.
-
-    Identical results (the exact crossing test runs per candidate pair);
-    binning only prunes candidates: an edge is registered in every lat
-    bin its y-interval touches, a point only tests edges in its own bin.
-    O(P·k) instead of O(P·E) where k = edges stabbing the point's lat —
-    the win that makes country-scale covering classification cheap.
-    """
-    ring = np.asarray(ring, dtype=np.float64)
-    if ring.shape[0] > 1 and (ring[0] == ring[-1]).all():
-        ring = ring[:-1]
-    y = np.asarray(lat, dtype=np.float64)
-    x = np.asarray(lon, dtype=np.float64)
-    e = ring.shape[0]
-    if y.size * e <= 2_000_000 or e < 32:
-        return points_in_ring(y, x, ring)
-    y1, x1 = ring[:, 0], ring[:, 1]
-    y2, x2 = np.roll(y1, -1), np.roll(x1, -1)
-    ey_lo, ey_hi = np.minimum(y1, y2), np.maximum(y1, y2)
-    g0, g1 = float(ey_lo.min()), float(ey_hi.max())
-    h = max((g1 - g0) / bins, 1e-12)
-    b_lo = np.clip(((ey_lo - g0) / h).astype(np.int64), 0, bins - 1)
-    b_hi = np.clip(((ey_hi - g0) / h).astype(np.int64), 0, bins - 1)
-    span = b_hi - b_lo + 1
-    edge_ids = np.repeat(np.arange(e), span)
-    edge_bins = np.repeat(b_lo, span) + (np.arange(edge_ids.size) - np.repeat(np.cumsum(span) - span, span))
-    order = np.argsort(edge_bins, kind="stable")
-    edge_ids = edge_ids[order]
-    off = np.zeros(bins + 1, dtype=np.int64)
-    np.cumsum(np.bincount(edge_bins, minlength=bins), out=off[1:])
-
-    inside = np.zeros(y.size, dtype=bool)
-    inb = (y >= g0) & (y <= g1)  # outside the ring's lat range → 0 crossings
-    if not inb.any():
-        return inside
-    pi = np.nonzero(inb)[0]
-    pb = np.clip(((y[pi] - g0) / h).astype(np.int64), 0, bins - 1)
-    counts = off[pb + 1] - off[pb]
-    total = int(counts.sum())
-    if total == 0:
-        return inside
-    pt_rep = np.repeat(np.arange(pi.size), counts)
-    pos = np.arange(total) - np.repeat(np.cumsum(counts) - counts, counts)
-    eidx = edge_ids[np.repeat(off[pb], counts) + pos]
-    py, px = y[pi][pt_rep], x[pi][pt_rep]
-    cy1, cx1, cy2, cx2 = y1[eidx], x1[eidx], y2[eidx], x2[eidx]
-    crosses = (cy1 > py) != (cy2 > py)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        x_at_y = cx1 + (py - cy1) * (cx2 - cx1) / (cy2 - cy1)
-    hit = crosses & (px < x_at_y)
-    parity = np.bincount(pt_rep[hit], minlength=pi.size)
-    inside[pi] = parity % 2 == 1
-    return inside
-
-
 class EdgeIndex:
     """Lat-binned edge index over one polygon (outer ring + optional holes).
 

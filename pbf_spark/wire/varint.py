@@ -40,36 +40,6 @@ def decode_varints(buf: bytes | np.ndarray) -> np.ndarray:
     starts = np.empty_like(ends_pos)
     starts[0] = 0
     starts[1:] = ends_pos[:-1] + 1
-    lengths = ends_pos - starts
-    long_idx = np.flatnonzero(lengths > 2)  # values of 4+ bytes
-    if long_idx.size <= max(4, starts.size >> 6):
-        # nearly every varint is 1-3 bytes (dense-node id/lat/lon
-        # deltas and string-table ids live here — typically only the
-        # FIRST value of a delta run is a large absolute): assemble the
-        # short ones directly, skipping the group-id cumsum, position
-        # gather and segmented reduction of the general path, and patch
-        # the few long values with a scalar decode. Bytes 1-2 need the
-        # 0x7F mask (they carry continuation bits for longer values).
-        out = b[starts].astype(np.uint64) & 0x7F
-        m2 = lengths > 0
-        out[m2] |= (b[starts[m2] + 1].astype(np.uint64) & 0x7F) << _SEVEN
-        m3 = lengths > 1
-        out[m3] |= (b[starts[m3] + 2].astype(np.uint64) & 0x7F) << _U64(14)
-        for j in long_idx:
-            val = 0
-            shift = 0
-            p = int(starts[j])
-            while True:
-                byte = int(b[p])
-                val |= (byte & 0x7F) << shift
-                p += 1
-                if byte < 0x80:
-                    break
-                shift += 7
-                if shift > 63:
-                    raise ValueError("varint longer than 10 bytes")
-            out[j] = val & 0xFFFFFFFFFFFFFFFF
-        return out
     # group id for each byte = number of terminators strictly before it
     gid = np.empty(n, dtype=np.int64)
     gid[0] = 0

@@ -48,47 +48,6 @@ def test_cc_max_iter_raises(spark):
         connected_components(edges, max_iter=2)
 
 
-def test_cc_star_matches_label_propagation(spark):
-    """Large-star/small-star must produce the identical canonical
-    labeling on the existing fixtures (VERDICT r5 item 4)."""
-    from pbf_spark.operators.graph import connected_components_star
-
-    edges = small_df(
-        spark,
-        [(2, 1), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10), (11, 10)],
-        EDGE_SCHEMA,
-    )
-    verts = small_df(spark, [(1,), (2,), (3,), (4,), (10,), (11,), (12,), (99,)], "id long")
-    assert _cc_map(connected_components_star(edges, vertices=verts)) == _cc_map(
-        connected_components(edges, vertices=verts)
-    )
-
-
-def test_cc_star_long_path_log_rounds(spark):
-    """Diameter-200 path: min-label needs 200 rounds; the contraction
-    must converge well inside 12 (O(log n)) with the same labels."""
-    from pbf_spark.operators.graph import connected_components_star
-
-    edges = small_df(spark, [(i, i + 1) for i in range(1, 201)], EDGE_SCHEMA)
-    got = _cc_map(connected_components_star(edges, max_iter=12))
-    assert set(got.values()) == {1} and len(got) == 201
-
-
-def test_cc_star_random_graph_equivalence(spark):
-    """Deterministic pseudo-random graph: both algorithms must agree on
-    the full (id -> min-id component) mapping."""
-    from pbf_spark.operators.graph import connected_components_star
-
-    edges = small_df(
-        spark,
-        [((i * 2654435761) % 97, (i * 40503 + 7) % 97) for i in range(60)],
-        EDGE_SCHEMA,
-    )
-    assert _cc_map(connected_components_star(edges)) == _cc_map(
-        connected_components(edges, max_iter=97)
-    )
-
-
 def test_near_dup_clusters_end_to_end(spark):
     from pbf_spark.operators.dedup import near_dup_clusters
 

@@ -152,16 +152,6 @@ def test_hexgrid_sql_twin_matches_numpy():
         assert (got == expected).all()
 
 
-def test_binned_ray_cast_matches_brute():
-    rng = np.random.default_rng(3)
-    ring = np.cumsum(rng.normal(size=(300, 2)), axis=0)
-    lat = rng.uniform(ring[:, 0].min() - 1, ring[:, 0].max() + 1, 60000)
-    lon = rng.uniform(ring[:, 1].min() - 1, ring[:, 1].max() + 1, 60000)
-    a = geometry.points_in_ring(lat, lon, ring)
-    b = geometry.points_in_ring_binned(lat, lon, ring)
-    assert (a == b).all()
-
-
 def test_adaptive_covering_superset_and_interior_exactness():
     """Every level-13 cell holding an inside point must be covered by a
     returned cell (prefilter superset); points in interior-flagged cells
@@ -191,7 +181,7 @@ def test_adaptive_covering_superset_and_interior_exactness():
 
 def test_pick_finest_level_perimeter_budget():
     """Data-driven finest level (perimeter budget, the measured winner —
-    bench_out/pip_level_sweep.json): a small city polygon earns the
+    BASELINE.md "PIP prefilter level"): a small city polygon earns the
     level-16 rung of the AUTO ladder (its boundary estimate fits the
     budget and over-fetch dominates broadcast cost on dense point
     clouds), while a country-scale ring lands at a coarse finest level

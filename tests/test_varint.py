@@ -56,3 +56,21 @@ def test_truncated_run_rejected():
 def test_empty():
     assert decode_varints(b"").size == 0
     assert encode_varints(np.empty(0, np.uint64)) == b""
+
+
+def test_mixed_width_run_and_overlong_varint():
+    # mostly 1-3-byte values with a few 5-10-byte ones (a delta run whose
+    # first value is a large absolute): must equal the scalar decoder
+    rng = np.random.default_rng(5)
+    vals = rng.integers(0, 1 << 21, size=2000, dtype=np.uint64)
+    vals[[0, 700, 1999]] = [1 << 40, 2**64 - 1, 1 << 28]
+    buf = encode_varints(vals)
+    expected, pos = [], 0
+    while pos < len(buf):
+        v, pos = decode_varint(buf, pos)
+        expected.append(v)
+    assert (decode_varints(buf) == np.array(expected, dtype=np.uint64)).all()
+    assert (decode_varints(buf) == vals).all()
+    # an 11-byte varint inside a run is rejected, not wrapped
+    with pytest.raises(ValueError, match="longer than 10 bytes"):
+        decode_varints(b"\x05" + b"\xff" * 10 + b"\x01" + b"\x07")

@@ -1,5 +1,5 @@
 """Inject measured scaling numbers into BASELINE.md (run once per round
-after tools/scaling_multi.py, and optionally tools/scaling_bench.py)."""
+after tools/scaling_multi.py)."""
 
 from __future__ import annotations
 
@@ -145,32 +145,9 @@ fixture's scale the ONE structural lever the storage layout controls
 """
 
 
-def _single_jvm_section() -> str:
-    p = REPO / "bench_out" / "scaling.json"
-    if not p.exists():
-        return ""
-    d = json.loads(p.read_text())
-    lo, hi = sorted(int(k) for k in d["levels"])
-    l8, l32 = d["levels"][str(lo)], d["levels"][str(hi)]
-    eff = d["scaling_efficiency"]
-    return f"""
-### Supplementary — single-JVM thread scaling (local[{lo}] vs local[{hi}])
-
-The round-1 protocol, kept for continuity. One JVM scaling only its task
-threads conflates engine scaling with single-process limits (shared
-allocator, GC, loopback Arrow path), so it bounds below the executor
-protocol above.
-
-| metric | local[{lo}] | local[{hi}] | efficiency |
-|---|---|---|---|
-| decode entities/sec | {l8["decode_entities_per_sec"]:,} | {l32["decode_entities_per_sec"]:,} | {eff["decode_entities_per_sec"]} |
-| PIP join rows/sec | {l8["pip_join_rows_per_sec"]:,} | {l32["pip_join_rows_per_sec"]:,} | {eff["pip_join_rows_per_sec"]} |
-"""
-
-
 def main() -> None:
     section = f"""{MARK_BEGIN}
-{_multi_section()}{_single_jvm_section()}
+{_multi_section()}
 Plan-shape evidence for cluster scaling (what a 1000-executor run relies
 on): decode is a narrow map over independent blobs (no shuffle — AQE
 broadcasts the tiny span side); the PIP join broadcasts the multi-level
