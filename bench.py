@@ -7,8 +7,8 @@ Queries are forced end-to-end with a noop-format write (count() alone
 would let Catalyst prune the expensive columns). Also times the engine's
 own decode+spatial pipeline on a cached deterministic fixture
 (greater-london-scale entity counts), reporting entities/sec — the
-north-metric numerator. Scaling efficiency across two parallelism levels
-is measured separately by tools/scaling_bench.py (BASELINE.md protocol).
+north-metric numerator. Scaling efficiency across executor counts is
+measured separately by tools/scaling_multi.py (BASELINE.md protocol).
 """
 
 from __future__ import annotations
@@ -198,12 +198,12 @@ def main() -> None:
     n_nodes = nodes.count()  # materialize so joins time only themselves
     polys = spark.read.parquet(str(BENCH_FIXTURE / "polygons.parquet"))
     # build-once dimension artifact. level=None → data-driven per-polygon
-    # finest prefilter level (perimeter-budget rule over the full AUTO
-    # ladder): the interleaved convergence-gated sweep (tools/
-    # pip_level_sweep.py → bench_out/pip_level_sweep.json) measured the
-    # auto pick matching the best manual config on BOTH the 192-polygon
-    # city workload and a country-scale ring (where a mis-set fine
-    # ladder is a 9x catastrophe).
+    # finest prefilter level (cell-budget rule over the full AUTO
+    # ladder): the interleaved convergence-gated sweep (BASELINE.md, "PIP
+    # prefilter level") measured the data-driven pick matching the best
+    # manual config on BOTH the 192-polygon city workload and a
+    # country-scale ring (where a mis-set fine ladder is a 9x
+    # catastrophe).
     index = spatial.build_polygon_index(spark, polys, level=None)
     pip_level = max(index.levels)
     n_join_rows = spatial.point_in_polygon_join(nodes, index, level=pip_level).count()

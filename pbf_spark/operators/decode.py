@@ -249,10 +249,14 @@ def decode_blob_payload(
     return out
 
 
+# output batch size the per-blob batches are coalesced into
+_COALESCE_ROWS = 65536
+
+
 def _decode_map_arrow(
     batches: Iterator[pa.RecordBatch],
     columns: frozenset[str] | None = None,
-    coalesce_rows: int = 65536,
+    coalesce_rows: int = _COALESCE_ROWS,
     kinds: tuple[str, ...] = _ALL_KINDS,
     out_schema: pa.Schema = ENTITY_ARROW_SCHEMA,
     tag_filter: dict | None = None,
@@ -317,7 +321,6 @@ def decode_blobs(
     blob_df: DataFrame,
     partitions: int | None = None,
     columns: frozenset[str] | set[str] | None = None,
-    coalesce_rows: int = 65536,
     kinds: tuple[str, ...] | None = None,
     slim: bool = False,
     way_locations: bool = False,
@@ -375,7 +378,7 @@ def decode_blobs(
         )
     tf = _normalize_tag_filter(tag_filter)
     return blob_df.mapInArrow(
-        lambda it: _decode_map_arrow(it, want, coalesce_rows, kinds_t, arrow_schema, tf),
+        lambda it: _decode_map_arrow(it, want, _COALESCE_ROWS, kinds_t, arrow_schema, tf),
         spark_schema,
     )
 

@@ -60,21 +60,6 @@ def cosine_topk(
     )
 
 
-def _bucket_udf(planes: np.ndarray):
-    bc_planes = planes
-
-    @pandas_udf(T.IntegerType())
-    def _udf(vec: pd.Series) -> pd.Series:
-        m = np.stack(vec.to_numpy())  # (n, dim) float32
-        signs = (m.astype(np.float64) @ bc_planes.T) > 0  # (n, n_planes)
-        out = np.zeros(len(vec), dtype=np.int32)
-        for b in range(bc_planes.shape[0]):
-            out |= signs[:, b].astype(np.int32) << b
-        return pd.Series(out)
-
-    return _udf
-
-
 def _band_planes(bands: int, n_planes: int, dim: int, seed: int, extra: int = 0) -> np.ndarray:
     """(bands, n_planes + extra, dim) independent hyperplane sets. The
     trailing ``extra`` planes per band are RESERVE bits used only to

@@ -30,7 +30,6 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..spatial import covering, geometry, hexgrid, s2
-from ..spatial.s2_expr import with_s2_cell
 
 
 def s2_cell_udf(level: int = 13):
@@ -68,10 +67,10 @@ def with_cells(
 ) -> DataFrame:
     """Add ``s2_cell`` (level ``s2_level``) and ``hex_cell`` (res ``hex_res``).
 
-    Both via batched numpy pandas UDFs — measured ~20x faster than the
-    equivalent higher-order-function SQL expression (s2_expr.py), which
-    Spark interprets per row; the expression form exists for the DuckDB
-    oracle and produces bit-identical cells (validated on 200k points).
+    Both via batched numpy pandas UDFs — measured ~20x faster than a
+    Spark higher-order-function SQL expression, which Spark interprets
+    per row; the DuckDB oracle's expression form (s2_expr.py) produces
+    bit-identical cells.
     The s2 UDF is marked nondeterministic solely to stop Catalyst from
     evaluating it twice (once for the join-key null filter, once for the
     projection).
@@ -92,16 +91,13 @@ _COVER_SCHEMA = (
 
 
 def polygon_covering_df(
-    polygons: DataFrame,
-    levels: tuple[int, ...] = covering.DEFAULT_LEVELS,
-    max_cells: int = 8192,
-    cells_per_vertex: float | None = None,
+    polygons: DataFrame, levels: tuple[int, ...] = covering.DEFAULT_LEVELS
 ) -> DataFrame:
     """Distributed adaptive covering: one numpy BFS per polygon inside
-    mapInPandas (coarse interior cells + fine boundary cells — see
+    mapInArrow (coarse interior cells + fine boundary cells — see
     spatial/covering.py). The polygon layer never has to fit the driver;
-    only the resulting covering (bounded by max_cells per polygon) is
-    broadcast by the PIP join."""
+    only the resulting covering (bounded by the per-polygon cell budget)
+    is broadcast by the PIP join."""
 
     multi = "rings" in polygons.columns
     geom_col = "rings" if multi else "ring"
@@ -128,7 +124,7 @@ def polygon_covering_df(
                     np.array([[p["lat"], p["lon"]] for p in r], dtype=np.float64)
                     for r in rings_raw
                 ]
-                ids, lvls, inner = covering.polygon_covering(rings, levels, max_cells, cells_per_vertex)
+                ids, lvls, inner = covering.polygon_covering(rings, levels)
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array([pid] * len(ids), pa.string()),
@@ -195,21 +191,19 @@ flatten(transform(rings, r ->
 def build_polygon_index(
     spark: SparkSession, polygons: DataFrame, level: int | None = 13,
     keep_polygon_cols: tuple[str, ...] = ("category",),
-    levels: tuple[int, ...] | None = None,
-    max_cells: int = 8192,
-    cells_per_vertex: float | None = None,
 ) -> PolygonIndex:
     """``level=None`` → data-driven: the ladder runs to AUTO_LEVELS and
-    each polygon's finest level is picked from its own vertex count
-    (covering.pick_finest_level) — city-scale polygons stay at coarse
-    boundary cells (their ray-cast refine is nearly free), vertex-heavy
-    rings earn the fine ladder. Results are level-independent; this is
-    purely the perf knob round 3 measured being mis-set by hand."""
+    each polygon descends one rung at a time while its covering, cut at
+    the next rung, still fits the cell budget (covering.polygon_covering)
+    — small polygons earn level-16 boundary cells, large or long-edged
+    ones stop coarser and keep coarse interior rungs. Results are
+    level-independent; this is purely the perf knob round 3 measured
+    being mis-set by hand."""
     if level is None:
-        levels = levels or covering.AUTO_LEVELS
+        levels = covering.AUTO_LEVELS
     else:
-        levels = levels or tuple(lv for lv in covering.DEFAULT_LEVELS if lv < level) + (level,)
-    cover_df = polygon_covering_df(polygons, levels, max_cells, cells_per_vertex).cache()
+        levels = tuple(lv for lv in covering.DEFAULT_LEVELS if lv < level) + (level,)
+    cover_df = polygon_covering_df(polygons, levels).cache()
     edges_expr = _RINGS_EDGES_EXPR if "rings" in polygons.columns else _EDGES_EXPR
     edges_df = polygons.select("polygon_id", F.expr(edges_expr).alias("_edges")).cache()
     attrs_df = (
@@ -241,10 +235,7 @@ def point_in_polygon_join(
     ``level`` is the PREFILTER cell level — results are identical at any
     level ≥ the index's finest covering level; finer levels trade more
     covering cells for fewer false-positive candidates (the right trade
-    for boundary-dominated city-scale polygons). If ``points`` already
-    carries an ``s2_cell`` column it MUST be at this level (the
-    ancestor bit-math asserts level ordering but cannot detect a
-    mismatched precomputed column).
+    for boundary-dominated city-scale polygons).
     """
     spark: SparkSession = points.sparkSession
     if isinstance(polygons, PolygonIndex):
@@ -271,9 +262,7 @@ def point_in_polygon_join(
         """
     )
 
-    pts = points
-    if "s2_cell" not in pts.columns:
-        pts = pts.withColumn("s2_cell", s2_cell_udf(level)(F.col(lat_col), F.col(lon_col)))
+    pts = points.withColumn("_pip_cell", s2_cell_udf(level)(F.col(lat_col), F.col(lon_col)))
     # multi-level prefilter in ONE broadcast hash join + ONE scan of the
     # fact side: each point explodes to its ancestor id at every covering
     # level present (<= 3 bit-math longs; ids are level-unique), and the
@@ -284,13 +273,13 @@ def point_in_polygon_join(
     # polygon's points).
     anc = F.array(
         *[
-            F.expr(covering.ancestor_at_level_expr("s2_cell", level, lv))
+            F.expr(covering.ancestor_at_level_expr("_pip_cell", level, lv))
             for lv in index.levels
         ]
     )
     cand = pts.withColumn("_anc", F.explode(anc)).join(
         F.broadcast(cover_df), F.col("_anc") == F.col("cover_cell")
-    ).drop("_anc", "cover_cell", "cover_level")
+    ).drop("_pip_cell", "_anc", "cover_cell", "cover_level")
     # single pipeline (a union of interior/boundary branches would
     # re-scan the fact side once per branch): every candidate probes the
     # broadcast edge table, and `interior OR raycast` short-circuits in

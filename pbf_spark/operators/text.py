@@ -32,12 +32,6 @@ def tokens_col(text: str | Column = "text") -> Column:
     return F.split(F.trim(F.lower(c)), TOKEN_SPLIT)
 
 
-def token_count(text: str | Column = "text") -> Column:
-    """Whitespace token count (BPE-ish subword estimate = chars/4 is a
-    separate column in token_stats)."""
-    return F.size(tokens_col(text))
-
-
 def _stopword_hits(tokens: Column, words: tuple[str, ...]) -> Column:
     wl = ", ".join(f"'{w}'" for w in words)
     return F.expr(f"size(filter(_tokens, t -> t in ({wl})))")

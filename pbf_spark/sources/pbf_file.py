@@ -71,7 +71,7 @@ def load_header(path: str | Path) -> Header:
         return parse_header_block(unpack_blob(f.read(ln)))
 
 
-def read_blob_table(spark: SparkSession, path: str | Path, partitions: int | None = None) -> DataFrame:
+def read_blob_table(spark: SparkSession, path: str | Path) -> DataFrame:
     """Blob DataFrame (blob_seq, blob_type, codec, raw_size, payload).
 
     The index pass runs driver-side; payload fetch happens task-side via
@@ -82,7 +82,7 @@ def read_blob_table(spark: SparkSession, path: str | Path, partitions: int | Non
 
     path = str(Path(path).resolve())
     idx = [row for row in index_blobs(path) if row[1] == "OSMData"]
-    n_parts = partitions or min(len(idx), spark.sparkContext.defaultParallelism * 2) or 1
+    n_parts = min(len(idx), spark.sparkContext.defaultParallelism * 2) or 1
     index_df = spark.createDataFrame(
         pd.DataFrame(idx, columns=["blob_seq", "blob_type", "offset", "length"])
     ).repartition(n_parts)

@@ -5,7 +5,7 @@ O(bbox_area / cell_area) and driver-side — with a multi-level BFS that
 emits COARSE cells for the polygon interior and fine cells only along
 the boundary, so a country-sized polygon covers in thousands of cells
 instead of millions, and the whole computation is per-polygon numpy that
-runs distributed inside ``applyInPandas`` (operators/spatial.py); only
+runs distributed inside ``mapInArrow`` (operators/spatial.py); only
 the resulting covering (small) is broadcast.
 
 Cell classification is conservative on purpose (correct superset):
@@ -20,14 +20,20 @@ Cell classification is conservative on purpose (correct superset):
   corners are strictly inside and no ring vertex / edge bbox touches the
   cell bbox — then every point of the cell is inside the ring, so the
   PIP refine can skip the ray cast for its points;
-- everything else is BOUNDARY: subdivided until the finest level, then
+- everything else is BOUNDARY: subdivided while the budget allows, then
   emitted with ``interior=false`` (ray-cast refine applies).
 
 Emission levels are restricted to a small fixed ladder (default
 7/10/13) so the point-side prefilter join stays a handful of broadcast
-equi-joins on bit-math ancestor keys — never a range join. The finest
-level is chosen per polygon from a cell budget (perimeter estimate), the
-same bounded-size guarantee S2RegionCoverer's max_cells gives.
+equi-joins on bit-math ancestor keys — never a range join. One budget
+rule picks how deep each polygon goes, the bounded-size guarantee
+S2RegionCoverer's max_cells gives: descend to the next rung only if the
+covering cut there (interior cells emitted so far plus every
+non-disjoint cell of that rung) still fits ``max_cells``; otherwise emit
+the current rung's boundary cells and stop. If the coarsest rung alone
+exceeds the budget, the descent re-seeds two levels coarser (never below
+level 3). The covering is a cut of the descent, so no cell has an
+ancestor in the same covering and no point can match a polygon twice.
 """
 
 from __future__ import annotations
@@ -38,9 +44,8 @@ from . import geometry, s2
 
 DEFAULT_LEVELS: tuple[int, ...] = (7, 10, 13)
 # data-driven ladder: extends one rung finer than DEFAULT_LEVELS so
-# small-perimeter polygons can earn level-16 boundary cells while the
-# coarse rungs keep country-scale interiors cheap; pick_finest_level's
-# perimeter budget decides per polygon
+# small polygons can earn level-16 boundary cells while the coarse rungs
+# keep country-scale interiors cheap; the cell budget decides per polygon
 AUTO_LEVELS: tuple[int, ...] = (7, 10, 13, 16)
 
 
@@ -121,86 +126,18 @@ def _as_rings(rings) -> list[np.ndarray]:
     return [np.asarray(r, dtype=np.float64) for r in rings]
 
 
-def pick_finest_level(
-    rings, levels=DEFAULT_LEVELS, max_cells: int = 8192, cells_per_vertex: float | None = None
-) -> int:
-    """Finest ladder level whose boundary-cell estimate fits the budget.
+def _seed_cells(rings: list[np.ndarray], level: int):
+    """(face, i, j) of every ``level`` cell the polygon's bbox touches.
 
-    Default rule: the PERIMETER budget — finest level whose boundary-cell
-    estimate fits ``max_cells``. Measured on interleaved convergence-
-    gated runs (BASELINE.md, "PIP prefilter level"):
-    with a dense point cloud, candidate over-fetch (∝ perimeter ×
-    cell_size × point_density) dominates the broadcast cost of a finer
-    covering, so small city polygons WANT level 16 (2.56 s vs 3.28 s at
-    13 on the 192-polygon bench workload), while a country-scale ring
-    correctly lands at 10 with coarse interior rungs (2.6 s; forcing its
-    ladder fine + budget-coarsening it is a 23 s catastrophe).
-
-    ``cells_per_vertex`` optionally scales the budget with vertex count
-    (min(max_cells, max(64, cpv * n_vertices))) for sparse point clouds
-    where refine cost dominates over-fetch; the sweep measured it WORSE
-    on dense clouds (mixed per-polygon coarseness starves hot polygons),
-    so it is opt-in. Results are level-independent either way (covering
-    is always a superset prefilter); this knob is purely a perf trade.
-    """
-    perim_deg = 0.0
-    n_vertices = 0
-    for r in _as_rings(rings):
-        rr = r[:-1] if (r.shape[0] > 1 and (r[0] == r[-1]).all()) else r
-        n_vertices += int(rr.shape[0])
-        perim_deg += float(np.abs(np.diff(rr, axis=0, append=rr[:1])).sum())
-    budget = max_cells
-    if cells_per_vertex is not None:
-        budget = min(max_cells, max(64.0, cells_per_vertex * n_vertices))
-    for lv in sorted(levels, reverse=True):
-        cell_deg = 90.0 / (1 << lv) * 1.6
-        if 3.0 * perim_deg / max(cell_deg, 1e-12) <= budget:
-            return lv
-    return min(levels)
-
-
-def _ancestor_ids(ids: np.ndarray, to_level: int) -> np.ndarray:
-    lsb = np.int64(1 << (2 * (s2.MAX_LEVEL - to_level)))
-    return (ids & np.int64(-(2 * lsb))) | lsb
-
-
-def polygon_covering(
-    rings, levels=DEFAULT_LEVELS, max_cells: int = 8192, cells_per_vertex: float | None = None
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """→ (cell_id, level, interior) arrays covering a polygon.
-
-    ``rings``: a single (m,2) (lat,lon) array, or a list of rings —
-    outer ring first, holes after (even-odd semantics throughout).
-
-    Guarantee: every finest-level cell containing an interior point of
-    the polygon is a descendant-or-self of some returned cell (valid join
-    prefilter superset). ``interior=true`` cells lie entirely inside
-    (outside every hole). Overflow beyond ``max_cells`` is re-emitted at
-    coarser ladder levels, so the covering respects the budget whenever
-    the coarsest ladder level can express it.
-    """
-    rings = _as_rings(rings)
-    # corner-bbox inflation is curvature-derived per level (_cells_bbox),
-    # so coarse ladders classify correctly too; level >= 3 keeps the
-    # lat/lon-box geometry away from pole/antimeridian pathologies
-    if min(levels) < 3:
-        # not an assert: must survive `python -O` — a sub-3 ladder makes
-        # the lat/lon-box classification unsound near poles/antimeridian
-        raise ValueError(f"covering ladder must start at level >= 3, got {sorted(levels)}")
-    finest = pick_finest_level(rings, levels, max_cells, cells_per_vertex)
-    ladder = sorted(lv for lv in levels if lv <= finest)
-    edges = geometry.EdgeIndex(rings)
-
-    # seeds: half-cell-spaced samples of the bbox over ALL rings at the
-    # coarsest level (a multipolygon can carry several disjoint outer
-    # rings — the first ring's bbox alone would miss the others). The
-    # lon step must not exceed half the narrowest cell lon-extent
-    # anywhere in the bbox; lon-extent ~ size/cos(lat) is smallest where
-    # cos(lat) is LARGEST, so scale by the max cosine over the bbox (1.0
-    # if it spans the equator), not the mid-latitude.
+    Half-cell-spaced samples of the bbox over ALL rings (a multipolygon
+    can carry several disjoint outer rings — the first ring's bbox alone
+    would miss the others). The lon step must not exceed half the
+    narrowest cell lon-extent anywhere in the bbox; lon-extent ~
+    size/cos(lat) is smallest where cos(lat) is LARGEST, so scale by the
+    max cosine over the bbox (1.0 if it spans the equator), not the
+    mid-latitude."""
     lat_min, lat_max, lon_min, lon_max = geometry.ring_bbox(np.concatenate(rings))
-    l0 = ladder[0]
-    step = 90.0 / (1 << l0) / 2.0
+    step = 90.0 / (1 << level) / 2.0
     if lat_min <= 0.0 <= lat_max:
         cos_max = 1.0
     else:
@@ -210,68 +147,72 @@ def polygon_covering(
     glat, glon = np.meshgrid(lats, lons, indexing="ij")
     x, y, z = geometry.latlon_to_unit_xyz(glat.ravel(), glon.ravel())
     face, u, v = s2._xyz_to_face_uv(x, y, z)
-    fi = s2._st_to_ij(s2._uv_to_st(u), l0)
-    fj = s2._st_to_ij(s2._uv_to_st(v), l0)
+    fi = s2._st_to_ij(s2._uv_to_st(u), level)
+    fj = s2._st_to_ij(s2._uv_to_st(v), level)
     seeds = np.unique(np.stack([face, fi, fj], axis=1), axis=0)
-    face, fi, fj = seeds[:, 0], seeds[:, 1], seeds[:, 2]
+    return seeds[:, 0], seeds[:, 1], seeds[:, 2]
+
+
+def polygon_covering(
+    rings, levels=DEFAULT_LEVELS, max_cells: int = 8192
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """→ (cell_id, level, interior) arrays covering a polygon.
+
+    ``rings``: a single (m,2) (lat,lon) array, or a list of rings —
+    outer ring first, holes after (even-odd semantics throughout).
+
+    Guarantee: every finest-level cell containing an interior point of
+    the polygon is a descendant-or-self of some returned cell (valid join
+    prefilter superset). ``interior=true`` cells lie entirely inside
+    (outside every hole). The covering is a cut of the breadth-first
+    descent, so no returned cell has an ancestor among the others, and
+    it holds at most ``max_cells`` cells unless even level 3 cannot.
+    """
+    rings = _as_rings(rings)
+    # corner-bbox inflation is curvature-derived per level (_cells_bbox),
+    # so coarse ladders classify correctly too; level >= 3 keeps the
+    # lat/lon-box geometry away from pole/antimeridian pathologies
+    if min(levels) < 3:
+        # not an assert: must survive `python -O` — a sub-3 ladder makes
+        # the lat/lon-box classification unsound near poles/antimeridian
+        raise ValueError(f"covering ladder must start at level >= 3, got {sorted(levels)}")
+    edges = geometry.EdgeIndex(rings)
+    ladder = sorted(levels)
+    # the coarsest rung alone over budget: re-seed two levels coarser
+    while True:
+        face, fi, fj = _seed_cells(rings, ladder[0])
+        disjoint, interior = _classify(edges, *_cells_bbox(face, fi, fj, ladder[0]))
+        if (~disjoint).sum() <= max_cells or ladder[0] == 3:
+            break
+        ladder.insert(0, max(ladder[0] - 2, 3))
 
     out_ids, out_lvl, out_int = [], [], []
+
+    def emit(mask, lv, flag):
+        if mask.any():
+            out_ids.append(s2.face_ij_to_cell_id(face[mask], fi[mask], fj[mask], lv))
+            out_lvl.append(np.full(mask.sum(), lv, dtype=np.int32))
+            out_int.append(np.full(mask.sum(), flag, dtype=bool))
+
+    n_interior = 0
     for idx, lv in enumerate(ladder):
-        if face.size == 0:
-            break
-        disjoint, interior = _classify(edges, *_cells_bbox(face, fi, fj, lv))
-        last = lv == ladder[-1]
-        emit_int = interior & ~disjoint
-        emit_bnd = (~interior & ~disjoint) if last else np.zeros_like(disjoint)
-        for mask, flag in ((emit_int, True), (emit_bnd, False)):
-            if mask.any():
-                out_ids.append(s2.face_ij_to_cell_id(face[mask], fi[mask], fj[mask], lv))
-                out_lvl.append(np.full(mask.sum(), lv, dtype=np.int32))
-                out_int.append(np.full(mask.sum(), flag, dtype=bool))
-        if not last:
-            sub = ~disjoint & ~interior
-            face, fi, fj = _children(face[sub], fi[sub], fj[sub], ladder[idx + 1] - lv)
+        emit(interior, lv, True)
+        n_interior += int(interior.sum())
+        boundary = ~disjoint & ~interior
+        if idx + 1 < len(ladder) and boundary.any():
+            # descend only if the covering cut at the next rung (interior
+            # so far + every non-disjoint child) still fits the budget
+            nxt = ladder[idx + 1]
+            cf, ci, cj = _children(face[boundary], fi[boundary], fj[boundary], nxt - lv)
+            c_disjoint, c_interior = _classify(edges, *_cells_bbox(cf, ci, cj, nxt))
+            if n_interior + int((~c_disjoint).sum()) <= max_cells:
+                face, fi, fj, disjoint, interior = cf, ci, cj, c_disjoint, c_interior
+                continue
+        emit(boundary, lv, False)
+        break
     if not out_ids:
         return np.empty(0, np.int64), np.empty(0, np.int32), np.empty(0, bool)
-    ids = np.concatenate(out_ids)
-    lvl = np.concatenate(out_lvl)
-    inn = np.concatenate(out_int)
-
-    # enforce the budget post-hoc: pick_finest_level's perimeter estimate
-    # can undershoot at continent scale. Coarsen the finest level present
-    # into the next coarser level (the next ladder level when one exists,
-    # else two levels up — ancestor bit math is valid at ANY level; the
-    # 5%-inflation heuristic only constrains classification, which the
-    # coarsened boundary cells no longer rely on). Boundary cells first,
-    # interiors only if still over budget.
-    while ids.size > max_cells:
-        fine = int(lvl.max())
-        if fine == 0:
-            break
-        below = lvl[lvl < fine]
-        coarse = int(below.max()) if below.size else max(fine - 2, 0)
-        at_fine = lvl == fine
-        keep = ~at_fine
-        bnd = at_fine & ~inn
-        itr = at_fine & inn
-        anc = np.unique(_ancestor_ids(ids[bnd], coarse))
-        if keep.sum() + itr.sum() + anc.size > max_cells and itr.any():
-            anc = np.unique(np.concatenate([anc, _ancestor_ids(ids[itr], coarse)]))
-            itr = np.zeros_like(itr)
-        # de-dup vs cells already at the target level (interiors stay
-        # interior only if no coarsened ancestor swallows them)
-        at_coarse = lvl == coarse
-        if at_coarse.any():
-            dup = np.isin(ids[at_coarse], anc)
-            if dup.any():
-                drop = np.zeros_like(keep)
-                drop[np.nonzero(at_coarse)[0][dup]] = True
-                keep &= ~drop
-                itr &= ~drop
-        ids = np.concatenate([ids[keep | itr], anc])
-        lvl = np.concatenate([lvl[keep | itr], np.full(anc.size, coarse, np.int32)])
-        inn = np.concatenate([inn[keep | itr], np.zeros(anc.size, bool)])
-    return ids, lvl, inn
+    return np.concatenate(out_ids), np.concatenate(out_lvl), np.concatenate(out_int)
 
 
 def ancestor_at_level_expr(cell_col: str, from_level: int, to_level: int) -> str:

@@ -110,11 +110,6 @@ class EdgeIndex:
     def _bin(self, lat: np.ndarray) -> np.ndarray:
         return np.clip(((lat - self._g0) / self._h).astype(np.int64), 0, self.bins - 1)
 
-    def perimeter_l1_deg(self) -> float:
-        return float(
-            (np.abs(self.y2 - self.y1) + np.abs(self.x2 - self.x1)).sum()
-        )
-
     def inside(self, lat: np.ndarray, lon: np.ndarray) -> np.ndarray:
         """Even-odd ray cast over all rings' edges (half-open rule,
         identical arithmetic to points_in_ring)."""

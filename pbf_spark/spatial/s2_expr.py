@@ -1,38 +1,26 @@
 """S2 cell ids as pure SQL expressions — no Python in the hot path.
 
 Same published algorithm as s2.py (cube face → quadratic st → Hilbert
-fold), expressed as column arithmetic so cell assignment runs inside
-Spark's JVM (and, in the DuckDB dialect, inside the driver's oracle —
-making cell-keyed queries *exactly* cross-checkable).
+fold), expressed as column arithmetic in the DuckDB dialect so the
+DuckDB oracle computes cell ids itself — making cell-keyed queries
+*exactly* cross-checkable against the engine's numpy UDF.
 
 The Hilbert loop is a fold over the level bits with the (pos,
 orientation) state packed into one BIGINT (state = pos*4 + ori), using
-``aggregate`` (Spark) / ``list_reduce`` (DuckDB) — higher-order
-functions give the let-binding that keeps the expression tree linear in
-the level instead of exponential.
+``list_reduce`` — the higher-order function gives the let-binding that
+keeps the expression tree linear in the level instead of exponential.
 
-Intermediate columns (face/u/v/i/j) are materialized as real projection
-steps (``with_s2_cell``) so the trig subexpressions evaluate once.
+Intermediate columns (face/u/v/i/j) are materialized as layered
+subqueries so the trig subexpressions evaluate once.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .s2 import MAX_LEVEL
 
 # flattened lookup tables (s2.py _IJ_TO_POS / _POS_TO_ORIENTATION)
 _IJ2POS = [0, 1, 3, 2, 0, 3, 1, 2, 2, 3, 1, 0, 2, 1, 3, 0]
 _POS2ORI = [1, 0, 0, 3]
-
-
-def _xyz_exprs(lat: str, lon: str) -> dict[str, str]:
-    return {
-        "_x": f"cos(radians({lat})) * cos(radians({lon}))",
-        "_y": f"cos(radians({lat})) * sin(radians({lon}))",
-        "_z": f"sin(radians({lat}))",
-    }
 
 
 _FACE_EXPR = """
@@ -61,52 +49,6 @@ def _st_expr(uv: str) -> str:
         f"CASE WHEN {uv} >= 0 THEN 0.5 * sqrt(1.0 + 3.0 * abs({uv})) "
         f"ELSE 1.0 - 0.5 * sqrt(1.0 + 3.0 * abs({uv})) END"
     )
-
-
-def _ij_expr(st: str, level: int) -> str:
-    n = 1 << level
-    return f"CAST(least(greatest(floor({st} * {n}.0), 0.0), {n - 1}.0) AS BIGINT)"
-
-
-def _fold_spark(level: int) -> str:
-    ij2pos = f"array({', '.join(map(str, _IJ2POS))})"
-    pos2ori = f"array({', '.join(map(str, _POS2ORI))})"
-    shift = 2 * (MAX_LEVEL - level) + 1
-    lsb = 1 << (shift - 1)
-    # state = pos*4 + ori; p recomputed once per use (cheap int ops)
-    p = (
-        f"element_at({ij2pos}, CAST((acc % 4) * 4 + "
-        f"(shiftright(_i, k) % 2) * 2 + (shiftright(_j, k) % 2) + 1 AS INT))"
-    )
-    # NB: parens around the xor — Spark gives ^ lower precedence than +
-    merge = (
-        f"(acc, k) -> CAST((shiftright(acc, 2) * 4 + {p}) * 4 + "
-        f"((acc % 4) ^ element_at({pos2ori}, CAST({p} + 1 AS INT))) AS BIGINT)"
-    )
-    return (
-        f"shiftleft(CAST(_face AS BIGINT), 61) + "
-        f"shiftleft(shiftright(aggregate(sequence({level - 1}, 0, -1), "
-        f"CAST(_face % 2 AS BIGINT), {merge}), 2), {shift}) + {lsb}"
-    )
-
-
-def with_s2_cell(
-    df: DataFrame, lat_col: str = "lat", lon_col: str = "lon", level: int = 13, out: str = "s2_cell"
-) -> DataFrame:
-    """Add an S2 cell column computed entirely JVM-side."""
-    steps = _xyz_exprs(lat_col, lon_col)
-    out_df = df
-    for name, e in steps.items():
-        out_df = out_df.withColumn(name, F.expr(e))
-    out_df = (
-        out_df.withColumn("_face", F.expr(_FACE_EXPR))
-        .withColumn("_u", F.expr(_U_EXPR))
-        .withColumn("_v", F.expr(_V_EXPR))
-        .withColumn("_i", F.expr(_ij_expr(_st_expr("_u"), level)))
-        .withColumn("_j", F.expr(_ij_expr(_st_expr("_v"), level)))
-        .withColumn(out, F.expr(_fold_spark(level)))
-    )
-    return out_df.drop("_x", "_y", "_z", "_face", "_u", "_v", "_i", "_j")
 
 
 def s2_cell_sql_duckdb(lat: str, lon: str, level: int, out: str = "s2_cell") -> str:

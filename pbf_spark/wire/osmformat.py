@@ -45,7 +45,6 @@ NODE, WAY, RELATION = 0, 1, 2
 MEMBER_TYPE_NAMES = np.array(["node", "way", "relation"], dtype=object)
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
-_EMPTY_I32 = np.empty(0, dtype=np.int32)
 
 
 def _to_i64(u: np.ndarray) -> np.ndarray:
@@ -597,10 +596,6 @@ def _decode_ways_arr(
     if spans[4][0].size:
         soa.info = _decode_info_batch_spans(b, *spans[4], n=n, date_granularity=date_granularity)
     return soa
-
-
-def _decode_relations(bufs: list[memoryview], date_granularity: int) -> EntitySoA:
-    return _decode_relations_arr(*_concat_bufs(bufs), date_granularity)
 
 
 def _decode_relations_arr(

@@ -122,11 +122,3 @@ def encode_varint(value: int) -> bytes:
         else:
             out.append(byte)
             return bytes(out)
-
-
-def zigzag_encode_int(v: int) -> int:
-    return ((v << 1) ^ (v >> 63)) & 0xFFFFFFFFFFFFFFFF
-
-
-def zigzag_decode_int(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)

@@ -4,13 +4,21 @@ Per FIXTURES.md §3: expected outputs come from O(n·m) exhaustive oracles
 computed in the test, never from the engine under test.
 """
 
+from pathlib import Path
+
 import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
+from __spark_entry__ import SF0001
+from pbf_spark import queries as Q
 from pbf_spark.operators import decode, knn, spatial, tiles
 from pbf_spark.sources import iceberg_lite
 from pbf_spark.spatial import geometry
+from pbf_spark.util import small_df
+
+# the sf0.01 tables sit next to the sf0.001 ones
+SF001 = str(Path(SF0001).with_name("sf0.01"))
 
 
 @pytest.fixture(scope="module")
@@ -78,6 +86,45 @@ def test_pip_join_auto_level_identical_results(spark, fixture_dir, nodes):
         .select("polygon_id", "id")
     )
     assert auto.exceptAll(manual).isEmpty() and manual.exceptAll(auto).isEmpty()
+
+
+@pytest.fixture(scope="module")
+def star_case(spark):
+    """sf0.01 event points, the declared star polygon, and the ids of
+    the points inside it by brute-force ray cast."""
+    pts = Q.event_points(spark, SF001).cache()
+    pdf = pts.toPandas()
+    inside = geometry.points_in_ring(
+        pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), np.array(Q.POLYGON)
+    )
+    star = small_df(
+        spark,
+        [("star", [{"lat": la, "lon": lo} for la, lo in Q.POLYGON], "test")],
+        "polygon_id string, ring array<struct<lat:double,lon:double>>, category string",
+    )
+    yield pts, star, sorted(pdf["id"].to_numpy()[inside].tolist())
+    pts.unpersist()
+
+
+def test_pip_join_auto_level_star_no_duplicate_rows(spark, star_case):
+    """Data-driven covering of the star polygon: each inside point joins
+    exactly once (a covering cell nested under another covering cell
+    would emit its points twice)."""
+    pts, star, expected = star_case
+    index = spatial.build_polygon_index(spark, star, level=None)
+    got = [r["id"] for r in spatial.point_in_polygon_join(pts, index, level=None).select("id").collect()]
+    assert sorted(got) == expected
+    assert len(expected) > 1000  # sanity: the star holds many points
+
+
+def test_pip_join_ignores_callers_s2_cell_column(star_case):
+    """A caller's ``s2_cell`` column at another level must not be taken
+    as the join's prefilter cell."""
+    pts, star, expected = star_case
+    coarse = spatial.with_cells(pts, s2_level=10)
+    got = spatial.point_in_polygon_join(coarse, star, level=13, keep_polygon_cols=())
+    assert sorted(r["id"] for r in got.select("id").collect()) == expected
+    assert "s2_cell" in got.columns and "_pip_cell" not in got.columns
 
 
 def test_pip_join_holes_matches_exhaustive_oracle(spark, nodes, nodes_np):

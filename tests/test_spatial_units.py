@@ -179,28 +179,78 @@ def test_adaptive_covering_superset_and_interior_exactness():
     assert not (int_match & ~inside).any()
 
 
-def test_pick_finest_level_perimeter_budget():
-    """Data-driven finest level (perimeter budget, the measured winner —
-    BASELINE.md "PIP prefilter level"): a small city polygon earns the
-    level-16 rung of the AUTO ladder (its boundary estimate fits the
-    budget and over-fetch dominates broadcast cost on dense point
-    clouds), while a country-scale ring lands at a coarse finest level
-    and keeps coarse interior rungs. The opt-in vertex-scaled budget
-    (cells_per_vertex) picks coarser for few-vertex polygons."""
-    from pbf_spark.spatial import covering
-
-    city = np.array(
-        [(51.36, -0.30), (51.45, -0.22), (51.60, -0.33), (51.52, -0.15),
-         (51.63, 0.05), (51.50, 0.02), (51.42, 0.16), (51.44, -0.05)]
-    )
-    assert covering.pick_finest_level(city, covering.AUTO_LEVELS) == 16
+def _country_ring():
     th = np.linspace(0, 2 * np.pi, 400, endpoint=False)
     r = 5.0 + 1.5 * np.sin(5 * th) + 0.8 * np.cos(11 * th)
-    country = np.stack(
-        [48 + r * np.sin(th), 10 + r * np.cos(th) / np.cos(np.radians(48))], axis=1
+    return np.stack([48 + r * np.sin(th), 10 + r * np.cos(th) / np.cos(np.radians(48))], axis=1)
+
+
+def _continent_ring():
+    th = np.linspace(0, 2 * np.pi, 2000, endpoint=False)
+    r = 25.0 + 6.0 * np.sin(9 * th) + 3.0 * np.cos(17 * th)
+    return np.stack([20 + r * np.sin(th) * 0.8, r * np.cos(th)], axis=1)
+
+
+def _coastline_ring():
+    rng = np.random.default_rng(12)
+    th = np.linspace(0, 2 * np.pi, 100_000, endpoint=False)
+    r = 4.0 + 0.8 * np.sin(7 * th) + 0.02 * np.cumsum(rng.normal(size=th.size)) / np.sqrt(th.size)
+    return np.stack([47 + r * np.sin(th), 8 + r * np.cos(th)], axis=1)
+
+
+def test_covering_budget_picks_finest_rung():
+    """The cell budget decides how deep each polygon goes: a small
+    polygon whose level-16 covering fits earns the level-16 rung of the
+    AUTO ladder, the declared star polygon (42k cells at level 16) stops
+    at 13, and a country-scale ring stops coarse with coarse interior
+    rungs above its boundary level."""
+    from pbf_spark import queries as Q
+    from pbf_spark.spatial import covering
+
+    small = np.array(
+        [(51.500, -0.130), (51.504, -0.122), (51.510, -0.128), (51.506, -0.136)]
     )
-    assert covering.pick_finest_level(country, covering.AUTO_LEVELS) <= 13
-    assert covering.pick_finest_level(city, covering.AUTO_LEVELS, cells_per_vertex=8.0) <= 13
+    _, lvl, _ = covering.polygon_covering(small, covering.AUTO_LEVELS)
+    assert lvl.max() == 16
+    _, lvl, _ = covering.polygon_covering(np.array(Q.POLYGON), covering.AUTO_LEVELS)
+    assert lvl.max() == 13
+    _, lvl, _ = covering.polygon_covering(_country_ring(), covering.AUTO_LEVELS)
+    assert lvl.max() <= 13
+    assert len(set(lvl.tolist())) >= 2
+
+
+def _cells_with_ancestor_in(ids: np.ndarray, lvl: np.ndarray) -> int:
+    """How many covering cells have an ancestor in the same covering."""
+    n = 0
+    for fine in set(lvl.tolist()):
+        for coarse in set(lvl.tolist()):
+            if coarse < fine:
+                anc = s2.parent_cell_id(ids[lvl == fine], fine, coarse)
+                n += int(np.isin(anc, ids[lvl == coarse]).sum())
+    return n
+
+
+def test_covering_is_a_cut_no_cell_has_an_ancestor():
+    """The covering is a cut of the descent: no cell has an ancestor in
+    the same covering, so a point matches each polygon through at most
+    one cell (a nested pair makes the PIP join emit the point twice)."""
+    from pbf_spark import queries as Q
+    from pbf_spark.spatial import covering
+
+    star, outer2, hole = (np.array(r) for r in (Q.POLYGON, Q.POLYGON_OUTER2, Q.POLYGON_HOLE))
+    for rings in ([star], [star, hole], [star, outer2, hole]):
+        ids, lvl, _ = covering.polygon_covering(rings, covering.AUTO_LEVELS)
+        assert _cells_with_ancestor_in(ids, lvl) == 0
+    cases = [
+        covering.polygon_covering(_country_ring()),
+        covering.polygon_covering(_continent_ring(), max_cells=8192),
+        covering.polygon_covering(_continent_ring(), max_cells=2048),
+        covering.polygon_covering(_coastline_ring()),
+    ]
+    for ids, lvl, _ in cases:
+        assert ids.size > 0
+        assert np.unique(ids).size == ids.size
+        assert _cells_with_ancestor_in(ids, lvl) == 0
 
 
 def test_adaptive_covering_country_scale_bounded():

@@ -1,11 +1,12 @@
-"""Repo-local imports of the scripts under tools/ and the repo root
-resolve: every module they import exists, and every name they take from
-a repo-local module is still defined there.
+"""Repo-local imports of the scripts under tools/, perfbench/ and the
+repo root resolve: every module they import exists, every name they
+take from a repo-local module is still defined there, and every keyword
+they pass to a repo-local function is still a parameter of it.
 
 The scripts are not imported (several start Spark or parse argv at
-import time); their source is parsed instead, so deleting a module or
-function a surviving script still uses fails here rather than at the
-script's next run.
+import time); their source is parsed instead, so deleting a module,
+function or keyword a surviving script still uses fails here rather
+than at the script's next run.
 """
 
 from __future__ import annotations
@@ -17,7 +18,11 @@ from pathlib import Path
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
-SCRIPTS = sorted(REPO.glob("*.py")) + sorted((REPO / "tools").glob("*.py"))
+SCRIPTS = (
+    sorted(REPO.glob("*.py"))
+    + sorted((REPO / "tools").glob("*.py"))
+    + sorted((REPO / "perfbench").glob("*.py"))
+)
 
 
 def _module_path(dotted: str, roots: list[Path]) -> Path | None:
@@ -62,6 +67,17 @@ def _top_level_names(path: Path) -> set[str] | None:
     return None if "__getattr__" in names else names
 
 
+def _keywords(mod_path: Path, name: str) -> set[str] | None:
+    """Keywords the module-level function ``name`` accepts (None: not a
+    plain function there, or it takes ``**kwargs``)."""
+    for st in ast.parse(mod_path.read_text()).body:
+        if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)) and st.name == name:
+            if st.args.kwarg is not None:
+                return None
+            return {a.arg for a in st.args.args + st.args.kwonlyargs}
+    return None
+
+
 def _has_name(mod_path: Path, dotted: str, name: str, roots: list[Path]) -> bool:
     names = _top_level_names(mod_path)
     if names is None or name in names:
@@ -76,6 +92,7 @@ def _problems(script: Path) -> list[str]:
     tree = ast.parse(script.read_text())
     out = []
     local_aliases: dict[str, tuple[Path, str]] = {}
+    local_funcs: dict[str, tuple[Path, str]] = {}
 
     def resolve(dotted: str, line: int) -> Path | None:
         path = _module_path(dotted, roots)
@@ -96,8 +113,13 @@ def _problems(script: Path) -> list[str]:
             if path is None:
                 continue
             for a in node.names:
-                if a.name != "*" and not _has_name(path, node.module, a.name, roots):
+                sub = _module_path(f"{node.module}.{a.name}", roots)
+                if sub is not None:
+                    local_aliases[a.asname or a.name] = (sub, f"{node.module}.{a.name}")
+                elif a.name != "*" and not _has_name(path, node.module, a.name, roots):
                     out.append(f"line {node.lineno}: {node.module!r} has no {a.name!r}")
+                else:
+                    local_funcs[a.asname or a.name] = (path, a.name)
     # attribute uses of an imported repo-local module: ``bench.best_of``
     for node in ast.walk(tree):
         if (
@@ -108,6 +130,24 @@ def _problems(script: Path) -> list[str]:
             path, dotted = local_aliases[node.value.id]
             if not _has_name(path, dotted, node.attr, roots):
                 out.append(f"line {node.lineno}: {dotted!r} has no {node.attr!r}")
+    # keywords passed to a repo-local function: ``spatial.f(level=...)``
+    # or ``f(level=...)`` after ``from mod import f``
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Name) and f.id in local_funcs:
+            path, name = local_funcs[f.id]
+        elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name) and f.value.id in local_aliases:
+            path, name = local_aliases[f.value.id][0], f.attr
+        else:
+            continue
+        accepted = _keywords(path, name)
+        if accepted is None:
+            continue
+        for kw in node.keywords:
+            if kw.arg is not None and kw.arg not in accepted:
+                out.append(f"line {node.lineno}: {name}() takes no keyword {kw.arg!r}")
     return out
 
 
