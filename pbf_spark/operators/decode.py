@@ -319,7 +319,6 @@ def _decode_map_arrow(
 
 def decode_blobs(
     blob_df: DataFrame,
-    partitions: int | None = None,
     columns: frozenset[str] | set[str] | None = None,
     kinds: tuple[str, ...] | None = None,
     slim: bool = False,
@@ -331,8 +330,7 @@ def decode_blobs(
     Input columns required: codec, raw_size, payload; optional: doc_id,
     span_idx, blob_seq, blob_type. Each blob decodes independently
     (PrimitiveBlock independence, public osmformat spec), so this is a
-    narrow transformation — no shuffle unless ``partitions`` forces a
-    rebalance of skewed blob files.
+    narrow transformation — no shuffle.
 
     ``columns``: mapInArrow is opaque to Catalyst, so column pruning is
     pushed into the UDF explicitly — pass the expensive nested columns
@@ -356,8 +354,6 @@ def decode_blobs(
     geometry — decode nodes in a separate ``kinds=("node",)`` pass (or
     use LocationsOnWays files) when geometry is needed.
     """
-    if partitions:
-        blob_df = blob_df.repartition(partitions)
     want = frozenset(columns) if columns is not None else None
     kinds_t = tuple(kinds) if kinds is not None else _ALL_KINDS
     spark_schema, arrow_schema = ENTITY_SCHEMA, ENTITY_ARROW_SCHEMA
@@ -418,9 +414,9 @@ def decode_documents(
         # simply having enough input files) makes this a no-op — pass
         # partitions=0 to skip.
         partitions = joined.sparkSession.sparkContext.defaultParallelism * 2
-    return decode_blobs(
-        joined, partitions or None, columns, kinds=kinds, slim=slim, tag_filter=tag_filter
-    )
+    if partitions:
+        joined = joined.repartition(partitions)
+    return decode_blobs(joined, columns, kinds=kinds, slim=slim, tag_filter=tag_filter)
 
 
 def count_by_type(entities: DataFrame) -> DataFrame:

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..util import checkpoint_and_release
 from .text import TOKEN_SPLIT, tokens_col
 
 
@@ -99,29 +100,6 @@ def jaccard_pairs(
     return F.round(inter / F.greatest(union, F.lit(1)), 6).alias(as_name)
 
 
-# Persisted intermediates of the PREVIOUS minhash_lsh_pairs invocation.
-# persist() is the fast reuse mechanism for the frames consumed by
-# several join branches within ONE invocation (localCheckpoint measured
-# ~2x slower here: it bypasses AQE and the columnar cache), but the
-# CacheManager matches plans ACROSS invocations — a re-run (bench
-# warmup + timed repeats) would silently reuse the previous run's
-# signatures instead of recomputing from the inputs. Unpersisting the
-# prior invocation's frames at construction time guarantees every
-# invocation computes fresh while keeping intra-invocation reuse.
-_PREV_PERSISTS: list[DataFrame] = []
-
-
-def _drop_prev_persists() -> None:
-    """Must run BEFORE the new invocation's persist() calls: persisting
-    a plan identical to a still-cached one keeps the OLD entry, so
-    dropping the old one afterwards would leave the new frame uncached."""
-    while _PREV_PERSISTS:
-        try:
-            _PREV_PERSISTS.pop().unpersist()
-        except Exception:
-            pass  # session may be gone; nothing to free
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -155,9 +133,13 @@ def minhash_lsh_pairs(
     per fingerprint) and run LSH on the representatives; ``max_bucket``
     exists for the other degenerate case (near-identical boilerplate
     that a refinement hash CAN split).
+
+    Storage lifetime: the frames the pair plan reuses are persisted for
+    this call only — the pairs land in a localCheckpoint the returned
+    frame owns and the persists are released before returning
+    (util.checkpoint_and_release), so a repeated call recomputes.
     """
     rows_per_band = n_hashes // bands
-    _drop_prev_persists()
     sig = minhash_signature(df, id_col, text_col, n_hashes, shingle_n)
     band_cols = [
         F.concat_ws("|", *[F.col(f"mh_{b * rows_per_band + r}") for r in range(rows_per_band)]).alias(
@@ -170,8 +152,7 @@ def minhash_lsh_pairs(
     # the census when max_bucket is set) — without it the whole
     # tokenize→shingle→md5 signature pipeline executes once per consumer
     # (exchange reuse does NOT cover it: with AQE the join sides compile
-    # as independent stages). Cross-invocation reuse is prevented by
-    # _rotate_persists below.
+    # as independent stages)
     stacked = banded.select(
         F.col(id_col),
         F.explode(
@@ -228,14 +209,13 @@ def minhash_lsh_pairs(
     sh = df.withColumn("_t", tokens_col(text_col)).select(
         F.col(id_col), F.array_distinct(shingles_col(text_col, shingle_n)).alias("_sh")
     ).persist()
-    _PREV_PERSISTS.extend((stacked, sh))
     verified = (
         cand.join(sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a")), "id_a")
         .join(sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b")), "id_b")
         .select("id_a", "id_b", jaccard_pairs(F.col("_sh_a"), F.col("_sh_b")))
         .where(F.col("jaccard") >= threshold)
     )
-    return verified
+    return checkpoint_and_release(verified, stacked, sh)
 
 
 def near_dup_clusters(

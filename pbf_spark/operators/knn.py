@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..spatial import hexgrid
+from ..util import checkpoint_and_release
 from .spatial import hex_cell_udf
 
 DIST_M = "dist_m"
@@ -201,10 +202,7 @@ def knn_join(
     out = results[0]
     for r in results[1:]:
         out = out.unionByName(r)
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()
-    return out
+    return checkpoint_and_release(out, *cached)
 
 
 def range_join(

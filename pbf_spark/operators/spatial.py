@@ -9,14 +9,17 @@ Filter-refine spatial join, the classic distributed pattern:
 2. candidate pairs by ancestor-cell equality: points explode to their
    (≤3) ancestor ids — pure bit math — and hash-join the covering once;
 3. exact even-odd ray-cast refinement as a pure Catalyst expression
-   (whole-stage codegen over the broadcast edge arrays — candidate rows
-   never cross into Python); candidates from strictly-interior covering
-   cells skip the refine entirely (provably inside).
+   over the broadcast edge arrays (interpreted: ``aggregate`` is a
+   higher-order function, outside whole-stage codegen — but candidate
+   rows never cross into Python); candidates from strictly-interior
+   covering cells skip the refine entirely (provably inside).
 
 At 100 TB the point side never moves: the only wide op is the final
 aggregation the caller adds. Cell assignment itself is one numpy pass
 per Arrow batch inside a pandas UDF; the polygon index (covering cells +
-edges + attrs) is built once and reusable across batches (PolygonIndex).
+edges + attrs) is built once into checkpoints the index object owns —
+never the plan-keyed SQL cache — and is reusable across batches
+(PolygonIndex).
 """
 
 from __future__ import annotations
@@ -141,9 +144,12 @@ def polygon_covering_df(
 class PolygonIndex:
     """Reusable broadcast polygon index: multi-level covering + edge
     arrays + pass-through attributes, all built DISTRIBUTED (no
-    polygon collect; the layer can exceed driver memory) and cached —
-    reused across any number of point batches, exactly how a
-    streaming/batched pipeline amortizes the dimension side at scale."""
+    polygon collect; the layer can exceed driver memory) into
+    localCheckpoints the index owns — reused across any number of point
+    batches, exactly how a streaming/batched pipeline amortizes the
+    dimension side at scale. The storage lives as long as this object
+    (and the joins built from it); it is not in the plan-keyed SQL
+    cache, so a later build over the same polygons recomputes."""
 
     def __init__(self, cover_df: DataFrame, edges_df: DataFrame, attrs_df: DataFrame | None, levels: list[int]):
         self.cover_df = cover_df
@@ -203,19 +209,17 @@ def build_polygon_index(
         levels = covering.AUTO_LEVELS
     else:
         levels = tuple(lv for lv in covering.DEFAULT_LEVELS if lv < level) + (level,)
-    cover_df = polygon_covering_df(polygons, levels).cache()
+    cover_df = polygon_covering_df(polygons, levels).localCheckpoint()
     edges_expr = _RINGS_EDGES_EXPR if "rings" in polygons.columns else _EDGES_EXPR
-    edges_df = polygons.select("polygon_id", F.expr(edges_expr).alias("_edges")).cache()
+    edges_df = polygons.select("polygon_id", F.expr(edges_expr).alias("_edges")).localCheckpoint()
     attrs_df = (
-        polygons.select("polygon_id", *keep_polygon_cols).cache() if keep_polygon_cols else None
+        polygons.select("polygon_id", *keep_polygon_cols).localCheckpoint()
+        if keep_polygon_cols
+        else None
     )
-    # materialize: the index is rebuilt otherwise on every join
     present = sorted(
         r[0] for r in cover_df.select("cover_level").distinct().collect()
     )
-    edges_df.count()
-    if attrs_df is not None:
-        attrs_df.count()
     return PolygonIndex(cover_df, edges_df, attrs_df, present)
 
 
@@ -248,7 +252,7 @@ def point_in_polygon_join(
         level = max(index.levels)
     cover_df = index.cover_df
 
-    # refine stays JVM-side: the even-odd ray cast is a whole-stage-codegen
+    # refine stays JVM-side: the even-odd ray cast is an (interpreted)
     # aggregate over the polygon's (broadcast) edge array — candidate rows
     # never cross into Python (same arithmetic as geometry.points_in_ring
     # and the SQL oracle: half-open rule, strict <)
@@ -282,8 +286,8 @@ def point_in_polygon_join(
     ).drop("_pip_cell", "_anc", "cover_cell", "cover_level")
     # single pipeline (a union of interior/boundary branches would
     # re-scan the fact side once per branch): every candidate probes the
-    # broadcast edge table, and `interior OR raycast` short-circuits in
-    # codegen so interior-cell rows never evaluate the edge aggregate
+    # broadcast edge table, and `interior OR raycast` short-circuits so
+    # interior-cell rows never evaluate the edge aggregate
     result = (
         cand.join(F.broadcast(edges_df), "polygon_id")
         .where(F.col("interior") | inside)

@@ -15,6 +15,8 @@ compute bit-identical doubles.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1166,27 +1168,34 @@ def bbox_pruned_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned read path — directory pruning at plan time, z-range parquet
     pushdown at scan time, exact lat/lon refine last. The oracle is the
     plain bbox filter; identical rows prove the pruning lost nothing.
-    The scratch table lives under a session-scoped tmpfs dir and is
-    OVERWRITTEN on every call (the table must outlive the call — the
-    returned DataFrame still scans it — but the leak is bounded to one
-    copy per session instead of one per invocation)."""
+
+    The Z-order table is the call's scratch: it goes to a fresh
+    directory under the session's storage root (spark.sql.warehouse.dir
+    — tmpfs locally via session.py, shared storage on a cluster), the
+    result is computed into a checkpoint the returned frame owns
+    (util.checkpoint_and_release), and the directory is deleted before
+    returning, so concurrent calls never share a path."""
     from .operators import cluster as cl
+    from .util import checkpoint_and_release
 
     pts = event_points(spark, sf_dir)
-    app_id = spark.sparkContext.applicationId
-    path = f"/dev/shm/pbf-spark-scratch/{app_id}/zorder_pts"
-    cl.write_clustered(pts, path, zoom=16, prefix_zoom=11, target_partitions=8)
-    got = cl.read_bbox(
-        spark,
-        path,
-        lat_min=51.40,
-        lat_max=51.55,
-        lon_min=-0.25,
-        lon_max=0.05,
-        zoom=16,
-        prefix_zoom=11,
-    )
-    return got.select("id").orderBy("id")
+    path = f"{spark.conf.get('spark.sql.warehouse.dir')}/zorder_pts-{uuid.uuid4().hex}"
+    try:
+        cl.write_clustered(pts, path, zoom=16, prefix_zoom=11, target_partitions=8)
+        got = cl.read_bbox(
+            spark,
+            path,
+            lat_min=51.40,
+            lat_max=51.55,
+            lon_min=-0.25,
+            lon_max=0.05,
+            zoom=16,
+            prefix_zoom=11,
+        )
+        return checkpoint_and_release(got.select("id").orderBy("id"))
+    finally:
+        jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
 
 
 BBOX_PRUNED_SQL = f"""

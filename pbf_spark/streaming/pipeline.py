@@ -34,7 +34,6 @@ def stream_decode_documents(
     checkpoint_dir: str | Path,
     lineage_dir: str | Path | None = None,
     run_id: str = "stream",
-    partitions: int | None = None,
     max_files_per_trigger: int | None = None,
     tag_filter=None,
 ):
@@ -58,9 +57,7 @@ def stream_decode_documents(
     docs_stream = reader.parquet(str(Path(docs_table_dir) / "data"))
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        entities = decode_documents(
-            batch_df, media_blobs, partitions=partitions, tag_filter=tag_filter
-        )
+        entities = decode_documents(batch_df, media_blobs, tag_filter=tag_filter)
         entities.persist()
         try:
             entities.write.mode("append").parquet(str(output_dir))

@@ -18,6 +18,21 @@ def small_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     return spark.createDataFrame(sc.parallelize(rows, numSlices=1), schema)
 
 
+def checkpoint_and_release(df: DataFrame, *scratch: DataFrame) -> DataFrame:
+    """Compute ``df`` into a ``localCheckpoint`` the returned frame owns,
+    then unpersist the ``scratch`` frames the computation reused.
+
+    The lifetime rule for operator storage: it belongs to the call or to
+    the object the call returns, never to the plan-keyed SQL cache
+    across calls (a later call with the same plan would reuse it instead
+    of recomputing from its inputs). A localCheckpoint has no plan key.
+    """
+    out = df.localCheckpoint(eager=True)
+    for s in scratch:
+        s.unpersist()
+    return out
+
+
 def release_checkpoint(df: DataFrame) -> None:
     """Free the cached RDD behind a ``localCheckpoint``ed DataFrame.
 

@@ -28,8 +28,19 @@ def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+def _drop_tables(spark, *names: str) -> None:
+    """Drop managed tables and any leftover directories under the
+    session's warehouse root (a killed run can leave the files behind)."""
+    import shutil
+    from urllib.parse import urlparse
+
+    root = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+        shutil.rmtree(f"{root}/{name}", ignore_errors=True)
+
+
 def test_bucketed_media_join_is_shuffle_free(spark, fixture_dir, tmp_path_factory):
-    # warehouse dir is static session config (session.py → /dev/shm)
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
     docs = iceberg_lite.read_table(spark, fixture_dir / "documents_interleaved")
@@ -37,11 +48,7 @@ def test_bucketed_media_join_is_shuffle_free(spark, fixture_dir, tmp_path_factor
         "media_ref", "blob_seq"
     )
 
-    import shutil
-
-    for name in ("b_docs", "b_blobs"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"/dev/shm/pbf-spark-warehouse/{name}", ignore_errors=True)
+    _drop_tables(spark, "b_docs", "b_blobs")
     # spans pre-exploded so the bucketed fact table carries the join key
     spans = (
         docs.select("doc_id", F.posexplode("spans").alias("span_idx", "span"))
@@ -91,11 +98,7 @@ def test_bucketed_way_assembly_join_is_shuffle_free(spark):
         F.expr("sequence(id * 6 % 2995, id * 6 % 2995 + 5)").alias("refs"),
     )
 
-    import shutil
-
-    for name in ("b_refs", "b_nodes"):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"/dev/shm/pbf-spark-warehouse/{name}", ignore_errors=True)
+    _drop_tables(spark, "b_refs", "b_nodes")
     refs = ways.select(F.col("id").alias("way_id"), F.posexplode("refs").alias("pos", "ref"))
     refs.write.bucketBy(8, "ref").sortBy("ref").mode("overwrite").saveAsTable("b_refs")
     nodes.write.bucketBy(8, "id").sortBy("id").mode("overwrite").saveAsTable("b_nodes")

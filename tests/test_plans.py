@@ -3,6 +3,8 @@ on must not silently regress (pushdown reaching the scan, broadcast
 joins on dimension sides, partial aggregation, no cartesian products).
 """
 
+import re
+
 import pytest
 
 from pbf_spark import queries as Q
@@ -31,13 +33,18 @@ def test_q3_broadcasts_dimension_joins(spark):
 
 def test_pip_join_plan_shape(spark):
     """One fact-side scan, broadcast joins only, no cartesian/range join,
-    whole-stage codegen over the refine expression."""
-    plan = plan_of(Q.pip_events(spark, SF))
+    the cell prefilter join inside whole-stage codegen."""
+    df = Q.pip_events(spark, SF)
+    plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     # one scan = one tree node + one detail section in formatted mode
     assert plan.count("Scan parquet") == 2  # events scanned exactly once
-    assert "codegen id" in plan  # refine runs inside whole-stage codegen
+    # AQE inserts codegen stages as it executes, so only the final plan
+    # shows them. The ray-cast join condition is interpreted (aggregate()
+    # is a CodegenFallback higher-order function); the prefilter is not
+    df.collect()
+    assert re.search(r"BroadcastHashJoin \[codegen id : \d+\]", plan_of(df))
 
 
 def test_pip_multipolygon_same_shape(spark):
@@ -52,8 +59,22 @@ def test_dedup_exact_partial_agg(spark):
     assert "hashpartitioning(fingerprint" in plan
 
 
-def test_lsh_pairs_no_cartesian(spark):
-    plan = plan_of(Q.lsh_near_dup_pairs(spark, SF))
+def test_lsh_pairs_no_cartesian(spark, monkeypatch):
+    """minhash_lsh_pairs returns a checkpoint scan, so the lazy pair
+    plan it materializes is captured on its way into the checkpoint."""
+    from pbf_spark.operators import dedup
+
+    plans = []
+    materialize = dedup.checkpoint_and_release
+
+    def capture(df, *scratch):
+        plans.append(plan_of(df))
+        return materialize(df, *scratch)
+
+    monkeypatch.setattr(dedup, "checkpoint_and_release", capture)
+    Q.lsh_near_dup_pairs(spark, SF).collect()
+    (plan,) = plans
+    assert "Left keys [2]: [band#" in plan  # the bucket self-join itself
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
