@@ -6,6 +6,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Python workers fork from this daemon (see pbf_spark/worker_daemon.py);
+# every SparkSession the repo builds passes it
+WORKER_DAEMON_CONF = ("spark.python.daemon.module", "pbf_spark.worker_daemon")
+
 
 def get_spark(
     app_name: str = "pbf_spark",
@@ -25,6 +29,13 @@ def get_spark(
       bytes — the big setting is safe there too.
     - shuffle partitions sized to cores locally (cluster deployments
       override via spark-submit conf; AQE coalesces the excess)
+    - Python workers fork from ``pbf_spark.worker_daemon``: stock
+      workers re-read the zip directories of ~16 importers (over
+      ``pyspark.zip``, the spark-core jar and py4j) on every task,
+      ~220 ms per task before the UDF body runs; the daemon re-reads an
+      archive only when it changed on disk. The daemon starts before any
+      task ships ``--py-files``, so ``pbf_spark`` must be importable from
+      the workers' PYTHONPATH or working directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -58,6 +69,7 @@ def get_spark(
         # idle CPU); shuffle/spill through tmpfs — a cluster's local SSDs
         # play this role in production
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/pbf-spark-local"))
+        .config(*WORKER_DAEMON_CONF)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

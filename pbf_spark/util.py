@@ -9,10 +9,12 @@ def small_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     """Create a small DataFrame without the slow Python-RDD fan-out.
 
     ``spark.createDataFrame(list, schema)`` parallelizes across
-    defaultParallelism slices — 32 Python worker round-trips for a
-    handful of rows (measured ~30 s for 2k rows in this env). Routing
-    through one slice keeps it a single task; for flat schemas prefer
-    ``spark.createDataFrame(pandas.DataFrame(...))`` (Arrow path).
+    defaultParallelism slices, one Python task each. Routing through one
+    slice keeps it a single task: for 2k ``(long, double, double)`` rows
+    at local[4] (4 vCPUs, ``get_spark`` defaults), ``count()`` took
+    median ~300 ms via ``createDataFrame`` and ~200 ms here. For flat
+    schemas prefer ``spark.createDataFrame(pandas.DataFrame(...))``
+    (Arrow path).
     """
     sc = spark.sparkContext
     return spark.createDataFrame(sc.parallelize(rows, numSlices=1), schema)

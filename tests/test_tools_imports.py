@@ -7,6 +7,9 @@ The scripts are not imported (several start Spark or parse argv at
 import time); their source is parsed instead, so deleting a module,
 function or keyword a surviving script still uses fails here rather
 than at the script's next run.
+
+Every ``SparkSession.builder`` outside ``pbf_spark/session.py`` passes
+the shared worker-daemon setting ``session.WORKER_DAEMON_CONF``.
 """
 
 from __future__ import annotations
@@ -154,3 +157,64 @@ def _problems(script: Path) -> list[str]:
 @pytest.mark.parametrize("script", SCRIPTS, ids=lambda p: str(p.relative_to(REPO)))
 def test_repo_local_imports_resolve(script):
     assert _problems(script) == []
+
+
+def _is_builder(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == "builder"
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "SparkSession"
+    )
+
+
+def _passes_daemon_conf(call: ast.Call) -> bool:
+    """``.config(*WORKER_DAEMON_CONF)`` or ``.config(*session.WORKER_DAEMON_CONF)``."""
+    return (
+        isinstance(call.func, ast.Attribute)
+        and call.func.attr == "config"
+        and any(
+            isinstance(a, ast.Starred)
+            and getattr(a.value, "id", getattr(a.value, "attr", None)) == "WORKER_DAEMON_CONF"
+            for a in call.args
+        )
+    )
+
+
+def _builders_without_daemon_conf(source: str) -> list[int]:
+    """Lines of the ``SparkSession.builder`` chains in ``source`` that
+    never call ``.config(*WORKER_DAEMON_CONF)``."""
+    tree = ast.parse(source)
+    passed = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and _passes_daemon_conf(node):
+            root = node.func
+            while not _is_builder(root) and isinstance(root, (ast.Attribute, ast.Call)):
+                root = root.value if isinstance(root, ast.Attribute) else root.func
+            passed.add(root)
+    return sorted(n.lineno for n in ast.walk(tree) if _is_builder(n) and n not in passed)
+
+
+BUILDER_FILES = [
+    p
+    for p in SCRIPTS + sorted((REPO / "pbf_spark").rglob("*.py")) + sorted((REPO / "tests").glob("*.py"))
+    if p != REPO / "pbf_spark" / "session.py"
+]
+
+
+@pytest.mark.parametrize("path", BUILDER_FILES, ids=lambda p: str(p.relative_to(REPO)))
+def test_spark_builders_use_worker_daemon(path):
+    """A session built outside ``get_spark`` still runs its Python
+    workers under ``pbf_spark.worker_daemon``, taking the setting from
+    ``pbf_spark.session`` rather than a copy of the string."""
+    assert _builders_without_daemon_conf(path.read_text()) == []
+
+
+def test_builder_check_flags_a_missing_daemon_conf():
+    src = (
+        "a = SparkSession.builder.config(*WORKER_DAEMON_CONF).getOrCreate()\n"
+        "b = SparkSession.builder.config('spark.python.daemon.module', 'x').getOrCreate()\n"
+        "c = SparkSession.builder.master('local').getOrCreate()\n"
+        "d = SparkSession.builder.master('local').config(*session.WORKER_DAEMON_CONF).getOrCreate()\n"
+    )
+    assert _builders_without_daemon_conf(src) == [2, 3]

@@ -53,6 +53,9 @@ def run_size(k: int, cores: int, window: float, fixture_dir: str, zpath: Path, t
     barrier.mkdir(exist_ok=True)
     outs = [tmp / f"worker_k{k}_{i}.json" for i in range(k)]
     procs = []
+    # the Python worker daemon (pbf_spark.worker_daemon) starts before any
+    # task ships --py-files, so it imports the zip from the JVM's PYTHONPATH
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(filter(None, [str(zpath), os.environ.get("PYTHONPATH")]))}
     for i in range(k):
         # cpuset pinning = the executor-container contract: every worker
         # (JVM + its Python workers + GC/IO threads) lives on a DISJOINT
@@ -69,7 +72,7 @@ def run_size(k: int, cores: int, window: float, fixture_dir: str, zpath: Path, t
             fixture_dir, str(outs[i]), str(barrier), str(i), str(k), str(window),
         ]
         procs.append(
-            subprocess.Popen(cmd, cwd=tmp, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+            subprocess.Popen(cmd, cwd=tmp, env=env, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
         )
 
     # coordinator: release each phase barrier once every worker is ready.

@@ -68,6 +68,8 @@ def main(fixture_dir: str, out_json: str, barrier_dir: str, worker_id: int, n_wo
     tracker = CpuTracker(os.getppid())
     cpu_fn = tracker.total
 
+    from pbf_spark.session import WORKER_DAEMON_CONF
+
     spark = (
         SparkSession.builder.appName(f"pbf_spark-scaling-w{worker_id}")
         .config("spark.sql.adaptive.enabled", "true")
@@ -81,6 +83,7 @@ def main(fixture_dir: str, out_json: str, barrier_dir: str, worker_id: int, n_wo
         .config("spark.sql.warehouse.dir", f"/dev/shm/pbf-spark-scaling-wh-w{worker_id}")
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "524288")
+        .config(*WORKER_DAEMON_CONF)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
