@@ -8,7 +8,8 @@ Training-data-pipeline dedup at 100 TB scale:
   identical construction runs in the DuckDB oracle) → band buckets →
   candidate pairs by bucket equi-join → exact Jaccard verify. The only
   wide ops are the bucket join and the pair dedup; signatures are pure
-  column expressions (codegen, no UDF).
+  column expressions (no UDF; their ``transform`` lambdas are
+  ``CodegenFallback``s, interpreted inside the codegen stage).
 - **SimHash**: 64-bit majority-vote hash over token xxhash64 bits;
   near-dups = equal simhash (or banded hamming buckets).
 - **n-gram Jaccard**: exact verify used inside LSH, exposed standalone

@@ -1,11 +1,17 @@
 """kNN join via hex k-ring expansion (SURVEY.md §2B B6).
 
-Per query point: expand hexgrid k-rings (res 9 by default) until ≥ k
-candidates are found *and* the kth candidate's exact haversine distance
-is provably inside the covered disc; refine with exact distance; rank by
-the mandated deterministic total order ``(distance, id)``. Queries that
-still miss after ``max_rounds`` fall back to an exact brute-force pass
+Per query point: expand hexgrid k-rings (res 9) until ≥ k candidates
+are found *and* the kth candidate's exact haversine distance is provably
+inside the covered disc; refine with exact distance; rank by the
+mandated deterministic total order ``(distance, id)``. Queries that
+still miss after three rounds fall back to an exact brute-force pass
 (rare; keeps the operator total).
+
+Python runs only where the hexgrid math does: the cell of each point
+and the query's ring cells (pandas UDFs). The distance refine is the
+Catalyst ``geometry.haversine_sql`` expression — evaluated in the JVM
+inside the join's codegen stage (range_join's filter folds into the
+prefilter join condition), never a Python stage per candidate.
 
 Scale shape: candidate generation is ring-cells × points equi-join on the
 cell — the point side is shuffled once per round on cell (or broadcast
@@ -23,10 +29,14 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..spatial import hexgrid
+from ..spatial.geometry import haversine_sql
 from ..util import checkpoint_and_release
 from .spatial import hex_cell_udf
 
 DIST_M = "dist_m"
+RES = 9  # knn_join's hex resolution
+MAX_ROUNDS = 3  # ring-doubling rounds before the brute-force fallback
+_DIST = haversine_sql("_q_lat", "_q_lon", "_p_lat", "_p_lon")
 
 
 def _ring_cells_udf(res: int, k: int):
@@ -68,34 +78,15 @@ def _ring_cells_udf(res: int, k: int):
     return _udf
 
 
-@pandas_udf(T.DoubleType())
-def haversine_udf(
-    lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series
-) -> pd.Series:
-    from ..spatial.geometry import haversine_m
-
-    return pd.Series(
-        haversine_m(
-            lat1.to_numpy(np.float64),
-            lon1.to_numpy(np.float64),
-            lat2.to_numpy(np.float64),
-            lon2.to_numpy(np.float64),
-        )
-    )
-
-
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
     k: int,
-    res: int = 9,
-    id_col: str = "id",
-    max_rounds: int = 3,
     start_ring: int = 2,
 ) -> DataFrame:
-    """→ (query_id, {id_col}, dist_m, rank) with rank 1..k per query.
+    """→ (query_id, id, dist_m, rank) with rank 1..k per query.
 
-    ``points`` needs (id_col, lat, lon); ``queries`` needs
+    ``points`` needs (id, lat, lon); ``queries`` needs
     (query_id, lat, lon). Deterministic: ties broken by entity id.
 
     The result is localCheckpointed and the operator's internal caches
@@ -105,15 +96,15 @@ def knn_join(
 
     Scale note: each expansion round issues one driver action
     (``remaining.isEmpty()``) to decide whether to widen the ring, so
-    the driver round-trips are bounded by ``max_rounds`` (default 3,
-    plus one brute-force fallback job for stragglers) — constant in the
-    data size; only the per-round candidate join scales with the data.
+    the driver round-trips are bounded by ``MAX_ROUNDS`` (plus one
+    brute-force fallback job for stragglers) — constant in the data
+    size; only the per-round candidate join scales with the data.
     """
     pts = points.select(
-        F.col(id_col).alias("_p_id"),
+        F.col("id").alias("_p_id"),
         F.col("lat").alias("_p_lat"),
         F.col("lon").alias("_p_lon"),
-    ).withColumn("_p_cell", hex_cell_udf(res)(F.col("_p_lat"), F.col("_p_lon")))
+    ).withColumn("_p_cell", hex_cell_udf(RES)(F.col("_p_lat"), F.col("_p_lon")))
     pts = pts.cache()
     cached = [pts]
 
@@ -125,7 +116,7 @@ def knn_join(
     # exchange of the fact table per action
     remaining = queries.select(
         "query_id", F.col("lat").alias("_q_lat"), F.col("lon").alias("_q_lon")
-    ).withColumn("_q_cell", hex_cell_udf(res)(F.col("_q_lat"), F.col("_q_lon"))).cache()
+    ).withColumn("_q_cell", hex_cell_udf(RES)(F.col("_q_lat"), F.col("_q_lon"))).cache()
     cached.append(remaining)
 
     # guaranteed covered disc radius around any point of the query cell
@@ -136,25 +127,20 @@ def knn_join(
     # cover r × min-width in plane units from any point of the center
     # cell; the 2-circumradius subtraction bounds the in-cell offset
     # (plane ≥ geo for the subtracted term, also conservative).
-    nominal_width = hexgrid.hex_edge_m(res) * float(np.sqrt(3.0))
+    nominal_width = hexgrid.hex_edge_m(RES) * float(np.sqrt(3.0))
 
     def covered_m(r: int) -> float:
-        return max(0.0, r * 0.6 * nominal_width - 2 * hexgrid.hex_edge_m(res))
+        return max(0.0, r * 0.6 * nominal_width - 2 * hexgrid.hex_edge_m(RES))
 
     results = []
     ring = start_ring
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         cand = (
-            remaining.withColumn("_cells", _ring_cells_udf(res, ring)(F.col("_q_cell")))
+            remaining.withColumn("_cells", _ring_cells_udf(RES, ring)(F.col("_q_cell")))
             .withColumn("_cell", F.explode("_cells"))
             .drop("_cells")
             .join(pts, F.col("_cell") == F.col("_p_cell"))
-            .withColumn(
-                DIST_M,
-                haversine_udf(
-                    F.col("_q_lat"), F.col("_q_lon"), F.col("_p_lat"), F.col("_p_lon")
-                ),
-            )
+            .withColumn(DIST_M, F.expr(_DIST))
         )
         w = Window.partitionBy("query_id").orderBy(F.col(DIST_M).asc(), F.col("_p_id").asc())
         # cache: ≤ k rows per query, but its subtree is the round's whole
@@ -170,7 +156,7 @@ def knn_join(
         ).select("query_id")
         results.append(
             ranked.join(F.broadcast(done_ids), "query_id", "left_semi").select(
-                "query_id", F.col("_p_id").alias(id_col), DIST_M, "rank"
+                "query_id", F.col("_p_id").alias("id"), DIST_M, "rank"
             )
         )
         remaining = remaining.join(F.broadcast(done_ids), "query_id", "left_anti").cache()
@@ -182,21 +168,12 @@ def knn_join(
 
     if remaining is not None and not remaining.isEmpty():
         # exact fallback: cross join the stragglers (few) against all points
-        brute = (
-            F.broadcast(remaining)
-            .crossJoin(pts)
-            .withColumn(
-                DIST_M,
-                haversine_udf(
-                    F.col("_q_lat"), F.col("_q_lon"), F.col("_p_lat"), F.col("_p_lon")
-                ),
-            )
-        )
+        brute = F.broadcast(remaining).crossJoin(pts).withColumn(DIST_M, F.expr(_DIST))
         w = Window.partitionBy("query_id").orderBy(F.col(DIST_M).asc(), F.col("_p_id").asc())
         results.append(
             brute.withColumn("rank", F.row_number().over(w))
             .where(F.col("rank") <= k)
-            .select("query_id", F.col("_p_id").alias(id_col), DIST_M, "rank")
+            .select("query_id", F.col("_p_id").alias("id"), DIST_M, "rank")
         )
 
     out = results[0]
@@ -209,12 +186,10 @@ def range_join(
     points: DataFrame,
     queries: DataFrame,
     radius_m: float,
-    res: int | None = None,
-    id_col: str = "id",
     max_ring: int = 4,
 ) -> DataFrame:
     """Distance-within (DWithin) join: every (query_id, point) pair with
-    haversine distance ≤ ``radius_m``. → (query_id, {id_col}, dist_m).
+    haversine distance ≤ ``radius_m``. → (query_id, id, dist_m).
 
     Filter-refine with the SAME provable coverage margin as knn_join:
     the query's hex cell k-ring at radius r covers a geodesic disc of
@@ -234,16 +209,15 @@ def range_join(
         width = edge * sqrt(3.0)
         return max(1, ceil((radius_m + 2.0 * edge) / (0.6 * width)))
 
-    if res is None:
-        res = 2
-        for res_try in range(9, 1, -1):  # finest first → smallest cells that fit
-            if rings_needed(res_try) <= max_ring:
-                res = res_try
-                break
+    res = 2
+    for res_try in range(9, 1, -1):  # finest first → smallest cells that fit
+        if rings_needed(res_try) <= max_ring:
+            res = res_try
+            break
     ring = rings_needed(res)
 
     pts = points.select(
-        F.col(id_col).alias("_p_id"),
+        F.col("id").alias("_p_id"),
         F.col("lat").alias("_p_lat"),
         F.col("lon").alias("_p_lon"),
     ).withColumn("_p_cell", hex_cell_udf(res)(F.col("_p_lat"), F.col("_p_lon")))
@@ -255,10 +229,7 @@ def range_join(
         .withColumn("_cell", F.explode(F.array_distinct("_cells")))
         .drop("_cells")
         .join(pts, F.col("_cell") == F.col("_p_cell"))
-        .withColumn(
-            DIST_M,
-            haversine_udf(F.col("_q_lat"), F.col("_q_lon"), F.col("_p_lat"), F.col("_p_lon")),
-        )
+        .withColumn(DIST_M, F.expr(_DIST))
         .where(F.col(DIST_M) <= F.lit(float(radius_m)))
     )
-    return cand.select("query_id", F.col("_p_id").alias(id_col), DIST_M)
+    return cand.select("query_id", F.col("_p_id").alias("id"), DIST_M)

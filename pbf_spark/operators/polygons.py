@@ -3,8 +3,9 @@
 Consumes the same ``(polygon_id, rings)`` schema the PIP join and the
 relation assembler produce (operators/spatial.py, operators/relations.py)
 and computes, per ring, planar-projected area and centroid plus geodesic
-perimeter — entirely inside whole-stage codegen (``transform`` /
-``aggregate`` lambda expressions; no UDF, no Python).
+perimeter — entirely in Catalyst (``transform`` / ``aggregate`` lambda
+expressions; no UDF, no Python). Those higher-order functions are
+``CodegenFallback``s: they run interpreted inside their codegen stage.
 
 Projection contract (kept deliberately simple so an ANSI-SQL oracle can
 replicate it bit-for-bit): each ring is projected equirectangularly
@@ -13,7 +14,8 @@ y = R·radians(lat), R = 6371008.8 m (IUGG mean radius, the same
 constant as spatial/geometry.haversine_m) — then the shoelace formula
 gives signed area and centroid. For rings spanning ≤ a few degrees
 (admin boundaries, city polygons) this is within ~1e-4 relative of the
-geodesic area; the perimeter is true haversine. All metrics are
+geodesic area; the perimeter is true haversine
+(spatial/geometry.haversine_sql). All metrics are
 invariant to ring rotation, starting vertex, and winding direction, so
 results don't depend on stitch order (relations.py's rings carry a
 closing vertex — it is dropped before projection).
@@ -29,16 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_R = "6371008.8"
-
-# haversine between consecutive ring vertices i and (i+1) mod n — the
-# same arithmetic as ways.way_length_expr / spatial/geometry.haversine_m
-_SEG_M = (
-    "2.0 * {R} * asin(sqrt("
-    "pow(sin(radians((_pts[(i+1) % _n].lat - _pts[i].lat) / 2)), 2)"
-    " + cos(radians(_pts[i].lat)) * cos(radians(_pts[(i+1) % _n].lat))"
-    "   * pow(sin(radians((_pts[(i+1) % _n].lon - _pts[i].lon) / 2)), 2)))"
-).format(R=_R)
+from ..spatial.geometry import EARTH_RADIUS_M as R, haversine_sql
 
 
 def ring_metrics(
@@ -51,6 +44,9 @@ def ring_metrics(
     for the centroid instead of dividing by zero.
     """
     zero = "CAST(0.0 AS DOUBLE)"
+    # haversine between consecutive ring vertices i and (i+1) mod n
+    nxt = "_pts[(i+1) % _n]"
+    seg = haversine_sql("_pts[i].lat", "_pts[i].lon", f"{nxt}.lat", f"{nxt}.lon")
     return (
         polys.select(id_col, F.explode(rings_col).alias("_ring"))
         .withColumn(
@@ -66,9 +62,9 @@ def ring_metrics(
         .withColumn(
             "_phi0", F.expr(f"aggregate(_pts, {zero}, (a, p) -> a + p.lat) / _n")
         )
-        .withColumn("_k", F.expr(f"cos(radians(_phi0)) * {_R}"))
+        .withColumn("_k", F.expr(f"cos(radians(_phi0)) * {R}"))
         .withColumn("_xs", F.expr("transform(_pts, p -> radians(p.lon) * _k)"))
-        .withColumn("_ys", F.expr(f"transform(_pts, p -> radians(p.lat) * {_R})"))
+        .withColumn("_ys", F.expr(f"transform(_pts, p -> radians(p.lat) * {R})"))
         .withColumn(
             "_cr",
             F.expr(
@@ -83,7 +79,7 @@ def ring_metrics(
             F.expr("round(abs(_a2) / 2.0 / 1e6, 6)").alias("area_km2"),
             F.expr(
                 f"round(aggregate(sequence(0, _n - 1), {zero},"
-                f" (acc, i) -> acc + {_SEG_M}) / 1000.0, 6)"
+                f" (acc, i) -> acc + {seg}) / 1000.0, 6)"
             ).alias("perimeter_km"),
             F.expr(
                 "round(CASE WHEN _a2 = 0.0"
@@ -91,7 +87,7 @@ def ring_metrics(
                 " ELSE degrees((aggregate(sequence(0, _n - 1), "
                 + zero
                 + ", (a, i) -> a + (_ys[i] + _ys[(i+1) % _n]) * _cr[i])"
-                f" / (3.0 * _a2)) / {_R}) END, 6)"
+                f" / (3.0 * _a2)) / {R}) END, 6)"
             ).alias("centroid_lat"),
             F.expr(
                 "round(CASE WHEN _a2 = 0.0"

@@ -21,7 +21,8 @@ closed rings → the ``(polygon_id, rings)`` schema
    ways×nodes join is ``assemble_way_geometries`` (posexplode + one
    shuffle on node id, bucketable — ways.py), and ring concatenation
    is ``array_sort`` + indexed ``transform``/``slice``/``flatten``
-   over the per-ring way arrays (whole-stage codegen, no UDF).
+   over the per-ring way arrays (no UDF; ``transform`` is a
+   ``CodegenFallback``, interpreted inside its codegen stage).
 3. Unclosed chains (clipped extracts) are counted per relation
    (``n_unclosed_rings``) and EXCLUDED from the output rings — an
    unclosed chain would otherwise be implicitly closed by the even-odd

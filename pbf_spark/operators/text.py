@@ -1,7 +1,8 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All pure ``pyspark.sql.functions`` column expressions — JVM-side, inside
-whole-stage codegen, no Python in the hot path. Each operator has an
+All pure ``pyspark.sql.functions`` column expressions — JVM-side, no
+Python in the hot path; the stopword count's ``filter`` lambda is a
+``CodegenFallback``, interpreted inside its codegen stage. Each operator has an
 exactly-matching ANSI-SQL oracle (see __spark_entry__.oracle_sql), which
 is the correctness gate: token counting, quality scoring, language-ID
 and fingerprinting must produce byte-identical results in DuckDB.

@@ -25,6 +25,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..spatial.geometry import haversine_sql
+
 
 def assemble_way_geometries(
     ways: DataFrame,
@@ -92,19 +94,17 @@ def assemble_way_geometries_from_refs(
 
 def way_length_expr(lat_col: str = "way_lats", lon_col: str = "way_lons") -> str:
     """Geodesic polyline length (meters) over parallel coordinate
-    arrays, entirely in Catalyst (haversine per consecutive pair inside
-    one ``aggregate`` — whole-stage codegen, no UDF). Same arithmetic
-    as spatial/geometry.haversine_m (IUGG mean radius)."""
+    arrays, entirely in Catalyst: ``geometry.haversine_sql`` per
+    consecutive pair inside one ``aggregate`` — no UDF, but the
+    higher-order function is a ``CodegenFallback``, so the fold runs
+    interpreted inside its codegen stage."""
     la, lo = lat_col, lon_col
+    seg = haversine_sql(f"{la}[i]", f"{lo}[i]", f"{la}[i+1]", f"{lo}[i+1]")
     # CASE guards the size<2 case: Spark's sequence(0, -1) yields a
     # DESCENDING [0,-1], not an empty array
     return f"""
     CASE WHEN {la} IS NULL OR size({la}) < 2 THEN CAST(0.0 AS DOUBLE)
-    ELSE aggregate(sequence(0, size({la}) - 2), CAST(0.0 AS DOUBLE), (acc, i) ->
-      acc + 2.0 * 6371008.8 * asin(sqrt(
-        pow(sin(radians(({la}[i+1] - {la}[i]) / 2)), 2)
-        + cos(radians({la}[i])) * cos(radians({la}[i+1]))
-          * pow(sin(radians(({lo}[i+1] - {lo}[i]) / 2)), 2))))
+    ELSE aggregate(sequence(0, size({la}) - 2), CAST(0.0 AS DOUBLE), (acc, i) -> acc + {seg})
     END
     """
 

@@ -494,10 +494,10 @@ def _ring_metrics_sql(rings: list[list[tuple[float, float]]], pid: str) -> str:
         for ring in rings
     )
     R = "6371008.8"
-    hav = f"""2 * {R} * asin(sqrt(
-        pow(sin(radians((lats[i % n + 1] - lats[i]) / 2)), 2)
+    hav = f"""2 * {R} * asin(sqrt(least(greatest(
+        pow(sin((radians(lats[i % n + 1]) - radians(lats[i])) / 2), 2)
         + cos(radians(lats[i])) * cos(radians(lats[i % n + 1]))
-          * pow(sin(radians((lons[i % n + 1] - lons[i]) / 2)), 2)))"""
+          * pow(sin((radians(lons[i % n + 1]) - radians(lons[i])) / 2), 2), 0.0), 1.0)))"""
     return f"""
 WITH ring(polygon_id, lats, lons) AS (VALUES
   {rows}),

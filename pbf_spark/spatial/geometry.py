@@ -1,7 +1,9 @@
-"""Vectorized spherical/planar geometry primitives (numpy).
+"""Vectorized spherical/planar geometry primitives.
 
-All from public formulas (haversine; even-odd ray casting). These run
-inside Arrow-batched pandas UDFs — never per-row Python.
+All from public formulas (haversine; even-odd ray casting). The numpy
+functions run inside Arrow-batched pandas UDFs and the brute-force
+checks — never per-row Python. ``haversine_sql`` is the one Catalyst
+form of the great-circle distance the operators evaluate in the JVM.
 """
 
 from __future__ import annotations
@@ -20,6 +22,23 @@ def haversine_m(
     dl = np.radians(lon2) - np.radians(lon1)
     a = np.sin(dp / 2.0) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dl / 2.0) ** 2
     return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
+
+
+def haversine_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:
+    """Spark SQL fragment for ``haversine_m`` over four SQL expressions
+    (columns, array elements, lambda variables) in degrees; usable in
+    ``F.expr`` and inside higher-order-function lambdas.
+
+    Same term order as the numpy form — ``radians`` before the
+    difference, the same ``[0, 1]`` clip — so it agrees with numpy to a
+    few ulps (JVM vs libm ``sin``/``asin``), and the clip keeps
+    antipodal pairs finite instead of NaN."""
+    return (
+        f"2.0D * {EARTH_RADIUS_M}D * asin(sqrt(least(greatest("
+        f"pow(sin((radians({lat2}) - radians({lat1})) / 2.0D), 2)"
+        f" + cos(radians({lat1})) * cos(radians({lat2}))"
+        f" * pow(sin((radians({lon2}) - radians({lon1})) / 2.0D), 2), 0.0D), 1.0D)))"
+    )
 
 
 def latlon_to_unit_xyz(lat: np.ndarray, lon: np.ndarray):

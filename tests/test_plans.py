@@ -16,6 +16,61 @@ def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def executed_nodes(df) -> list[tuple[str, bool, set[str], set[str]]]:
+    """(node class, inside whole-stage codegen, expression classes,
+    ``CodegenFallback`` expression classes) for every node of ``df``'s
+    executed plan, through AQE query stages, reused exchanges and the
+    plans cached under in-memory scans; lambda bodies included. Run an
+    action on ``df`` first so the walk sees AQE's final plan. A
+    ``CodegenFallback`` runs interpreted even inside a ``*(n)`` stage,
+    so plan markers cannot show it."""
+    fallback = df._sc._jvm.org.apache.spark.util.Utils.classForName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback", True, False
+    )
+    out, stack = [], [(df._jdf.queryExecution().executedPlan(), False)]
+    while stack:
+        node, in_codegen = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append((node.executedPlan(), in_codegen))
+            continue
+        if name.endswith("QueryStageExec") or name.startswith("Reused"):
+            stack.append((node.plan() if name.endswith("StageExec") else node.child(), False))
+            continue
+        if name == "InMemoryTableScanExec":
+            stack.append((node.relation().cachedPlan(), False))
+        exprs, todo = [], _seq(node.expressions())
+        while todo:
+            exprs.append(todo.pop())
+            todo.extend(_seq(exprs[-1].children()))
+        classes = {e.getClass().getSimpleName() for e in exprs}
+        fbs = {e.getClass().getSimpleName() for e in exprs if fallback.isInstance(e)}
+        out.append((name, in_codegen, classes, fbs))
+        # an InputAdapter ends a codegen stage: its subtree runs outside it
+        inner = name == "WholeStageCodegenExec" or (in_codegen and name != "InputAdapter")
+        stack.extend((c, inner) for c in _seq(node.children()))
+    return out
+
+
+def codegen_fallbacks(df) -> set[str]:
+    """JVM classes of the ``CodegenFallback`` expressions ``df`` ran."""
+    df.collect()
+    return set().union(*(fbs for _, _, _, fbs in executed_nodes(df)))
+
+
+def assert_refine_in_codegen(nodes) -> None:
+    """The haversine refine (its ``Asin``) runs in a JVM codegen stage:
+    no Python eval node computes it, no ``CodegenFallback`` beside it."""
+    refine = [(n, cg, fbs) for n, cg, classes, fbs in nodes if "Asin" in classes]
+    assert refine, "no node evaluates the haversine"
+    for name, in_codegen, fbs in refine:
+        assert "EvalPython" not in name and in_codegen and not fbs, refine
+
+
 def test_q1_pushdown_and_pruning(spark):
     plan = plan_of(Q.q1_pricing_summary(spark, SF))
     # filter reaches the parquet scan; scan reads only needed columns
@@ -111,10 +166,55 @@ def test_tile_pyramid_one_pass(spark):
 
 def test_range_join_no_cross_join(spark):
     """DWithin join must be a cell equi-join + filter — never the
-    cartesian the naive formulation produces."""
-    plan = plan_of(Q.range_join_events(spark, SF))
+    cartesian the naive formulation produces — and the distance refine
+    is Catalyst codegen, not a Python stage per candidate."""
+    df = Q.range_join_events(spark, SF)
+    plan = plan_of(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert plan.count("Scan parquet") == 2  # events scanned exactly once
+    df.collect()
+    nodes = executed_nodes(df)
+    assert_refine_in_codegen(nodes)
+    # the distance filter folds into the prefilter join's condition
+    assert any(n == "BroadcastHashJoinExec" and "Asin" in c for n, _, c, _ in nodes)
+
+
+def test_knn_refine_in_codegen(spark, monkeypatch):
+    """knn_events returns a checkpoint scan, so the ranked candidate plan
+    is checked on its way into the checkpoint, after it ran."""
+    from pbf_spark.operators import knn
+
+    plans = []
+    materialize = knn.checkpoint_and_release
+
+    def capture(df, *scratch):
+        out = materialize(df, *scratch)
+        plans.append(executed_nodes(df))
+        return out
+
+    monkeypatch.setattr(knn, "checkpoint_and_release", capture)
+    Q.knn_events(spark, SF).collect()
+    (nodes,) = plans
+    assert_refine_in_codegen(nodes)
+
+
+def test_higher_order_lambdas_are_codegen_fallbacks(spark):
+    """The higher-order-function lambdas run interpreted inside their
+    codegen stage, as the ways, polygons, relations, text and dedup
+    docstrings state: way lengths and ring metrics fold with
+    ``aggregate``, ring stitching and minhash signatures use
+    ``transform``, the stopword count uses ``filter``."""
+    from pbf_spark.operators.ways import with_way_lengths
+    from pbf_spark.util import small_df
+
+    ways = with_way_lengths(
+        small_df(spark, [(1, [51.5, 51.51, 51.52], [-0.1, -0.1, -0.11])],
+                 "id long, way_lats array<double>, way_lons array<double>")
+    )
+    assert "ArrayAggregate" in codegen_fallbacks(ways)
+    assert {"ArrayAggregate", "ArrayTransform"} <= codegen_fallbacks(Q.relation_ring_metrics(spark, SF))
+    assert "ArrayTransform" in codegen_fallbacks(Q.minhash_signatures(spark, SF))
+    assert "ArrayFilter" in codegen_fallbacks(Q.doc_quality(spark, SF))
 
 
 def test_latest_events_single_window_exchange(spark):

@@ -182,6 +182,36 @@ def test_knn_matches_exhaustive_oracle(spark, fixture_dir, nodes, nodes_np):
         np.testing.assert_allclose(sub["dist_m"].to_numpy(), d[order], rtol=1e-9)
 
 
+def test_haversine_sql_matches_numpy(spark):
+    """Catalyst ``haversine_sql`` (the kNN/range refine, way lengths, ring
+    perimeters) equals numpy ``haversine_m`` within 4 ulps on city-scale
+    pairs; identical points give exactly 0.0 and antipodal points a
+    finite πR — numpy's unclipped term exceeds 1 for some of them, which
+    would make asin NaN without the [0, 1] clip."""
+    import pandas as pd
+
+    rng = np.random.default_rng(6)
+    lat1, lon1 = rng.uniform(51.28, 51.70, 20000), rng.uniform(-0.51, 0.33, 20000)
+    lat2, lon2 = lat1 + rng.uniform(-0.05, 0.05, 20000), lon1 + rng.uniform(-0.08, 0.08, 20000)
+    a_lat, a_lon = rng.uniform(-80.0, 80.0, 200), rng.uniform(-179.0, 0.0, 200)
+    pdf = pd.DataFrame({
+        "lat1": np.concatenate([lat1, lat1[:100], a_lat]),
+        "lon1": np.concatenate([lon1, lon1[:100], a_lon]),
+        "lat2": np.concatenate([lat2, lat1[:100], -a_lat]),
+        "lon2": np.concatenate([lon2, lon1[:100], a_lon + 180.0]),
+    })
+    got = spark.createDataFrame(pdf).select(F.expr(geometry.haversine_sql(*pdf.columns))).toPandas()
+    got, exp = got.iloc[:, 0].to_numpy(), geometry.haversine_m(*(pdf[c].to_numpy() for c in pdf))
+
+    assert np.abs(got[:20000].view(np.int64) - exp[:20000].view(np.int64)).max() <= 4
+    assert (got[20000:20100] == 0.0).all()
+    p1, dl = np.radians(a_lat), np.radians(a_lon + 180.0) - np.radians(a_lon)
+    assert (np.sin(-p1) ** 2 + np.cos(p1) ** 2 * np.sin(dl / 2.0) ** 2 > 1.0).any()
+    anti = got[20100:]
+    assert np.isfinite(anti).all()
+    np.testing.assert_allclose(anti, np.pi * geometry.EARTH_RADIUS_M, rtol=0, atol=1.0)
+
+
 def test_knn_exactly_k_rows_per_query(spark, fixture_dir, nodes):
     queries = spark.read.parquet(str(fixture_dir / "query_points.parquet")).limit(60)
     got = knn.knn_join(nodes, queries, k=5)

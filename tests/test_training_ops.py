@@ -1,9 +1,9 @@
-"""Training-data operator tests: dedup, similarity, multimodal plumbing."""
+"""Training-data operator tests: dedup and similarity."""
 
 import pyspark.sql.functions as F
 import pytest
 
-from pbf_spark.operators import dedup, multimodal, simsearch
+from pbf_spark.operators import dedup, simsearch
 
 BASE = (
     "the quick brown fox jumps over the lazy dog and runs through the green "
@@ -115,19 +115,6 @@ def test_embedding_dedup_finds_planted_pair(spark):
         emb.unionByName(planted), threshold=0.999
     ).collect()
     assert any(p["id_a"] == 1 and p["id_b"] == 100001 for p in pairs)
-
-
-def test_multimodal_features_deterministic(spark, fixture_dir):
-    from pbf_spark.sources import iceberg_lite
-
-    blobs = iceberg_lite.read_table(spark, fixture_dir / "media_blobs")
-    a = multimodal.extract_media_features(blobs).orderBy("media_ref").collect()
-    b = multimodal.extract_media_features(blobs.repartition(5)).orderBy("media_ref").collect()
-    assert a == b
-    assert all(len(r["feature"]) == multimodal.FEATURE_DIM for r in a)
-    frames = multimodal.frame_sample(blobs, every_n=3)
-    assert frames.count() > 0
-    assert frames.groupBy("media_ref", "frame_idx").count().filter("count > 1").count() == 0
 
 
 def test_banded_lsh_recall_and_bucket_bound_100k(spark):
