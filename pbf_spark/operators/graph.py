@@ -19,8 +19,7 @@ published fix is the large-star/small-star contraction (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14), which would
 fit the same API (edge list in, labels out) if such inputs appear.
 Driver actions: exactly one ``count()`` per round (the convergence
-check), bounded by ``max_iter`` — the same bounded-driver-round-trip
-pattern as knn_join's ring expansion (knn.py).
+check), bounded by ``max_iter``.
 """
 
 from __future__ import annotations

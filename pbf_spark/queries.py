@@ -546,24 +546,22 @@ _HAVERSINE_SQL = (
 
 def knn_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN of 20 query points (every 500th event) over all event points
-    via hex k-ring expansion; oracle is an exhaustive SQL scan."""
+    via one hex k-ring candidate pass plus the brute-force fallback;
+    oracle is an exhaustive SQL scan."""
     from .operators.knn import knn_join
 
     pts = event_points(spark, sf_dir)
     # query side: 20 rows survive the filter — build them from the plain
-    # scan (parallel=False) so the knn loop's repeated references don't
-    # re-execute the fact-side exchange
+    # scan (parallel=False): knn_join reads it twice (the candidate pass
+    # and the anti join that picks its brute-force queries), and neither
+    # read should re-execute the fact-side exchange
     queries = (
         event_points(spark, sf_dir, parallel=False)
         .where(F.col("id") % 500 == 0)
         .where(F.col("id") < 10000)
         .select(F.col("id").alias("query_id"), "lat", "lon")
     )
-    # start_ring=4: the expansion ladder doubles, so starting one rung
-    # higher saves a full round (driver round-trip + candidate join) on
-    # dense data; results are ring-invariant by the coverage-margin
-    # proof (measured identical, 2.77 -> 1.79 s at sf1.0)
-    out = knn_join(pts, queries, k=5, start_ring=4)
+    out = knn_join(pts, queries, k=5)
     return out.select(
         "query_id", F.col("id").alias("id"), F.round(F.col("dist_m"), 3).alias("dist_m"), "rank"
     ).orderBy("query_id", "rank")
@@ -983,12 +981,7 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i, la, lo) for i, (la, lo) in enumerate(POLYGON)],
         "query_id int, lat double, lon double",
     )
-    # max_ring=8 lets the auto-resolution pick one level finer (res 8
-    # instead of 7), halving the candidate volume (812k -> 416k rows at
-    # sf1.0) for a few hundred more prefilter cells per query; results
-    # are resolution-invariant (superset prefilter + exact refine,
-    # verified byte-equal): 3.32 -> 2.44 s
-    out = range_join(pts, centers, radius_m=3000.0, max_ring=8)
+    out = range_join(pts, centers, radius_m=3000.0)
     return out.select(
         "query_id", "id", F.round(F.col("dist_m"), 3).alias("dist_m")
     ).orderBy("query_id", "id")

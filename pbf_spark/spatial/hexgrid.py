@@ -17,7 +17,7 @@ deterministic geo→cell assignment, aperture-7 parent/child hierarchy,
 axial k-ring neighborhoods, ~uniform cell areas (gnomonic distortion
 bounded within a face). Cross-face neighborhoods are handled by
 re-indexing ring-center geo points (seam-safe by construction; see
-knn.py).
+knn.py); ``covered_m`` bounds the disc a k-ring is guaranteed to cover.
 
 Resolution 9 here matches H3 res 9 cell scale (~0.1 km², edge ~174 m):
 res-0 hex circumradius is face_circumradius/2.8, divided by sqrt(7) per
@@ -221,3 +221,19 @@ def hex_edge_m(res: int) -> float:
 def hex_min_width_m(res: int) -> float:
     """Conservative minimum hex width (2·apothem), with gnomonic shrink margin."""
     return hex_edge_m(res) * np.sqrt(3.0) * 0.8
+
+
+def covered_m(res: int, ring: int) -> float:
+    """Radius in meters of the geodesic disc, around any point of a cell,
+    that the cell's ``ring``-ring (``k_ring_cells``) is guaranteed to
+    cover at resolution ``res``.
+
+    Gnomonic radial compression dgeo/dplane = cos²θ is smallest at the
+    face corners (θmax ≈ 37.4° on the icosahedron → cos² ≈ 0.631), so geo
+    distance ≥ 0.6 × plane distance everywhere on a face. ``ring`` rings
+    reach ``ring`` × the hex width in plane units from the center cell;
+    two circumradii bound the offset of a point inside that cell (plane ≥
+    geo for the subtracted term, also conservative)."""
+    edge = hex_edge_m(res)
+    width = edge * float(np.sqrt(3.0))
+    return float(max(0.0, ring * 0.6 * width - 2 * edge))

@@ -220,6 +220,80 @@ def test_knn_exactly_k_rows_per_query(spark, fixture_dir, nodes):
     assert counts.count() == 60
 
 
+def _ulps(a, b) -> int:
+    return int(np.abs(np.asarray(a).view(np.int64) - np.asarray(b).view(np.int64)).max(initial=0))
+
+
+@pytest.mark.parametrize("start_ring", [1, 3, 4, 8])
+def test_knn_any_ring_matches_brute_force(spark, fixture_dir, nodes, nodes_np, start_ring):
+    """Every ring returns the exhaustive answer; only the share of
+    queries that take the brute-force pass changes. Ring 1 covers no
+    disc (``covered_m`` is 0), so every query goes brute force; the two
+    queries ≥ 20 km from every point have no candidate at any ring; a
+    3-point cloud with k=5 gives each query 3 rows."""
+    import pandas as pd
+
+    from pbf_spark.spatial import hexgrid
+
+    assert hexgrid.covered_m(knn.RES, 1) == 0.0
+    ids, lat, lon = nodes_np
+    qp = spark.read.parquet(str(fixture_dir / "query_points.parquet")).limit(20).toPandas()
+    far = pd.DataFrame({"query_id": [10**6, 10**6 + 1], "lat": [52.2, 51.5], "lon": [-0.1, 1.0]})
+    for r in far.itertuples():
+        assert geometry.haversine_m(r.lat, r.lon, lat, lon).min() >= 20_000.0
+    qp = pd.concat([qp[["query_id", "lat", "lon"]], far], ignore_index=True)
+    queries = spark.createDataFrame(qp)
+    cloud = pd.DataFrame({"id": ids[:3], "lat": lat[:3], "lon": lon[:3]})
+
+    for pts, (p_ids, p_lat, p_lon), k in [
+        (nodes, nodes_np, 5),
+        (spark.createDataFrame(cloud), (ids[:3], lat[:3], lon[:3]), 5),
+    ]:
+        got = knn.knn_join(pts, queries, k=k, start_ring=start_ring).toPandas()
+        assert len(got) == len(qp) * min(k, len(p_ids))
+        for q in qp.itertuples():
+            d = geometry.haversine_m(q.lat, q.lon, p_lat, p_lon)
+            order = np.lexsort((p_ids, d))[:k]
+            sub = got[got.query_id == q.query_id].sort_values("rank")
+            assert list(sub["id"]) == list(p_ids[order]), f"query {q.query_id}"
+            assert list(sub["rank"]) == list(range(1, len(order) + 1))
+            assert _ulps(sub["dist_m"].to_numpy(), d[order]) <= 4
+
+
+@pytest.mark.parametrize("radius_m", [30.0, 500.0, 3000.0, 20_000.0])
+def test_range_join_matches_brute_force(spark, fixture_dir, nodes, nodes_np, radius_m):
+    """The exact pair set within ``radius_m``, at the resolutions the
+    pick lands on: 30 m and 500 m at res 9 (3 and 5 rings), 3 km at
+    res 8, 20 km at res 6; ``dist_m`` within 4 ulps of numpy. Half the
+    queries sit on nodes, so even 30 m has hits."""
+    import pandas as pd
+
+    ids, lat, lon = nodes_np
+    on_nodes = pd.DataFrame({"query_id": 10**6 + ids[::900], "lat": lat[::900], "lon": lon[::900]})
+    queries = spark.createDataFrame(pd.concat([
+        spark.read.parquet(str(fixture_dir / "query_points.parquet")).limit(10)
+        .select("query_id", "lat", "lon").toPandas(),
+        on_nodes,
+    ], ignore_index=True))
+    got = knn.range_join(nodes, queries, radius_m).toPandas()
+    expect = {}
+    for q in queries.collect():
+        d = geometry.haversine_m(q["lat"], q["lon"], lat, lon)
+        expect.update({(q["query_id"], int(i)): x for i, x in zip(ids[d <= radius_m], d[d <= radius_m])})
+    pairs = dict(zip(zip(got["query_id"], got["id"]), got["dist_m"]))
+    assert len(pairs) == len(got)
+    assert pairs.keys() == expect.keys()
+    assert len(expect) > len(on_nodes), "fixture sanity: pairs beyond the on-node queries themselves"
+    keys = list(expect)
+    assert _ulps([pairs[p] for p in keys], [expect[p] for p in keys]) <= 4
+
+
+@pytest.mark.parametrize("radius_m", [float("nan"), float("inf")])
+def test_range_join_rejects_unbounded_radius(nodes, radius_m):
+    with pytest.raises(ValueError, match="finite"):
+        knn.range_join(nodes, nodes, radius_m)
+
+
 def test_tiles_partition_invariant(nodes):
     t1 = tiles.materialize_tiles(nodes, tile_level=10, raster_bits=5)
     t2 = tiles.materialize_tiles(nodes.repartition(17), tile_level=10, raster_bits=5)

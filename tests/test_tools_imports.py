@@ -1,5 +1,6 @@
 """Repo-local imports of the scripts under tools/, perfbench/ and the
-repo root resolve: every module they import exists, every name they
+repo root, and of the modules of ``pbf_spark`` (relative imports
+included), resolve: every module they import exists, every name they
 take from a repo-local module is still defined there, and every keyword
 they pass to a repo-local function is still a parameter of it.
 
@@ -26,6 +27,8 @@ SCRIPTS = (
     + sorted((REPO / "tools").glob("*.py"))
     + sorted((REPO / "perfbench").glob("*.py"))
 )
+MODULES = sorted((REPO / "pbf_spark").rglob("*.py"))
+PACKAGE_DIRS = {p.parent for p in MODULES}
 
 
 def _module_path(dotted: str, roots: list[Path]) -> Path | None:
@@ -89,38 +92,65 @@ def _has_name(mod_path: Path, dotted: str, name: str, roots: list[Path]) -> bool
     return mod_path.name == "__init__.py" and _module_path(f"{dotted}.{name}", roots) is not None
 
 
+def _import_target(script: Path, node: ast.ImportFrom) -> str | None:
+    """Dotted module a ``from ... import`` reads, a relative one resolved
+    against the package ``script`` sits in."""
+    if node.level == 0:
+        return node.module
+    pkg = script.relative_to(REPO).parent.parts
+    pkg = pkg[: len(pkg) - node.level + 1]
+    return ".".join([*pkg, *([node.module] if node.module else [])])
+
+
 def _problems(script: Path) -> list[str]:
-    # a tool runs with its own directory and the repo root on sys.path
-    roots = [script.parent, REPO] if script.parent != REPO else [REPO]
+    # a tool runs with its own directory and the repo root on sys.path,
+    # a package module with the repo root only
+    in_package = script.parent in PACKAGE_DIRS
+    roots = [REPO] if in_package or script.parent == REPO else [script.parent, REPO]
     tree = ast.parse(script.read_text())
     out = []
+    # a package import inside ``try: ... except ImportError`` is an
+    # optional dependency (``wire/frame.py``'s lz4 and zstandard codecs)
+    optional = {
+        id(n)
+        for t in ast.walk(tree)
+        if in_package
+        and isinstance(t, ast.Try)
+        and any(h.type is not None and "ImportError" in ast.unparse(h.type) for h in t.handlers)
+        for st in t.body
+        for n in ast.walk(st)
+    }
     local_aliases: dict[str, tuple[Path, str]] = {}
     local_funcs: dict[str, tuple[Path, str]] = {}
 
-    def resolve(dotted: str, line: int) -> Path | None:
+    def resolve(dotted: str, node: ast.stmt) -> Path | None:
         path = _module_path(dotted, roots)
         if path is None and _module_path(dotted.split(".")[0], roots) is not None:
-            out.append(f"line {line}: repo-local module {dotted!r} does not exist")
-        elif path is None and importlib.util.find_spec(dotted.split(".")[0]) is None:
-            out.append(f"line {line}: module {dotted!r} is neither repo-local nor installed")
+            out.append(f"line {node.lineno}: repo-local module {dotted!r} does not exist")
+        elif (
+            path is None
+            and id(node) not in optional
+            and importlib.util.find_spec(dotted.split(".")[0]) is None
+        ):
+            out.append(f"line {node.lineno}: module {dotted!r} is neither repo-local nor installed")
         return path
 
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             for a in node.names:
-                path = resolve(a.name, node.lineno)
+                path = resolve(a.name, node)
                 if path is not None and (a.asname or "." not in a.name):
                     local_aliases[a.asname or a.name] = (path, a.name)
-        elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
-            path = resolve(node.module, node.lineno)
+        elif isinstance(node, ast.ImportFrom) and (dotted := _import_target(script, node)):
+            path = resolve(dotted, node)
             if path is None:
                 continue
             for a in node.names:
-                sub = _module_path(f"{node.module}.{a.name}", roots)
+                sub = _module_path(f"{dotted}.{a.name}", roots)
                 if sub is not None:
-                    local_aliases[a.asname or a.name] = (sub, f"{node.module}.{a.name}")
-                elif a.name != "*" and not _has_name(path, node.module, a.name, roots):
-                    out.append(f"line {node.lineno}: {node.module!r} has no {a.name!r}")
+                    local_aliases[a.asname or a.name] = (sub, f"{dotted}.{a.name}")
+                elif a.name != "*" and not _has_name(path, dotted, a.name, roots):
+                    out.append(f"line {node.lineno}: {dotted!r} has no {a.name!r}")
                 else:
                     local_funcs[a.asname or a.name] = (path, a.name)
     # attribute uses of an imported repo-local module: ``bench.best_of``
@@ -154,7 +184,7 @@ def _problems(script: Path) -> list[str]:
     return out
 
 
-@pytest.mark.parametrize("script", SCRIPTS, ids=lambda p: str(p.relative_to(REPO)))
+@pytest.mark.parametrize("script", SCRIPTS + MODULES, ids=lambda p: str(p.relative_to(REPO)))
 def test_repo_local_imports_resolve(script):
     assert _problems(script) == []
 
@@ -197,7 +227,7 @@ def _builders_without_daemon_conf(source: str) -> list[int]:
 
 BUILDER_FILES = [
     p
-    for p in SCRIPTS + sorted((REPO / "pbf_spark").rglob("*.py")) + sorted((REPO / "tests").glob("*.py"))
+    for p in SCRIPTS + MODULES + sorted((REPO / "tests").glob("*.py"))
     if p != REPO / "pbf_spark" / "session.py"
 ]
 
