@@ -35,6 +35,7 @@ from ..model.schema import (
 
 _WAY_LATS_TYPE = WAY_LOC_ARROW_FIELDS[0].type
 _WAY_LONS_TYPE = WAY_LOC_ARROW_FIELDS[1].type
+from ..util import spread
 from ..wire import frame as wire_frame
 from ..wire import osmformat
 from ..wire.osmformat import MEMBER_TYPE_NAMES, BlockSoA, EntitySoA
@@ -390,7 +391,6 @@ def decode_blobs(
 def decode_documents(
     docs: DataFrame,
     media_blobs: DataFrame,
-    partitions: int | None = None,
     columns: frozenset[str] | set[str] | None = None,
     kinds: tuple[str, ...] | None = None,
     slim: bool = False,
@@ -415,15 +415,10 @@ def decode_documents(
     joined = spans.join(media_blobs, "media_ref").select(
         "doc_id", "span_idx", "blob_seq", "blob_type", "codec", "raw_size", "payload"
     )
-    if partitions is None:
-        # Blob rows are ~100 KB-1 MB each, so byte-based split/AQE sizing
-        # wildly underestimates decode CPU: rebalance to keep every core
-        # fed. At cluster scale, bucketing both tables by media_ref (or
-        # simply having enough input files) makes this a no-op — pass
-        # partitions=0 to skip.
-        partitions = joined.sparkSession.sparkContext.defaultParallelism * 2
-    if partitions:
-        joined = joined.repartition(partitions)
+    # Blob rows are ~100 KB-1 MB each, so byte-based split/AQE sizing
+    # wildly underestimates decode CPU: one task per core (util.spread;
+    # a streaming plan keeps its file splits)
+    joined = spread(joined)
     return decode_blobs(joined, columns, kinds=kinds, slim=slim, tag_filter=tag_filter)
 
 

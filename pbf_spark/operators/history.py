@@ -66,7 +66,6 @@ def apply_diff(
     snapshot: DataFrame,
     diff: DataFrame,
     drop_deleted: bool = True,
-    snapshot_unique: bool = True,
 ) -> DataFrame:
     """Apply a replication diff (osmChange-shaped entity rows: creates,
     modifies, and deletes as ``info.visible = false``) to a snapshot —
@@ -75,8 +74,8 @@ def apply_diff(
     the same diff (or overlapping diffs, which replication replay
     produces) is idempotent.
 
-    Scale shape (``snapshot_unique=True``, the snapshot contract: at
-    most one row per (entity_type, id)): the diff's key set is tiny and
+    Scale shape (the snapshot contract: at most one row per
+    (entity_type, id)): the diff's key set is tiny and
     broadcast, so snapshot rows the diff does not touch PASS THROUGH
     with no exchange at all — the only shuffled data is the touched
     subset (O(|diff|) keys) plus the diff itself. A minutely diff
@@ -88,13 +87,8 @@ def apply_diff(
     over a single-row group is the identity and the visibility filter
     is row-local (both applied to the pass-through branch).
 
-    ``snapshot_unique=False`` falls back to the full-union window for
-    left sides that are NOT snapshots (multiple versions per key)."""
-    if not snapshot_unique:
-        return latest_versions(
-            snapshot.unionByName(diff, allowMissingColumns=True),
-            drop_deleted=drop_deleted,
-        )
+    A left side that is NOT a snapshot (several versions per key) needs
+    :func:`latest_versions` over the union instead."""
     keys = ["entity_type", "id"]
     changed = diff.select(*keys).distinct()
     untouched = snapshot.join(F.broadcast(changed), keys, "left_anti")

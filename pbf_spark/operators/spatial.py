@@ -98,10 +98,9 @@ def polygon_covering_df(
     mapInArrow (coarse interior cells + fine boundary cells — see
     spatial/covering.py). The polygon layer never has to fit the driver;
     only the resulting covering (bounded by the per-polygon cell budget)
-    is broadcast by the PIP join."""
+    is broadcast by the PIP join. ``polygons`` carries ``rings`` (see
+    build_polygon_index)."""
 
-    multi = "rings" in polygons.columns
-    geom_col = "rings" if multi else "ring"
     out_schema = pa.schema(
         [
             ("polygon_id", pa.string()),
@@ -118,12 +117,11 @@ def polygon_covering_df(
     def gen(batches):
         for batch in batches:
             pids = batch.column("polygon_id").to_pylist()
-            geoms = batch.column(geom_col).to_pylist()
+            geoms = batch.column("rings").to_pylist()
             for pid, raw in zip(pids, geoms):
-                rings_raw = raw if multi else [raw]
                 rings = [
                     np.array([[p["lat"], p["lon"]] for p in r], dtype=np.float64)
-                    for r in rings_raw
+                    for r in raw
                 ]
                 ids, lvls, inner = covering.polygon_covering(rings, levels)
                 yield pa.RecordBatch.from_arrays(
@@ -136,7 +134,7 @@ def polygon_covering_df(
                     schema=out_schema,
                 )
 
-    return polygons.select("polygon_id", geom_col).mapInArrow(gen, _COVER_SCHEMA)
+    return polygons.select("polygon_id", "rings").mapInArrow(gen, _COVER_SCHEMA)
 
 
 class PolygonIndex:
@@ -156,27 +154,11 @@ class PolygonIndex:
         self.levels = levels
 
 
-# ring → closed-edge array, entirely in Catalyst (no driver collect):
-# n drops the repeated closing vertex if present; edge i wraps via pmod
+# rings → ONE closed-edge array, entirely in Catalyst (no driver
+# collect): per ring, n drops the repeated closing vertex if present and
+# edge i wraps via pmod; even-odd parity over the concatenation is
+# exactly polygon-minus-holes semantics
 _EDGES_EXPR = """
-CASE WHEN size(ring) > 1 AND ring[0].lat = element_at(ring, -1).lat
-                          AND ring[0].lon = element_at(ring, -1).lon
-     THEN transform(sequence(0, size(ring) - 2),
-          i -> struct(ring[i].lat AS y1, ring[i].lon AS x1,
-                      ring[pmod(i + 1, size(ring) - 1)].lat AS y2,
-                      ring[pmod(i + 1, size(ring) - 1)].lon AS x2))
-     ELSE transform(sequence(0, size(ring) - 1),
-          i -> struct(ring[i].lat AS y1, ring[i].lon AS x1,
-                      ring[pmod(i + 1, size(ring))].lat AS y2,
-                      ring[pmod(i + 1, size(ring))].lon AS x2))
-END
-"""
-
-# multi-ring (polygon-with-holes) variant: flatten every ring's closed
-# edge list into ONE edge array — even-odd parity over the concatenation
-# is exactly polygon-minus-holes semantics, so the refine expression is
-# unchanged
-_RINGS_EDGES_EXPR = """
 flatten(transform(rings, r ->
   CASE WHEN size(r) > 1 AND r[0].lat = element_at(r, -1).lat
                         AND r[0].lon = element_at(r, -1).lon
@@ -202,14 +184,18 @@ def build_polygon_index(
     — small polygons earn level-16 boundary cells, large or long-edged
     ones stop coarser and keep coarse interior rungs. Results are
     level-independent; this is purely the perf knob round 3 measured
-    being mis-set by hand."""
+    being mis-set by hand.
+
+    ``polygons`` carries either ``ring`` (one ring per polygon) or
+    ``rings`` (outer ring plus holes)."""
+    if "rings" not in polygons.columns:
+        polygons = polygons.withColumn("rings", F.array("ring"))
     if level is None:
         levels = covering.AUTO_LEVELS
     else:
         levels = tuple(lv for lv in covering.DEFAULT_LEVELS if lv < level) + (level,)
     cover_df = polygon_covering_df(polygons, levels).localCheckpoint()
-    edges_expr = _RINGS_EDGES_EXPR if "rings" in polygons.columns else _EDGES_EXPR
-    edges_df = polygons.select("polygon_id", F.expr(edges_expr).alias("_edges")).localCheckpoint()
+    edges_df = polygons.select("polygon_id", F.expr(_EDGES_EXPR).alias("_edges")).localCheckpoint()
     attrs_df = (
         polygons.select("polygon_id", *keep_polygon_cols).localCheckpoint()
         if keep_polygon_cols
@@ -224,7 +210,7 @@ def build_polygon_index(
 def point_in_polygon_join(
     points: DataFrame,
     polygons: DataFrame | PolygonIndex,
-    level: int | None = 13,
+    level: int | None = None,
     lat_col: str = "lat",
     lon_col: str = "lon",
     keep_polygon_cols: tuple[str, ...] = ("category",),
@@ -232,22 +218,26 @@ def point_in_polygon_join(
     """Exact PIP join: each point row × each polygon containing it.
 
     ``polygons`` is either the polygon DataFrame (broadcast-scale
-    dimension; index built on the fly) or a prebuilt PolygonIndex.
+    dimension; index built on the fly at ``level``, 13 when None) or a
+    prebuilt PolygonIndex (``build_polygon_index(level=None)`` gives the
+    data-driven covering).
 
-    ``level`` is the PREFILTER cell level — results are identical at any
-    level ≥ the index's finest covering level; finer levels trade more
-    covering cells for fewer false-positive candidates (the right trade
-    for boundary-dominated city-scale polygons).
+    The points are celled at the index's finest covering level, the
+    only prefilter level the index can answer; results do not depend on
+    it. A ``level`` coarser than that level raises ValueError: those
+    cells cannot be matched to their finer covering cells.
     """
     spark: SparkSession = points.sparkSession
     if isinstance(polygons, PolygonIndex):
         index = polygons
     else:
-        index = build_polygon_index(spark, polygons, level, keep_polygon_cols)
-    if level is None:
-        # data-driven index: the point-side prefilter cell matches the
-        # finest covering level actually present
-        level = max(index.levels)
+        index = build_polygon_index(spark, polygons, 13 if level is None else level, keep_polygon_cols)
+    finest = max(index.levels, default=0)
+    if level is not None and level < finest:
+        raise ValueError(
+            f"prefilter level {level} is coarser than the index's finest covering level {finest}"
+        )
+    level = finest
     cover_df = index.cover_df
 
     # refine stays JVM-side: the even-odd ray cast is an (interpreted)

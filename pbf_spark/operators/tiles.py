@@ -10,8 +10,7 @@ Plan shape: one narrow pandas UDF (cell at fine level) → two-level hash
 aggregate (``groupBy(tile, bin).count()`` gets map-side partial agg) →
 ``applyInPandas`` per tile to densify. The only shuffle is keyed by
 (tile, bin), which is fine-grained enough that urban-density skew spreads
-over ~4^b keys per hot tile; for pathological cases compose with
-operators.skew.salted_count.
+over ~4^b keys per hot tile.
 """
 
 from __future__ import annotations
@@ -24,15 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..spatial import s2
-
-def _fine_cell_udf(fine_level: int):
-    @pandas_udf(T.LongType())
-    def _udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-        return pd.Series(
-            s2.lat_lon_to_cell_id(lat.to_numpy(np.float64), lon.to_numpy(np.float64), fine_level)
-        )
-
-    return _udf
+from .spatial import s2_cell_udf
 
 
 TILE_SCHEMA = T.StructType(
@@ -56,7 +47,7 @@ def materialize_tiles(
     side = 1 << raster_bits
     n_bins = side * side
 
-    fine = points.withColumn("_fine", _fine_cell_udf(fine_level)(F.col(lat_col), F.col(lon_col)))
+    fine = points.withColumn("_fine", s2_cell_udf(fine_level)(F.col(lat_col), F.col(lon_col)))
     # tile id and bin index by bit math on the fine cell id:
     # parent = drop 2*raster_bits position bits; bin = those dropped bits
     # (Hilbert sub-position — locality-preserving within the tile)
@@ -112,7 +103,7 @@ def tile_pyramid(
     if max(levels) > base_level:
         raise ValueError(f"pyramid levels {levels} must be <= base_level {base_level}")
     base = points.withColumn(
-        "_base", _fine_cell_udf(base_level)(F.col(lat_col), F.col(lon_col))
+        "_base", s2_cell_udf(base_level)(F.col(lat_col), F.col(lon_col))
     )
     anc = F.array(
         *[

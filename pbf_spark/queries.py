@@ -20,6 +20,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .util import spread
+
 # ---------------------------------------------------------------------------
 # shared constants (single source for both engines)
 # ---------------------------------------------------------------------------
@@ -48,25 +50,14 @@ def _tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names]
 
 
-def _parallel(df: DataFrame, key: str) -> DataFrame:
-    """Spread an unsplittable scan across the cluster before expensive
-    per-row work. The driver tables are single-row-group parquet files —
-    a row group cannot be split, so every downstream expression (cell
-    UDFs, md5 pipelines, ray casts) otherwise runs in ONE task no matter
-    the core count. One cheap keyed exchange of the raw rows fixes that
-    (hash on a unique key: even spread, deterministic, and no
-    round-robin sort-before-repartition cost). Partition count follows
-    the session's parallelism, so it scales with the cluster instead of
-    being tuned to one machine."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(key))
-
-
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents table with the scan parallelized (see _parallel): the
-    text operators all do per-row tokenize/md5 work that is orders of
-    magnitude heavier than the 300-char rows being exchanged."""
+    """documents table with the scan spread (``util.spread``): the text
+    operators all do per-row tokenize/md5 work that is orders of
+    magnitude heavier than the 300-char rows being exchanged. The driver
+    tables are single-row-group parquet files, and a row group cannot be
+    split, so without the exchange that work runs in one task."""
     (docs,) = _tables(spark, sf_dir, "documents")
-    return _parallel(docs, "doc_id")
+    return spread(docs, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -190,7 +181,7 @@ ORDER BY c_nationkey, rank_in_nation
 def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ev,) = _tables(spark, sf_dir, "events")
     # countDistinct's partial phase is the heavy part and runs pre-shuffle
-    ev = _parallel(ev, "event_id")
+    ev = spread(ev, "event_id")
     return (
         ev.groupBy(
             F.date_trunc("hour", "ts").alias("hour"), F.col("event_type").alias("event_type")
@@ -235,7 +226,7 @@ def event_points(spark: SparkSession, sf_dir: str, parallel: bool = True) -> Dat
     # for tiny highly-filtered derivations (e.g. the kNN query points)
     # where the exchange would cost more than it parallelizes.
     if parallel:
-        ev = _parallel(ev, "event_id")
+        ev = spread(ev, "event_id")
     return ev.select(
         F.col("event_id").alias("id"),
         F.expr(_LAT_EXPR).alias("lat"),
@@ -900,7 +891,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.simsearch import cosine_topk
 
     (emb,) = _tables(spark, sf_dir, "embeddings")
-    emb = _parallel(emb, "vec_id")  # per-row dot products dwarf the exchange
+    emb = spread(emb, "vec_id")  # per-row dot products dwarf the exchange
     queries = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )

@@ -15,16 +15,15 @@ In this sandbox (local FS) tasks re-open the local path directly.
 
 from __future__ import annotations
 
-import struct
+import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..wire.frame import MAX_BLOB_HEADER_SIZE, split_blob, unpack_blob
+from ..wire.frame import iter_blob_frames, read_blob_header, split_blob, unpack_blob
 from ..wire.osmformat import Header, parse_header_block
-from ..wire.proto import parse_message
 
 INDEX_SCHEMA = T.StructType(
     [
@@ -37,38 +36,38 @@ INDEX_SCHEMA = T.StructType(
 
 
 def index_blobs(path: str | Path) -> list[tuple[int, str, int, int]]:
-    """Framing-only scan → [(blob_seq, blob_type, payload_offset, length)]."""
+    """Framing-only scan → [(blob_seq, blob_type, payload_offset, length)].
+
+    Reads only the frame headers and seeks past each Blob; a malformed
+    header or a Blob that runs past the end of the file raises
+    ValueError naming the path and the frame's byte offset."""
     out = []
-    seq = 0
+    offset = 0
     with open(path, "rb") as f:
-        while True:
-            size_bytes = f.read(4)
-            if not size_bytes:
-                break
-            (hsize,) = struct.unpack(">I", size_bytes)
-            if hsize > MAX_BLOB_HEADER_SIZE:
-                raise ValueError(f"blob header too big: {hsize}")
-            header = parse_message(f.read(hsize))
-            blob_type = bytes(header[1][0]).decode()
-            datasize = header[3][0]
-            out.append((seq, blob_type, f.tell(), datasize))
-            f.seek(datasize, 1)
-            seq += 1
+        size = os.fstat(f.fileno()).st_size
+        try:
+            while (frame := read_blob_header(f, offset)) is not None:
+                blob_type, blob_offset, datasize = frame
+                if blob_offset + datasize > size:
+                    raise ValueError(f"truncated blob in the frame at byte {offset}")
+                out.append((len(out), blob_type, blob_offset, datasize))
+                offset = f.seek(blob_offset + datasize)
+        except ValueError as e:
+            raise ValueError(f"{path}: {e}") from None
     return out
 
 
 def load_header(path: str | Path) -> Header:
     """Decode blob 0 (OSMHeader) driver-side — LoadHeader (decoder/header.go:29-71).
 
-    Also enforces the required-features gate before any job is submitted.
+    Reads only the first frame. Also enforces the required-features gate
+    before any job is submitted.
     """
-    idx = index_blobs(path)
-    if not idx or idx[0][1] != "OSMHeader":
-        raise ValueError("file does not start with an OSMHeader blob")
-    seq, _t, off, ln = idx[0]
     with open(path, "rb") as f:
-        f.seek(off)
-        return parse_header_block(unpack_blob(f.read(ln)))
+        blob_type, blob = next(iter_blob_frames(f), (None, b""))
+    if blob_type != "OSMHeader":
+        raise ValueError("file does not start with an OSMHeader blob")
+    return parse_header_block(unpack_blob(blob))
 
 
 def read_blob_table(spark: SparkSession, path: str | Path) -> DataFrame:
@@ -76,16 +75,17 @@ def read_blob_table(spark: SparkSession, path: str | Path) -> DataFrame:
 
     The index pass runs driver-side; payload fetch happens task-side via
     ``mapInPandas`` over the (Arrow-created) index — range reads, no RDD
-    API, scan stays narrow after the index repartition.
+    API, no exchange.
     """
     import pandas as pd
 
     path = str(Path(path).resolve())
     idx = [row for row in index_blobs(path) if row[1] == "OSMData"]
-    n_parts = min(len(idx), spark.sparkContext.defaultParallelism * 2) or 1
+    # the Arrow path slices the index into min(len(idx), defaultParallelism)
+    # non-empty partitions, one fetch task each
     index_df = spark.createDataFrame(
         pd.DataFrame(idx, columns=["blob_seq", "blob_type", "offset", "length"])
-    ).repartition(n_parts)
+    )
 
     schema = T.StructType(
         [

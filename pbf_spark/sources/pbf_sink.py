@@ -14,6 +14,8 @@ The inverse pipeline re-expressed Spark-first:
   the final bbox, body after (A24, encoder.go:158-185) — here the body
   blobs stream to the driver via ``toLocalIterator`` in partition order
   and the header is written first because the bbox aggregate already ran.
+  The blocks are encoded in one parallel job into a ``localCheckpoint``
+  that the write releases when it ends.
 
 Single-file output is inherently a driver-side sink; at cluster scale
 you emit one PBF shard per partition instead (``shard_dir`` mode).
@@ -33,6 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..util import release_checkpoint, spread
 from ..wire import frame as wire_frame
 from ..wire.osmformat import (
     ENTITY_LIMIT,
@@ -173,7 +176,10 @@ def _encode_chunk(pdf: pd.DataFrame, kind: str, codec: str) -> bytes:
 def encode_blocks(entities: DataFrame, codec: str = "zlib") -> DataFrame:
     """Entity rows → blob rows (one PrimitiveBlock per ≤8000 same-type rows).
 
-    Runs distributed; each partition encodes its own homogeneous chunks.
+    Runs distributed: the rows spread over one partition per core
+    (``util.spread``, hashed on the entity key), and each partition
+    encodes its own same-type chunks. A ``repartition("entity_type")``
+    would leave AQE to coalesce the few MB of rows into one task.
     """
 
     def encode(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -187,7 +193,7 @@ def encode_blocks(entities: DataFrame, codec: str = "zlib") -> DataFrame:
                     out["blob"].append(_encode_chunk(chunk, kind, codec))
             yield pd.DataFrame(out)
 
-    return entities.repartition("entity_type").mapInPandas(encode, _BLOCK_SCHEMA)
+    return spread(entities, "entity_type", "id").mapInPandas(encode, _BLOCK_SCHEMA)
 
 
 def write_pbf(entities: DataFrame, path: str | Path, codec: str = "zlib") -> dict:
@@ -238,13 +244,18 @@ def write_pbf(entities: DataFrame, path: str | Path, codec: str = "zlib") -> dic
         optional_features=("LocationsOnWays",) if way_locs else (),
         writing_program="pbf_spark",
     )
-    blocks = encode_blocks(entities, codec)
+    # every partition encodes in one job; toLocalIterator over the plan
+    # itself would run one job per partition, one after another
+    blocks = encode_blocks(entities, codec).localCheckpoint(eager=True)
     n_blobs = 0
     n_entities = 0
-    with open(path, "wb") as f:
-        f.write(wire_frame.frame_blob("OSMHeader", wire_frame.pack_blob(build_header_block(header), codec)))
-        for row in blocks.toLocalIterator():
-            f.write(wire_frame.frame_blob("OSMData", bytes(row["blob"])))
-            n_blobs += 1
-            n_entities += row["n_entities"]
+    try:
+        with open(path, "wb") as f:
+            f.write(wire_frame.frame_blob("OSMHeader", wire_frame.pack_blob(build_header_block(header), codec)))
+            for row in blocks.toLocalIterator():
+                f.write(wire_frame.frame_blob("OSMData", bytes(row["blob"])))
+                n_blobs += 1
+                n_entities += row["n_entities"]
+    finally:
+        release_checkpoint(blocks)
     return {"n_blobs": n_blobs, "n_entities": n_entities}

@@ -220,6 +220,7 @@ def ancestor_at_level_expr(cell_col: str, from_level: int, to_level: int) -> str
 
     ancestor = (id & -(2*lsb)) | lsb, lsb = 1 << (2*(MAX_LEVEL-to_level)).
     """
-    assert to_level <= from_level
+    if to_level > from_level:
+        raise ValueError(f"ancestor level {to_level} is finer than the cell's level {from_level}")
     lsb = 1 << (2 * (s2.MAX_LEVEL - to_level))
     return f"(({cell_col} & {-(2 * lsb)}) | {lsb})"

@@ -104,9 +104,9 @@ def stream_decode_windowed_counts(
         .option("recursiveFileLookup", "true")
         .parquet(str(Path(docs_table_dir) / "data"))
     )
-    # partitions=0: no repartition inside a streaming plan (micro-batch
-    # file splits already parallelize); same decode operator as batch
-    entities = decode_documents(docs_stream, media_blobs, partitions=0)
+    # same decode operator as batch; over a stream it adds no exchange
+    # (micro-batch file splits already parallelize)
+    entities = decode_documents(docs_stream, media_blobs)
     agg = (
         entities.where(F.col("info.ts").isNotNull())
         .withColumn("ts", F.col("info.ts"))
@@ -295,7 +295,7 @@ def stream_decode_user_sessions(
         .option("recursiveFileLookup", "true")
         .parquet(str(Path(docs_table_dir) / "data"))
     )
-    entities = decode_documents(docs_stream, media_blobs, partitions=0)
+    entities = decode_documents(docs_stream, media_blobs)
     edits = (
         entities.where(F.col("info.ts").isNotNull() & F.col("info.uid").isNotNull())
         .select(

@@ -20,6 +20,22 @@ def small_df(spark: SparkSession, rows: list, schema) -> DataFrame:
     return spark.createDataFrame(sc.parallelize(rows, numSlices=1), schema)
 
 
+def spread(df: DataFrame, *keys) -> DataFrame:
+    """Fan ``df`` out to one partition per core before Python-heavy work.
+
+    The one owner of that decision in the package. A streaming frame
+    comes back unchanged (its file splits already parallelize each
+    micro-batch); any other frame is hash-partitioned on ``keys`` (give
+    a unique key: even, deterministic spread) or, with no key,
+    round-robin. The count stays explicit: AQE sizes a keyed exchange by
+    bytes and coalesces a few MB of rows whose Python cost is seconds
+    into one or two tasks.
+    """
+    if df.isStreaming:
+        return df
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
+
+
 def checkpoint_and_release(df: DataFrame, *scratch: DataFrame) -> DataFrame:
     """Compute ``df`` into a ``localCheckpoint`` the returned frame owns,
     then unpersist the ``scratch`` frames the computation reused.
@@ -39,12 +55,13 @@ def release_checkpoint(df: DataFrame) -> None:
     """Free the cached RDD behind a ``localCheckpoint``ed DataFrame.
 
     ``df.unpersist()`` only touches the SQL cache; a localCheckpoint is
-    RDD-level storage. ``queryExecution().toRdd()`` on the checkpointed
-    plan IS the stored RDD (unlike ``df.rdd``, which wraps it in a fresh
-    deserializer), so unpersisting it releases the executor storage.
-    Best-effort: failure means storage pressure, never wrong results.
+    RDD-level storage. The checkpointed frame's logical plan is a
+    ``LogicalRDD`` over the stored RDD (``queryExecution().toRdd()`` is
+    a fresh RDD mapped over it, whose unpersist frees nothing), so
+    unpersisting that RDD releases the executor storage. Best-effort:
+    failure means storage pressure, never wrong results.
     """
     try:
-        df._jdf.queryExecution().toRdd().unpersist(False)
+        df._jdf.queryExecution().logical().rdd().unpersist(False)
     except Exception:
         pass

@@ -40,25 +40,44 @@ _F_RAW, _F_RAW_SIZE, _F_ZLIB, _F_LZMA, _F_LZ4, _F_ZSTD = 1, 2, 3, 4, 6, 7
 _CODEC_BY_FIELD = {_F_RAW: "raw", _F_ZLIB: "zlib", _F_LZMA: "lzma", _F_LZ4: "lz4", _F_ZSTD: "zstd"}
 
 
+def read_blob_header(stream: BinaryIO, offset: int = 0) -> tuple[str, int, int] | None:
+    """Read the size prefix and BlobHeader of the frame at byte ``offset``
+    → (blob_type, blob_offset, datasize), or None at a clean end of
+    stream. The stream is left at ``blob_offset``, the Blob's first
+    byte. A malformed or truncated header raises ValueError naming
+    ``offset``."""
+    size_bytes = stream.read(4)
+    if len(size_bytes) == 0:
+        return None
+    if len(size_bytes) < 4:
+        raise ValueError(f"truncated blob header size at byte {offset}")
+    (header_size,) = struct.unpack(">I", size_bytes)
+    if header_size > MAX_BLOB_HEADER_SIZE:
+        raise ValueError(f"blob header too big: {header_size} at byte {offset}")
+    raw = stream.read(header_size)
+    if len(raw) < header_size:
+        raise ValueError(f"truncated blob header at byte {offset}")
+    try:
+        fields = parse_message(raw)
+    except ValueError as e:
+        raise ValueError(f"malformed blob header at byte {offset}: {e}") from None
+    blob_type, datasize = fields.get(1, [None])[0], fields.get(3, [None])[0]
+    if not isinstance(blob_type, memoryview) or not isinstance(datasize, int):
+        raise ValueError(f"blob header at byte {offset} lacks its type or datasize")
+    if datasize > MAX_BLOB_SIZE:
+        raise ValueError(f"blob too big: {datasize} at byte {offset}")
+    return bytes(blob_type).decode("utf-8"), offset + 4 + header_size, datasize
+
+
 def iter_blob_frames(stream: BinaryIO) -> Iterator[tuple[str, bytes]]:
     """Yield (blob_type, blob_bytes) from a framed PBF stream."""
-    while True:
-        size_bytes = stream.read(4)
-        if len(size_bytes) == 0:
-            return
-        if len(size_bytes) < 4:
-            raise ValueError("truncated blob header size")
-        (header_size,) = struct.unpack(">I", size_bytes)
-        if header_size > MAX_BLOB_HEADER_SIZE:
-            raise ValueError(f"blob header too big: {header_size}")
-        header = parse_message(stream.read(header_size))
-        blob_type = bytes(header[1][0]).decode("utf-8")
-        datasize = header[3][0]
-        if datasize > MAX_BLOB_SIZE:
-            raise ValueError(f"blob too big: {datasize}")
+    offset = 0
+    while (frame := read_blob_header(stream, offset)) is not None:
+        blob_type, blob_offset, datasize = frame
         blob = stream.read(datasize)
         if len(blob) < datasize:
-            raise ValueError("truncated blob")
+            raise ValueError(f"truncated blob in the frame at byte {offset}")
+        offset = blob_offset + datasize
         yield blob_type, blob
 
 

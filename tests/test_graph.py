@@ -178,7 +178,7 @@ def test_apply_diff_replication(spark):
     modifies replace, visible=false deletes remove, stale diff rows
     (older than the snapshot's version) never regress, and re-applying
     the same diff is a no-op (replication replay idempotence)."""
-    from pbf_spark.operators.history import apply_diff
+    from pbf_spark.operators.history import apply_diff, latest_versions
 
     def mk(rows):
         return small_df(
@@ -237,7 +237,9 @@ def test_apply_diff_replication(spark):
     # the diff-only-shuffle fast path must equal the full-union window
     for dd in (True, False):
         fast = apply_diff(snapshot, diff, drop_deleted=dd)
-        slow = apply_diff(snapshot, diff, drop_deleted=dd, snapshot_unique=False)
+        slow = latest_versions(
+            snapshot.unionByName(diff, allowMissingColumns=True), drop_deleted=dd
+        )
         assert fast.exceptAll(slow).isEmpty() and slow.exceptAll(fast).isEmpty()
 
 

@@ -11,6 +11,8 @@ query and the stateful operators to that rule:
   and the result reads no file outside the query's input tables;
 * calls that keep per-call state, run concurrently on one session,
   return exactly what they return when run one at a time;
+* ``write_pbf`` holds its encoded blocks in a checkpoint only while it
+  writes;
 * no module in the package keeps mutable module-level state.
 """
 
@@ -71,6 +73,27 @@ def test_concurrent_calls_match_serial(spark):
     with ThreadPoolExecutor(len(calls)) as pool:
         concurrent = list(pool.map(lambda call: call(), calls, timeout=600))
     assert concurrent == serial
+
+
+def test_write_pbf_releases_its_checkpoint(spark, fixture_dir, tmp_path, monkeypatch):
+    from pbf_spark.operators.decode import decode_documents
+    from pbf_spark.sources import iceberg_lite, pbf_sink
+
+    docs = iceberg_lite.read_table(spark, fixture_dir / "documents_interleaved")
+    blobs = iceberg_lite.read_table(spark, fixture_dir / "media_blobs")
+    entities = decode_documents(docs, blobs)
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    held, release = [], pbf_sink.release_checkpoint
+
+    def spy(df):
+        held.append(persistent())
+        release(df)
+
+    monkeypatch.setattr(pbf_sink, "release_checkpoint", spy)
+    before = persistent()
+    pbf_sink.write_pbf(entities, tmp_path / "out.osm.pbf")
+    assert len(held) == 1 and len(held[0] - before) == 1, "the blocks were not checkpointed"
+    assert persistent() == before, "write_pbf left its checkpoint persisted"
 
 
 _MUTATORS = {

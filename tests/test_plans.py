@@ -3,13 +3,16 @@ on must not silently regress (pushdown reaching the scan, broadcast
 joins on dimension sides, partial aggregation, no cartesian products).
 """
 
+import ast
 import re
+from pathlib import Path
 
 import pytest
 
 from pbf_spark import queries as Q
 
 SF = "/root/testdata/sf0.001"
+PACKAGE = Path(__file__).resolve().parent.parent / "pbf_spark"
 
 
 def plan_of(df) -> str:
@@ -247,3 +250,45 @@ def test_spatial_join_udfs_evaluate_once(spark, monkeypatch):
     for df in (*ranked, in_range):
         evals = [n for n, _, _, _ in executed_nodes(df) if n == "ArrowEvalPythonExec"]
         assert len(evals) == 2, evals
+
+
+def repartition_calls(package: Path) -> list[str]:
+    """``file:line`` of every ``.repartition(`` call in ``package``
+    outside ``util.spread``, the one owner of the fan-out rule."""
+    found = []
+    for path in sorted(package.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = set()
+        if path == package / "util.py":
+            for fn in tree.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name == "spread":
+                    owner = {id(n) for n in ast.walk(fn)}
+        found += [
+            f"{path.relative_to(package.parent)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "repartition"
+            and id(node) not in owner
+        ]
+    return found
+
+
+def test_spread_owns_every_repartition():
+    assert repartition_calls(PACKAGE) == []
+
+
+def test_streaming_decode_plans_no_exchange(spark, fixture_dir):
+    """Over a stream, decode_documents keeps the micro-batch file splits:
+    the only exchange is the broadcast of the static blob side."""
+    from pbf_spark.model.schema import DOCUMENT_SCHEMA
+    from pbf_spark.operators.decode import decode_documents
+    from pbf_spark.sources import iceberg_lite
+
+    docs = spark.readStream.schema(DOCUMENT_SCHEMA).option("recursiveFileLookup", "true").parquet(
+        str(fixture_dir / "documents_interleaved" / "data")
+    )
+    blobs = iceberg_lite.read_table(spark, fixture_dir / "media_blobs")
+    plan = plan_of(decode_documents(docs, blobs))
+    assert "StreamingRelation" in plan
+    assert "Exchange" not in plan.replace("BroadcastExchange", "")

@@ -75,6 +75,16 @@ def test_roundtrip_digest(spark, entities, fixture_manifest, tmp_path_factory):
     assert bb["left"] >= fixture_manifest["bbox"]["left"] - 1e-6
 
 
+def test_encode_blocks_spreads_over_partitions(entities):
+    """All three entity types reach more than one encode task: a keyed
+    ``repartition("entity_type")`` lets AQE coalesce them into one."""
+    blocks = pbf_sink.encode_blocks(entities)
+    rows = blocks.select(F.spark_partition_id().alias("p"), "entity_type", "n_entities").collect()
+    assert {r["entity_type"] for r in rows} == {"node", "way", "relation"}
+    assert len({r["p"] for r in rows}) > 1
+    assert sum(r["n_entities"] for r in rows) == entities.count()
+
+
 def test_roundtrip_sample_pbf(spark, tmp_path_factory):
     """Reference fixture round trip: sample.osm.pbf → entities → PBF →
     entities; digests equal (the reference's own test shape)."""

@@ -88,6 +88,22 @@ def test_pip_join_auto_level_identical_results(spark, fixture_dir, nodes):
     assert auto.exceptAll(manual).isEmpty() and manual.exceptAll(auto).isEmpty()
 
 
+def test_pip_join_point_level_comes_from_the_index(spark, fixture_dir, nodes):
+    """A prebuilt index fixes the prefilter level: the points are celled
+    at its finest covering level, so the default call on a data-driven
+    index (finer than level 13) returns the level-13 join's rows, and an
+    explicit coarser level raises naming both levels."""
+    polys = spark.read.parquet(str(fixture_dir / "polygons.parquet"))
+    index = spatial.build_polygon_index(spark, polys, level=None)
+    finest = max(index.levels)
+    assert finest > 13
+    got = spatial.point_in_polygon_join(nodes, index).select("polygon_id", "id")
+    manual = spatial.point_in_polygon_join(nodes, polys, level=13).select("polygon_id", "id")
+    assert got.exceptAll(manual).isEmpty() and manual.exceptAll(got).isEmpty()
+    with pytest.raises(ValueError, match=f"level 13 .* level {finest}"):
+        spatial.point_in_polygon_join(nodes, index, level=13)
+
+
 @pytest.fixture(scope="module")
 def star_case(spark):
     """sf0.01 event points, the declared star polygon, and the ids of

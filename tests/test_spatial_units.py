@@ -474,3 +474,11 @@ def test_covering_hole_aware():
     assert not (inside & ~matched).any()
     assert not (int_match & ~inside).any()
     assert not (int_match & in_hole).any()
+
+
+def test_ancestor_level_must_not_be_finer():
+    from pbf_spark.spatial.covering import ancestor_at_level_expr
+
+    assert ancestor_at_level_expr("c", 16, 13) == ancestor_at_level_expr("c", 13, 13)
+    with pytest.raises(ValueError, match="16 .* 13"):
+        ancestor_at_level_expr("c", 13, 16)

@@ -5,6 +5,8 @@ Golden contract: sample.osm.pbf = 339 entities
 """
 
 import io
+import re
+import struct
 
 import numpy as np
 import pytest
@@ -216,6 +218,55 @@ def test_truncated_stream_rejected():
     data = frame.frame_blob("OSMData", blob)
     with pytest.raises(ValueError):
         list(frame.iter_blob_frames(io.BytesIO(data[:-10])))
+
+
+def _framed(header: MessageBuilder, blob: bytes = b"") -> bytes:
+    raw = header.tobytes()
+    return struct.pack(">I", len(raw)) + raw + blob
+
+
+_GOOD_FRAME = frame.frame_blob("OSMData", frame.pack_blob(b"x" * 50))
+_BAD_FRAMES = {
+    "no_datasize": _framed(MessageBuilder().string(1, "OSMData")),
+    "no_type": _framed(MessageBuilder().varint(3, 0)),
+    # ends inside the declared header, on a field boundary
+    "short_header": _framed(MessageBuilder().string(1, "OSMData").varint(3, 5))[:-2],
+    "short_size": b"\x00\x00",
+    "too_big": _framed(MessageBuilder().string(1, "OSMData").varint(3, frame.MAX_BLOB_SIZE + 1)),
+    "short_blob": _GOOD_FRAME[:-10],
+}
+
+
+@pytest.mark.parametrize("case", list(_BAD_FRAMES))
+def test_malformed_frame_raises_naming_its_offset(case, tmp_path):
+    """Both framing loops (the stream reader and the file indexer) share
+    one BlobHeader parse: a missing field, a truncated header or blob,
+    or an oversized blob is a ValueError naming the frame's byte offset
+    (and, from the indexer, the file)."""
+    from pbf_spark.sources.pbf_file import index_blobs
+
+    data = _GOOD_FRAME + _BAD_FRAMES[case]
+    at = f"at byte {len(_GOOD_FRAME)}"
+    with pytest.raises(ValueError, match=at):
+        list(frame.iter_blob_frames(io.BytesIO(data)))
+    path = tmp_path / "bad.osm.pbf"
+    path.write_bytes(data)
+    with pytest.raises(ValueError, match=re.escape(f"{path}: ") + ".*" + at):
+        index_blobs(path)
+
+
+def test_load_header_reads_only_the_first_frame(tmp_path):
+    from pbf_spark.sources.pbf_file import load_header
+
+    header = frame.frame_blob(
+        "OSMHeader", frame.pack_blob(build_header_block(Header(writing_program="t")))
+    )
+    path = tmp_path / "head.osm.pbf"
+    path.write_bytes(header + _BAD_FRAMES["no_datasize"])
+    assert load_header(path).writing_program == "t"
+    path.write_bytes(_GOOD_FRAME)
+    with pytest.raises(ValueError, match="OSMHeader"):
+        load_header(path)
 
 
 def _packed_sint64_delta(vals):

@@ -107,11 +107,9 @@ def main(fixture_dir: str, out_json: str, barrier_dir: str, worker_id: int, n_wo
     def force(df):
         df.write.format("noop").mode("overwrite").save()
 
-    # no forced repartition: the blob scan already yields enough splits
-    # (maxPartitionBytes=4m) and AQE broadcasts the tiny span side, so
-    # payload bytes are read once and never shuffled — the plan a tuned
-    # cluster job has (docstring of decode_documents: partitions=0)
-    decode_run = lambda: force(decode.decode_documents(docs, blobs, partitions=0))
+    # decode_documents spreads the joined blob rows to one task per core
+    # (util.spread), as every batch caller gets it
+    decode_run = lambda: force(decode.decode_documents(docs, blobs))
     decode_run()  # warmup: codegen, python daemons, page cache
     _barrier(barrier_dir, "decode", worker_id)
     decode_res = _window(decode_run, window_sec, cpu_fn)
@@ -120,7 +118,7 @@ def main(fixture_dir: str, out_json: str, barrier_dir: str, worker_id: int, n_wo
     # so the measured join is the pure-JVM broadcast+raycast stage (the
     # steady-state shape: cells are computed once, reused by every query)
     nodes = (
-        decode.decode_documents(docs, blobs, partitions=0, columns=frozenset())
+        decode.decode_documents(docs, blobs, columns=frozenset())
         .where("entity_type='node'")
         .select("id", "lat", "lon")
         .withColumn("s2_cell", spatial.s2_cell_udf(13)(F.col("lat"), F.col("lon")))
@@ -141,7 +139,7 @@ def main(fixture_dir: str, out_json: str, barrier_dir: str, worker_id: int, n_wo
     from pbf_spark.operators import ways as ways_ops
 
     way_refs = (
-        decode.decode_documents(docs, blobs, partitions=0, columns=frozenset({"refs"}))
+        decode.decode_documents(docs, blobs, columns=frozenset({"refs"}))
         .where("entity_type='way'")
         .select("id", "refs")
         .repartition(cores * 2)
