@@ -7,7 +7,7 @@ members (type='way', roles outer/inner, '' defaulting to outer per the
 OSM old-style-multipolygon convention) + way geometries → stitched
 closed rings → the ``(polygon_id, rings)`` schema
 ``build_polygon_index`` / ``point_in_polygon_join`` consume
-(operators/spatial.py _RINGS_EDGES_EXPR).
+(operators/spatial.py _EDGES_EXPR).
 
 100-TB shape — the heavy data never leaves the JVM:
 
@@ -92,7 +92,7 @@ def _stitch(pdf: pd.DataFrame) -> pd.DataFrame:
 # per-ring concatenation: way 0 contributes all its points, every later
 # way drops its first point (the endpoint shared with the previous way);
 # the final point repeats the ring start, which the PIP edge builder's
-# closed-ring CASE drops (_RINGS_EDGES_EXPR)
+# closed-ring CASE drops (_EDGES_EXPR)
 _RING_PTS_EXPR = """
 flatten(transform(_segs, (s, i) ->
   CASE WHEN i = 0

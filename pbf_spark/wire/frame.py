@@ -40,7 +40,7 @@ _F_RAW, _F_RAW_SIZE, _F_ZLIB, _F_LZMA, _F_LZ4, _F_ZSTD = 1, 2, 3, 4, 6, 7
 _CODEC_BY_FIELD = {_F_RAW: "raw", _F_ZLIB: "zlib", _F_LZMA: "lzma", _F_LZ4: "lz4", _F_ZSTD: "zstd"}
 
 
-def read_blob_header(stream: BinaryIO, offset: int = 0) -> tuple[str, int, int] | None:
+def read_blob_header(stream: BinaryIO, offset: int) -> tuple[str, int, int] | None:
     """Read the size prefix and BlobHeader of the frame at byte ``offset``
     → (blob_type, blob_offset, datasize), or None at a clean end of
     stream. The stream is left at ``blob_offset``, the Blob's first
