@@ -5,7 +5,7 @@ Two complementary mechanisms:
 - ``observe()`` metrics: row/entity counters attached to the decode
   DataFrame, collected by a QueryExecutionListener-free pull
   (``Observation``) — zero extra passes.
-- lineage table: one row per (run, partition) with input extent
+- lineage table: one row per (run, batch, partition) with input extent
   (doc_id range, blob count), output rows per entity type, and wall
   time, written as an append-only parquet table. Any partition's decode
   is re-derivable from its lineage row (doc range → spans → blobs).
@@ -58,6 +58,9 @@ def partition_lineage(entities: DataFrame, run_id: str, batch_id: int = 0) -> Da
 
     Aggregates within each physical partition (spark_partition_id), so
     the record maps 1:1 to a task's output — the unit of resumability.
+    A stream-decoded micro-batch keeps its file splits, so there each
+    row is one input split (a document file, or a byte range of one)
+    and its decode.
     """
     return (
         entities.withColumn("_pid", F.spark_partition_id())

@@ -20,7 +20,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .util import spread
+from .util import small_df, spread
 
 # ---------------------------------------------------------------------------
 # shared constants (single source for both engines)
@@ -239,25 +239,28 @@ _POINTS_SQL = f"""
 """
 
 
-def pip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIP join of event points against the fixed concave polygon — the
-    engine's broadcast-prefilter + ray-cast path, oracle-checked against
-    a pure-SQL ray cast."""
+def _pip_fixed(spark: SparkSession, sf_dir: str, polygon_id: str, rings) -> DataFrame:
+    """PIP join of event points against one fixed polygon (``rings``:
+    outer rings and holes, even-odd) through the engine's broadcast
+    covering-prefilter + ray-cast path; ``_pip_sql`` is its oracle."""
     from .operators.spatial import point_in_polygon_join
 
-    from .util import small_df
-
-    pts = event_points(spark, sf_dir)
     poly = small_df(
         spark,
-        [("star", [{"lat": la, "lon": lo} for la, lo in POLYGON], "test")],
-        "polygon_id string, ring array<struct<lat:double,lon:double>>, category string",
+        [(polygon_id, [[{"lat": la, "lon": lo} for la, lo in r] for r in rings], "test")],
+        "polygon_id string, rings array<array<struct<lat:double,lon:double>>>, category string",
     )
     return (
-        point_in_polygon_join(pts, poly, keep_polygon_cols=())
-        .select(F.col("id").alias("id"), F.col("polygon_id").alias("polygon_id"))
+        point_in_polygon_join(event_points(spark, sf_dir), poly, keep_polygon_cols=())
+        .select("id", "polygon_id")
         .orderBy("id")
     )
+
+
+def pip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PIP join of event points against the fixed concave polygon,
+    oracle-checked against a pure-SQL ray cast."""
+    return _pip_fixed(spark, sf_dir, "star", [POLYGON])
 
 
 def _pip_sql(rings: list[list[tuple[float, float]]], pid: str) -> str:
@@ -317,31 +320,7 @@ PIP_MULTI_SQL = _pip_sql([POLYGON, POLYGON_OUTER2, POLYGON_HOLE], "star_multi")
 def pip_events_multipolygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIP join against a true multipolygon — two disjoint outer rings
     plus a hole — through the same covering-prefilter + ray-cast path."""
-    from .operators.spatial import point_in_polygon_join
-
-    from .util import small_df
-
-    pts = event_points(spark, sf_dir)
-    poly = small_df(
-        spark,
-        [
-            (
-                "star_multi",
-                [
-                    [{"lat": la, "lon": lo} for la, lo in POLYGON],
-                    [{"lat": la, "lon": lo} for la, lo in POLYGON_OUTER2],
-                    [{"lat": la, "lon": lo} for la, lo in POLYGON_HOLE],
-                ],
-                "test",
-            )
-        ],
-        "polygon_id string, rings array<array<struct<lat:double,lon:double>>>, category string",
-    )
-    return (
-        point_in_polygon_join(pts, poly, keep_polygon_cols=())
-        .select(F.col("id").alias("id"), F.col("polygon_id").alias("polygon_id"))
-        .orderBy("id")
-    )
+    return _pip_fixed(spark, sf_dir, "star_multi", [POLYGON, POLYGON_OUTER2, POLYGON_HOLE])
 
 
 def pip_events_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,30 +329,8 @@ def pip_events_holes(spark: SparkSession, sf_dir: str) -> DataFrame:
     covering is hole-aware (cells inside the hole are never marked
     interior). Models the reference's multipolygon relations
     (model/entities.go:101-129 outer/inner roles)."""
-    from .operators.spatial import point_in_polygon_join
+    return _pip_fixed(spark, sf_dir, "star_holed", [POLYGON, POLYGON_HOLE])
 
-    from .util import small_df
-
-    pts = event_points(spark, sf_dir)
-    poly = small_df(
-        spark,
-        [
-            (
-                "star_holed",
-                [
-                    [{"lat": la, "lon": lo} for la, lo in POLYGON],
-                    [{"lat": la, "lon": lo} for la, lo in POLYGON_HOLE],
-                ],
-                "test",
-            )
-        ],
-        "polygon_id string, rings array<array<struct<lat:double,lon:double>>>, category string",
-    )
-    return (
-        point_in_polygon_join(pts, poly, keep_polygon_cols=())
-        .select(F.col("id").alias("id"), F.col("polygon_id").alias("polygon_id"))
-        .orderBy("id")
-    )
 
 def _relation_fixture_polys(spark: SparkSession) -> DataFrame:
     """The star/square/hole multipolygon rebuilt from OSM relation
@@ -382,7 +339,6 @@ def _relation_fixture_polys(spark: SparkSession) -> DataFrame:
     unclosed chain that must be dropped, and a missing-way member —
     shared by the PIP and ring-metrics relation queries."""
     from .operators.relations import assemble_multipolygons
-    from .util import small_df
 
     unclosed = [(51.40, -0.45), (51.45, -0.45), (51.45, -0.40)]
     nodes = []

@@ -75,7 +75,9 @@ def read_blob_table(spark: SparkSession, path: str | Path) -> DataFrame:
 
     The index pass runs driver-side; payload fetch happens task-side via
     ``mapInPandas`` over the (Arrow-created) index — range reads, no RDD
-    API, no exchange.
+    API, no exchange. A short read (the file changed after indexing) or
+    a corrupt Blob message fails the task with a ValueError naming the
+    path, blob_seq and byte offset.
     """
     import pandas as pd
 
@@ -105,7 +107,13 @@ def read_blob_table(spark: SparkSession, path: str | Path) -> DataFrame:
                     pdf["blob_seq"], pdf["blob_type"], pdf["offset"], pdf["length"]
                 ):
                     f.seek(int(off))
-                    codec, raw_size, payload = split_blob(f.read(int(length)))
+                    blob = f.read(int(length))
+                    try:
+                        if len(blob) < length:
+                            raise ValueError(f"short read, {len(blob)} of {length} bytes")
+                        codec, raw_size, payload = split_blob(blob)
+                    except ValueError as e:
+                        raise ValueError(f"{path}: blob_seq={seq} at byte {off}: {e}") from None
                     out["blob_seq"].append(int(seq))
                     out["blob_type"].append(btype)
                     out["codec"].append(codec)

@@ -198,47 +198,51 @@ def encode_blocks(entities: DataFrame, codec: str = "zlib") -> DataFrame:
 
 def write_pbf(entities: DataFrame, path: str | Path, codec: str = "zlib") -> dict:
     """Write an entity DataFrame to a single framed .osm.pbf file."""
-    bbox = entities.where("entity_type='node'").agg(
-        F.min("lat_nano").alias("bottom"),
-        F.max("lat_nano").alias("top"),
-        F.min("lon_nano").alias("left"),
-        F.max("lon_nano").alias("right"),
-    ).first()
-    visible_false = entities.where("info.visible = false").limit(1).count() > 0
+    # everything the header needs, in one pass over the input
+    node = F.col("entity_type") == "node"
+    facts = [
+        F.min(F.when(node, F.col("lat_nano"))).alias("bottom"),
+        F.max(F.when(node, F.col("lat_nano"))).alias("top"),
+        F.min(F.when(node, F.col("lon_nano"))).alias("left"),
+        F.max(F.when(node, F.col("lon_nano"))).alias("right"),
+        F.expr("bool_or(info.visible = false)").alias("visible_false"),
+    ]
+    if "way_lats" in entities.columns:
+        # spec (osm.proto:232): a file whose ways carry inline locations
+        # MUST declare the optional feature. LocationsOnWays is
+        # all-or-nothing per file: the decoder (and the spec) require
+        # lat/lon counts to match refs on EVERY way, so mixed presence
+        # (e.g. assemble_way_geometries(how='left') output, or a union
+        # of sources with and without locations) would silently write a
+        # file our own decoder rejects. Validate eagerly with a clear
+        # error instead.
+        facts += [
+            F.expr(
+                "bool_or(entity_type='way' AND way_lats IS NOT NULL AND size(way_lats) > 0)"
+            ).alias("way_locs"),
+            F.expr(
+                "count_if(entity_type='way' AND size(refs) > 0 AND ("
+                " way_lats IS NULL OR way_lons IS NULL"
+                " OR size(way_lats) <> size(refs)"
+                " OR size(way_lons) <> size(refs)))"
+            ).alias("bad"),
+        ]
+    head = entities.agg(*facts).first().asDict()
+    way_locs = bool(head.get("way_locs"))
+    if way_locs and head["bad"]:
+        raise ValueError(
+            f"LocationsOnWays presence is mixed: {head['bad']} way(s) with refs lack "
+            "full-length way_lats/way_lons while others carry them. Either "
+            "supply locations for every way (assemble_way_geometries(how="
+            "'inner')) or drop the way_lats/way_lons columns to write the "
+            "file without LocationsOnWays."
+        )
     features = ["OsmSchema-V0.6", "DenseNodes"] + (
-        ["HistoricalInformation"] if visible_false else []
+        ["HistoricalInformation"] if head["visible_false"] else []
     )
-    # spec (osm.proto:232): a file whose ways carry inline locations MUST
-    # declare the optional feature
-    way_locs = "way_lats" in entities.columns and (
-        entities.where(
-            "entity_type='way' AND way_lats IS NOT NULL AND size(way_lats) > 0"
-        ).limit(1).count() > 0
-    )
-    if way_locs:
-        # LocationsOnWays is all-or-nothing per file: the decoder (and
-        # the spec) require lat/lon counts to match refs on EVERY way,
-        # so mixed presence (e.g. assemble_way_geometries(how='left')
-        # output, or a union of sources with and without locations)
-        # would silently write a file our own decoder rejects.
-        # Validate eagerly with a clear error instead.
-        bad = entities.where(
-            "entity_type='way' AND size(refs) > 0 AND ("
-            " way_lats IS NULL OR way_lons IS NULL"
-            " OR size(way_lats) <> size(refs)"
-            " OR size(way_lons) <> size(refs))"
-        ).count()
-        if bad:
-            raise ValueError(
-                f"LocationsOnWays presence is mixed: {bad} way(s) with refs lack "
-                "full-length way_lats/way_lons while others carry them. Either "
-                "supply locations for every way (assemble_way_geometries(how="
-                "'inner')) or drop the way_lats/way_lons columns to write the "
-                "file without LocationsOnWays."
-            )
     header = Header(
-        bbox_nano=(bbox["left"], bbox["right"], bbox["top"], bbox["bottom"])
-        if bbox["left"] is not None
+        bbox_nano=(head["left"], head["right"], head["top"], head["bottom"])
+        if head["left"] is not None
         else None,
         required_features=tuple(features),
         optional_features=("LocationsOnWays",) if way_locs else (),

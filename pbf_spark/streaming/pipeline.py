@@ -1,18 +1,19 @@
 """Structured-Streaming decode with checkpoint/resume (SURVEY.md §2B B9).
 
-The interleaved document table is consumed as a file stream
-(``readStream.parquet`` over the Iceberg-lite data dir with
-``availableNow``), joined stream-static against the media-blob sidecar,
-decoded by the same mapInArrow operator as the batch path, and written
-to a parquet sink with a ``checkpointLocation``.
+Every streaming query here has one shape: a parquet file stream
+(``_file_stream``, ``availableNow``) planned through to its output —
+for the document table, the stream-static join against the media-blob
+sidecar and the same mapInArrow decode as the batch path — and one
+sink (``_run``) with a ``checkpointLocation``.
 
 Resumability contract (north rule): the checkpoint records which input
 files each micro-batch committed; killing the query (or the process)
 and restarting with the same checkpoint resumes EXACTLY after the last
 committed batch — already-processed documents are never decoded twice,
 newly arrived document files are picked up. Per-batch lineage rows are
-appended from ``foreachBatch`` so every partition's decode is traceable
-and re-derivable (lineage.py).
+appended from ``foreachBatch``; the decode runs over the stream, so a
+micro-batch keeps its file splits and each lineage row is one input
+split's decode, traceable and re-derivable (lineage.py).
 """
 
 from __future__ import annotations
@@ -20,10 +21,43 @@ from __future__ import annotations
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..lineage import append_lineage
 from ..model.schema import DOCUMENT_SCHEMA
 from ..operators.decode import decode_documents
+
+EVENTS_SCHEMA = (
+    "event_id long, ts timestamp, user_id long, event_type string, "
+    "value double, props string"
+)
+
+
+def _file_stream(
+    spark: SparkSession, path: str | Path, schema, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """The one reader: every parquet file under ``path`` as a stream.
+    The file source tracks files, which matches the append-only commit
+    discipline of the tables it reads."""
+    reader = spark.readStream.schema(schema).option("recursiveFileLookup", "true")
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(str(path))
+
+
+def _run(stream: DataFrame, sink, checkpoint_dir: str | Path):
+    """The one sink runner: one availableNow pass of ``stream`` into
+    ``sink`` — an append-mode parquet directory, or a ``foreachBatch``
+    function — checkpointed at ``checkpoint_dir``. Waits for the pass
+    and returns the finished query."""
+    writer = stream.writeStream.option("checkpointLocation", str(checkpoint_dir))
+    if callable(sink):
+        writer = writer.foreachBatch(sink)
+    else:
+        writer = writer.outputMode("append").format("parquet").option("path", str(sink))
+    query = writer.trigger(availableNow=True).start()
+    query.awaitTermination()
+    return query
 
 
 def stream_decode_documents(
@@ -40,40 +74,29 @@ def stream_decode_documents(
     """Run one availableNow streaming pass; returns the finished query.
 
     ``docs_table_dir``: the Iceberg-lite table dir (data/ holds parquet
-    files; the file-stream source tracks files, which matches the
-    append-only commit discipline).
+    files).
 
     ``tag_filter``: the decode-side predicate pushdown (operators/decode
     ``decode_blobs``) — a replication-style "extract POIs as they
     arrive" stream materializes Arrow rows only for matching entities;
-    lineage then records the POST-filter counts per partition.
+    lineage then records the POST-filter counts per input split.
     """
-    reader = (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .option("recursiveFileLookup", "true")
+    entities = decode_documents(
+        _file_stream(spark, Path(docs_table_dir) / "data", DOCUMENT_SCHEMA, max_files_per_trigger),
+        media_blobs,
+        tag_filter=tag_filter,
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs_stream = reader.parquet(str(Path(docs_table_dir) / "data"))
 
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        entities = decode_documents(batch_df, media_blobs, tag_filter=tag_filter)
-        entities.persist()
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
+        batch.persist()
         try:
-            entities.write.mode("append").parquet(str(output_dir))
+            batch.write.mode("append").parquet(str(output_dir))
             if lineage_dir is not None:
-                append_lineage(entities, run_id, lineage_dir, batch_id)
+                append_lineage(batch, run_id, lineage_dir, batch_id)
         finally:
-            entities.unpersist()
+            batch.unpersist()
 
-    query = (
-        docs_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _run(entities, process_batch, checkpoint_dir)
 
 
 def stream_decode_windowed_counts(
@@ -97,16 +120,9 @@ def stream_decode_windowed_counts(
     with an intermediate table has a non-atomic boundary; a single
     stateful query does not.
     """
-    from pyspark.sql import functions as F
-
-    docs_stream = (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(Path(docs_table_dir) / "data"))
+    entities = decode_documents(
+        _file_stream(spark, Path(docs_table_dir) / "data", DOCUMENT_SCHEMA), media_blobs
     )
-    # same decode operator as batch; over a stream it adds no exchange
-    # (micro-batch file splits already parallelize)
-    entities = decode_documents(docs_stream, media_blobs)
     agg = (
         entities.where(F.col("info.ts").isNotNull())
         .withColumn("ts", F.col("info.ts"))
@@ -119,16 +135,7 @@ def stream_decode_windowed_counts(
             "n",
         )
     )
-    query = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(output_dir))
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _run(agg, output_dir, checkpoint_dir)
 
 
 def stream_windowed_event_counts(
@@ -138,28 +145,19 @@ def stream_windowed_event_counts(
     checkpoint_dir: str | Path,
     window_duration: str = "1 hour",
     watermark: str = "2 hours",
-    schema=None,
 ):
-    """Watermarked windowed aggregation over an event file stream (the
-    late-data contract): counts + value sums per (event-time window,
-    event_type), append-mode so a window only emits once its watermark
-    passes — rows later than ``watermark`` behind the max seen event
-    time are dropped by construction, bounding state at 100-TB stream
-    scale. availableNow + checkpoint make the aggregation resumable
+    """Watermarked windowed aggregation over an ``EVENTS_SCHEMA`` file
+    stream (the late-data contract): counts + value sums per (event-time
+    window, event_type), append-mode so a window only emits once its
+    watermark passes — rows later than ``watermark`` behind the max seen
+    event time are dropped by construction, bounding state at 100-TB
+    stream scale. availableNow + checkpoint make the aggregation resumable
     exactly like the decode stream; run again after new files arrive
     and only unemitted/updated windows append.
     """
-    from pyspark.sql import functions as F
-
-    if schema is None:
-        schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(events_dir))
-    )
     agg = (
-        stream.withWatermark("ts", watermark)
+        _file_stream(spark, events_dir, EVENTS_SCHEMA)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window_duration).alias("win"), "event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
@@ -170,16 +168,7 @@ def stream_windowed_event_counts(
             "sum_value",
         )
     )
-    query = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(output_dir))
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _run(agg, output_dir, checkpoint_dir)
 
 
 _SESSION_OUT = (
@@ -257,16 +246,7 @@ def _run_session_query(
             fn, _SESSION_OUT, _SESSION_STATE, "append", GroupStateTimeout.EventTimeTimeout
         )
     )
-    query = (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(output_dir))
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _run(sessions, output_dir, checkpoint_dir)
 
 
 def stream_decode_user_sessions(
@@ -288,14 +268,9 @@ def stream_decode_user_sessions(
     closed session re-emits. This is the composition the round-4
     pipeline lacked (P5 composed decode with a *windowed agg*; the
     custom-state operator only ran on pre-decoded events)."""
-    from pyspark.sql import functions as F
-
-    docs_stream = (
-        spark.readStream.schema(DOCUMENT_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(Path(docs_table_dir) / "data"))
+    entities = decode_documents(
+        _file_stream(spark, Path(docs_table_dir) / "data", DOCUMENT_SCHEMA), media_blobs
     )
-    entities = decode_documents(docs_stream, media_blobs)
     edits = (
         entities.where(F.col("info.ts").isNotNull() & F.col("info.uid").isNotNull())
         .select(
@@ -314,14 +289,13 @@ def stream_user_sessions(
     checkpoint_dir: str | Path,
     gap: str = "30 minutes",
     watermark: str = "0 seconds",
-    schema=None,
 ):
     """Custom stateful sessionization via ``applyInPandasWithState``.
 
-    Groups the event stream by user and maintains one open session per
-    user in explicit state: events closer than ``gap`` extend the
-    session, a larger gap (or an event-time timeout once the watermark
-    passes last_event + gap) closes it and emits (user_id,
+    Groups the ``EVENTS_SCHEMA`` stream by user and maintains one open
+    session per user in explicit state: events closer than ``gap``
+    extend the session, a larger gap (or an event-time timeout once the
+    watermark passes last_event + gap) closes it and emits (user_id,
     session_start, session_end, n_events, sum_value). This is the
     operator shape Spark's built-in windows can't express when the
     emission rule is custom — per-key state + event-time timeouts keep
@@ -339,14 +313,9 @@ def stream_user_sessions(
     already-emitted session cannot be extended by a yet-later arrival in
     a future batch — append-mode state emission is one-shot.
     """
-    if schema is None:
-        schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(events_dir))
+    return _run_session_query(
+        _file_stream(spark, events_dir, EVENTS_SCHEMA), gap, watermark, output_dir, checkpoint_dir
     )
-    return _run_session_query(stream, gap, watermark, output_dir, checkpoint_dir)
 
 
 _DURATION_MULT_US = {

@@ -278,6 +278,18 @@ def test_spread_owns_every_repartition():
     assert repartition_calls(PACKAGE) == []
 
 
+def test_pipeline_has_one_reader_and_one_sink():
+    """Every streaming query reads through ``_file_stream`` and writes
+    through ``_run``: ``readStream`` and ``writeStream`` each appear in
+    one place in ``streaming/pipeline.py``."""
+    tree = ast.parse((PACKAGE / "streaming" / "pipeline.py").read_text())
+    lines = {"readStream": [], "writeStream": []}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr in lines:
+            lines[node.attr].append(node.lineno)
+    assert [len(v) for v in lines.values()] == [1, 1], lines
+
+
 def test_streaming_decode_plans_no_exchange(spark, fixture_dir):
     """Over a stream, decode_documents keeps the micro-batch file splits:
     the only exchange is the broadcast of the static blob side."""

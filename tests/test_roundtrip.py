@@ -75,6 +75,28 @@ def test_roundtrip_digest(spark, entities, fixture_manifest, tmp_path_factory):
     assert bb["left"] >= fixture_manifest["bbox"]["left"] - 1e-6
 
 
+@pytest.mark.parametrize("damage", ["truncate", "corrupt"])
+def test_blob_read_error_names_file_and_offset(spark, entities, tmp_path_factory, damage):
+    """A file that changes after ``index_blobs`` fails the task-side
+    read: a short read or a corrupt Blob message raises a ValueError
+    naming the path, the blob_seq and its byte offset."""
+    from pyspark.errors import PythonException
+
+    out = tmp_path_factory.mktemp("damaged") / "damaged.osm.pbf"
+    pbf_sink.write_pbf(entities, out)
+    blobs = pbf_file.read_blob_table(spark, out)  # indexes the intact file
+    seq, _, off, length = pbf_file.index_blobs(out)[-1]
+    with open(out, "r+b") as f:
+        if damage == "truncate":
+            f.truncate(off + length - 1)
+        else:
+            f.seek(off)
+            f.write(b"\x07")  # a key with wire type 7: not a Blob message
+    with pytest.raises(PythonException) as err:
+        blobs.collect()
+    assert f"{out}: blob_seq={seq} at byte {off}" in str(err.value)
+
+
 def test_encode_blocks_spreads_over_partitions(entities):
     """All three entity types reach more than one encode task: a keyed
     ``repartition("entity_type")`` lets AQE coalesce them into one."""

@@ -509,3 +509,21 @@ def test_stream_tag_filter_survives_restart(spark, fixture_dir, blobs, tmp_path_
     # lineage totals reconcile with the post-filter output across BOTH runs
     lin_df = lineage.read_lineage(spark, lin)
     assert lin_df.agg(F.sum("n_rows")).first()[0] == 2 * n1
+
+
+def test_stream_lineage_row_per_input_split(spark, fixture_dir, blobs, tmp_path_factory):
+    """The decode runs over the stream, so a micro-batch keeps its file
+    splits: with one (small) document file per trigger, every
+    micro-batch writes exactly one lineage row, and the rows reconcile
+    with the output."""
+    tmp = tmp_path_factory.mktemp("stream_split")
+    out, ckpt, lin = tmp / "entities", tmp / "ckpt", tmp / "lineage"
+    docs = fixture_dir / "documents_interleaved"
+    q = stream_decode_documents(
+        spark, docs, blobs, out, ckpt, lin, run_id="split", max_files_per_trigger=1
+    )
+    batches = sorted(p.batchId for p in q.recentProgress if p.numInputRows > 0)
+    assert len(batches) == len(list((docs / "data").glob("*.parquet")))
+    rows = lineage.read_lineage(spark, lin).collect()
+    assert sorted(r["batch_id"] for r in rows) == batches
+    assert sum(r["n_rows"] for r in rows) == spark.read.parquet(str(out)).count()
