@@ -58,9 +58,11 @@ def partition_lineage(entities: DataFrame, run_id: str, batch_id: int = 0) -> Da
 
     Aggregates within each physical partition (spark_partition_id), so
     the record maps 1:1 to a task's output — the unit of resumability.
-    A stream-decoded micro-batch keeps its file splits, so there each
-    row is one input split (a document file, or a byte range of one)
-    and its decode.
+    In the document stream a row is one decode partition of a
+    micro-batch: the blob-table scan partition (a file, a byte range of
+    one, or several small files packed together) that holds a one-blob
+    batch's blob, or one spread partition of a larger batch
+    (``streaming.pipeline._fan_out``).
     """
     return (
         entities.withColumn("_pid", F.spark_partition_id())

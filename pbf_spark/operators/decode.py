@@ -388,18 +388,11 @@ def decode_blobs(
     )
 
 
-def decode_documents(
-    docs: DataFrame,
-    media_blobs: DataFrame,
-    columns: frozenset[str] | set[str] | None = None,
-    kinds: tuple[str, ...] | None = None,
-    slim: bool = False,
-    tag_filter=None,
-) -> DataFrame:
-    """Interleaved document table + blob sidecar → entity DataFrame (B1+B2).
+def document_blobs(docs: DataFrame, media_blobs: DataFrame) -> DataFrame:
+    """The blob rows a document table's media spans point at.
 
     ``posexplode(spans)`` keeps the span order index as provenance; only
-    media spans are decoded. The join to the sidecar is on media_ref — at
+    media spans are kept. The join to the sidecar is on media_ref — at
     scale both tables should be bucketed by media_ref so this co-locates
     (documented seam; in local mode AQE picks the strategy).
     """
@@ -412,13 +405,25 @@ def decode_documents(
             F.col("span.media_ref").alias("media_ref"),
         )
     )
-    joined = spans.join(media_blobs, "media_ref").select(
+    return spans.join(media_blobs, "media_ref").select(
         "doc_id", "span_idx", "blob_seq", "blob_type", "codec", "raw_size", "payload"
     )
+
+
+def decode_documents(
+    docs: DataFrame,
+    media_blobs: DataFrame,
+    columns: frozenset[str] | set[str] | None = None,
+    kinds: tuple[str, ...] | None = None,
+    slim: bool = False,
+    tag_filter=None,
+) -> DataFrame:
+    """Interleaved document table + blob sidecar → entity DataFrame (B1+B2):
+    ``document_blobs`` decoded."""
     # Blob rows are ~100 KB-1 MB each, so byte-based split/AQE sizing
     # wildly underestimates decode CPU: one task per core (util.spread;
-    # a streaming plan keeps its file splits)
-    joined = spread(joined)
+    # a streaming plan keeps the join's partitions)
+    joined = spread(document_blobs(docs, media_blobs))
     return decode_blobs(joined, columns, kinds=kinds, slim=slim, tag_filter=tag_filter)
 
 

@@ -215,7 +215,8 @@ def write_pbf(entities: DataFrame, path: str | Path, codec: str = "zlib") -> dic
         # (e.g. assemble_way_geometries(how='left') output, or a union
         # of sources with and without locations) would silently write a
         # file our own decoder rejects. Validate eagerly with a clear
-        # error instead.
+        # error instead; the count rides in the same pass, so it reads
+        # refs and both location columns even when no way has locations.
         facts += [
             F.expr(
                 "bool_or(entity_type='way' AND way_lats IS NOT NULL AND size(way_lats) > 0)"

@@ -3,17 +3,19 @@
 Every streaming query here has one shape: a parquet file stream
 (``_file_stream``, ``availableNow``) planned through to its output —
 for the document table, the stream-static join against the media-blob
-sidecar and the same mapInArrow decode as the batch path — and one
-sink (``_run``) with a ``checkpointLocation``.
+sidecar (``document_blobs``) and the same mapInArrow decode as the
+batch path — and one sink (``_run``) with a ``checkpointLocation``.
+``stream_decode_documents`` stops the streaming plan at the join: how
+to partition the decode depends on how many blobs a micro-batch holds
+(``_fan_out``), which only its ``foreachBatch`` can see.
 
 Resumability contract (north rule): the checkpoint records which input
 files each micro-batch committed; killing the query (or the process)
 and restarting with the same checkpoint resumes EXACTLY after the last
 committed batch — already-processed documents are never decoded twice,
 newly arrived document files are picked up. Per-batch lineage rows are
-appended from ``foreachBatch``; the decode runs over the stream, so a
-micro-batch keeps its file splits and each lineage row is one input
-split's decode, traceable and re-derivable (lineage.py).
+appended from ``foreachBatch``, one per decode partition, each
+traceable and re-derivable (lineage.py).
 """
 
 from __future__ import annotations
@@ -25,7 +27,8 @@ from pyspark.sql import functions as F
 
 from ..lineage import append_lineage
 from ..model.schema import DOCUMENT_SCHEMA
-from ..operators.decode import decode_documents
+from ..operators.decode import decode_blobs, decode_documents, document_blobs
+from ..util import spread
 
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -60,6 +63,18 @@ def _run(stream: DataFrame, sink, checkpoint_dir: str | Path):
     return query
 
 
+def _fan_out(blobs: DataFrame) -> DataFrame:
+    """Partition a micro-batch's blob rows for the decode.
+
+    The stream-static join leaves them in the blob table's file splits,
+    which follow bytes on disk, not decode work. One blob decodes where
+    it is, without an exchange; two or more are spread one per core
+    (``util.spread``). Whether there is a second blob is read with one
+    small job over the batch.
+    """
+    return spread(blobs) if len(blobs.select("blob_seq").take(2)) > 1 else blobs
+
+
 def stream_decode_documents(
     spark: SparkSession,
     docs_table_dir: str | Path,
@@ -79,24 +94,23 @@ def stream_decode_documents(
     ``tag_filter``: the decode-side predicate pushdown (operators/decode
     ``decode_blobs``) — a replication-style "extract POIs as they
     arrive" stream materializes Arrow rows only for matching entities;
-    lineage then records the POST-filter counts per input split.
+    lineage then records the POST-filter counts per decode partition.
     """
-    entities = decode_documents(
+    blobs = document_blobs(
         _file_stream(spark, Path(docs_table_dir) / "data", DOCUMENT_SCHEMA, max_files_per_trigger),
         media_blobs,
-        tag_filter=tag_filter,
     )
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        batch.persist()
+        entities = decode_blobs(_fan_out(batch), tag_filter=tag_filter).persist()
         try:
-            batch.write.mode("append").parquet(str(output_dir))
+            entities.write.mode("append").parquet(str(output_dir))
             if lineage_dir is not None:
-                append_lineage(batch, run_id, lineage_dir, batch_id)
+                append_lineage(entities, run_id, lineage_dir, batch_id)
         finally:
-            batch.unpersist()
+            entities.unpersist()
 
-    return _run(entities, process_batch, checkpoint_dir)
+    return _run(blobs, process_batch, checkpoint_dir)
 
 
 def stream_decode_windowed_counts(

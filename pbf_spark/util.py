@@ -24,12 +24,13 @@ def spread(df: DataFrame, *keys) -> DataFrame:
     """Fan ``df`` out to one partition per core before Python-heavy work.
 
     The one owner of that decision in the package. A streaming frame
-    comes back unchanged (its file splits already parallelize each
-    micro-batch); any other frame is hash-partitioned on ``keys`` (give
-    a unique key: even, deterministic spread) or, with no key,
-    round-robin. The count stays explicit: AQE sizes a keyed exchange by
-    bytes and coalesces a few MB of rows whose Python cost is seconds
-    into one or two tasks.
+    comes back unchanged (its plan is fixed for every micro-batch, so a
+    per-batch fan-out is made in ``foreachBatch``, as
+    ``streaming.pipeline._fan_out`` does); any other frame is
+    hash-partitioned on ``keys`` (give a unique key: even, deterministic
+    spread) or, with no key, round-robin. The count stays explicit: AQE
+    sizes a keyed exchange by bytes and coalesces a few MB of rows whose
+    Python cost is seconds into one or two tasks.
     """
     if df.isStreaming:
         return df

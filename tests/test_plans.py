@@ -290,9 +290,24 @@ def test_pipeline_has_one_reader_and_one_sink():
     assert [len(v) for v in lines.values()] == [1, 1], lines
 
 
+def test_stream_fan_out_follows_blob_count(spark, fixture_dir):
+    """A micro-batch holding one blob decodes where it is, without an
+    exchange; two or more blobs are spread one per core."""
+    from pyspark.sql import functions as F
+
+    from pbf_spark.sources import iceberg_lite
+    from pbf_spark.streaming.pipeline import _fan_out
+
+    blobs = iceberg_lite.read_table(spark, fixture_dir / "media_blobs")
+    first = blobs.agg(F.min("blob_seq")).first()[0]
+    assert "Exchange" not in plan_of(_fan_out(blobs.where(F.col("blob_seq") == first)))
+    assert "RoundRobinPartitioning" in plan_of(_fan_out(blobs))
+
+
 def test_streaming_decode_plans_no_exchange(spark, fixture_dir):
-    """Over a stream, decode_documents keeps the micro-batch file splits:
-    the only exchange is the broadcast of the static blob side."""
+    """Over a stream, decode_documents adds no exchange of its own: the
+    only one is the broadcast of the micro-batch's media spans, which
+    the blob table's splits probe."""
     from pbf_spark.model.schema import DOCUMENT_SCHEMA
     from pbf_spark.operators.decode import decode_documents
     from pbf_spark.sources import iceberg_lite

@@ -511,19 +511,44 @@ def test_stream_tag_filter_survives_restart(spark, fixture_dir, blobs, tmp_path_
     assert lin_df.agg(F.sum("n_rows")).first()[0] == 2 * n1
 
 
-def test_stream_lineage_row_per_input_split(spark, fixture_dir, blobs, tmp_path_factory):
-    """The decode runs over the stream, so a micro-batch keeps its file
-    splits: with one (small) document file per trigger, every
-    micro-batch writes exactly one lineage row, and the rows reconcile
+def test_stream_lineage_row_per_decode_partition(spark, fixture_dir, blobs, tmp_path_factory):
+    """A micro-batch with one blob decodes in one partition, so it
+    writes one lineage row; the fixture's one multi-blob micro-batch is
+    spread over several partitions, one lineage row each. Both reconcile
     with the output."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     tmp = tmp_path_factory.mktemp("stream_split")
-    out, ckpt, lin = tmp / "entities", tmp / "ckpt", tmp / "lineage"
-    docs = fixture_dir / "documents_interleaved"
-    q = stream_decode_documents(
-        spark, docs, blobs, out, ckpt, lin, run_id="split", max_files_per_trigger=1
-    )
-    batches = sorted(p.batchId for p in q.recentProgress if p.numInputRows > 0)
-    assert len(batches) == len(list((docs / "data").glob("*.parquet")))
-    rows = lineage.read_lineage(spark, lin).collect()
-    assert sorted(r["batch_id"] for r in rows) == batches
-    assert sum(r["n_rows"] for r in rows) == spark.read.parquet(str(out)).count()
+    # one document file per media span: one blob per micro-batch
+    src = pq.read_table(fixture_dir / "documents_interleaved" / "data").to_pylist()
+    one_blob = tmp / "one_blob" / "data"
+    one_blob.mkdir(parents=True)
+    schema = pq.read_schema(next((fixture_dir / "documents_interleaved" / "data").glob("*.parquet")))
+    n = 0
+    for doc in src:
+        for span in doc["spans"]:
+            if span["kind"] == "media":
+                row = {"doc_id": doc["doc_id"], "spans": [span]}
+                pq.write_table(pa.Table.from_pylist([row], schema), one_blob / f"part-{n:03d}.parquet")
+                n += 1
+    assert n > 1
+
+    for name, docs, per_trigger in (
+        ("one", tmp / "one_blob", 1),
+        ("all", fixture_dir / "documents_interleaved", None),
+    ):
+        out, ckpt, lin = tmp / name / "entities", tmp / name / "ckpt", tmp / name / "lineage"
+        q = stream_decode_documents(
+            spark, docs, blobs, out, ckpt, lin, run_id=name, max_files_per_trigger=per_trigger
+        )
+        batches = sorted(p.batchId for p in q.recentProgress if p.numInputRows > 0)
+        rows = lineage.read_lineage(spark, lin).collect()
+        assert sum(r["n_rows"] for r in rows) == spark.read.parquet(str(out)).count()
+        if name == "one":
+            # the header blob decodes to no rows, so writes no lineage row
+            assert len(batches) == n
+            assert len({r["batch_id"] for r in rows}) == len(rows) >= n - 1
+        else:
+            assert len(batches) == 1
+            assert 1 < len(rows) <= spark.sparkContext.defaultParallelism
