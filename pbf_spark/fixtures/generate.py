@@ -14,7 +14,9 @@ Produces the engine's primary input per BASELINE.json ``input_hint``:
 
 Wire layout mirrors the reference encoder so decode tests are meaningful
 (FIXTURES.md "generator contract"): dense nodes, ≤8000 entities/block,
-sorted block-local string table, granularity 100, date_granularity 1000.
+sorted block-local string table, granularity 100, date_granularity 1000,
+zlib blobs. Each kind is one Arrow table of entity columns, encoded by
+``osmformat.encode_block`` like the PBF sink's blocks.
 Default profile ``london-mini`` uses the greater-london header bbox
 (/root/reference/cmd/pbf/info/info_test.go:40) with density-skewed
 clusters — the skew is deliberate, it feeds the salted-repartition tests.
@@ -29,20 +31,20 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from ..model.schema import ENTITY_ARROW_SCHEMA
 from ..sources import iceberg_lite
 from ..wire import frame as wire_frame
 from ..wire.osmformat import (
     ENTITY_LIMIT,
+    MEMBER_TYPE_NAMES,
     Header,
-    StringTable,
-    build_dense_nodes_group,
     build_header_block,
-    build_primitive_block,
-    build_relations_group,
-    build_ways_group,
+    encode_block,
 )
 
 LONDON_BBOX = {"top": 51.69344, "left": -0.511482, "bottom": 51.28554, "right": 0.335437}
+
+_TYPE = {f.name: f.type for f in ENTITY_ARROW_SCHEMA}
 
 _TAG_KEYS = ["highway", "amenity", "shop", "name", "surface", "building", "landuse", "natural"]
 _TAG_VALS = {
@@ -116,15 +118,21 @@ def _gen_tags(rng: np.random.Generator, n: int, frac_tagged: float):
     return out
 
 
-def _gen_info(rng: np.random.Generator, n: int, users: list[str]):
-    return {
-        "version": rng.integers(1, 6, n).astype(np.int64),
-        "ts_ms": rng.integers(1_420_070_400, 1_735_689_600, n).astype(np.int64) * 1000,
-        "changeset": np.sort(rng.integers(1_000_000, 9_000_000, n)).astype(np.int64),
-        "uid": rng.integers(100, 100 + len(users), n).astype(np.int64) - 100,
-        "user": None,  # filled below
-        "visible": (rng.random(n) > 0.005).astype(np.int64),
-    }
+def _tags(tags: list[list[tuple[str, str]]]) -> pa.Array:
+    return pa.array([[{"key": k, "value": v} for k, v in t] for t in tags], _TYPE["tags"])
+
+
+def _gen_info(rng: np.random.Generator, n: int, users: list[str]) -> pa.Array:
+    """Node Info column (``ts`` in epoch microseconds, whole seconds)."""
+    version = rng.integers(1, 6, n)
+    ts = rng.integers(1_420_070_400, 1_735_689_600, n) * 1_000_000
+    changeset = np.sort(rng.integers(1_000_000, 9_000_000, n))
+    uid = rng.integers(100, 100 + len(users), n) - 100
+    visible = rng.random(n) > 0.005
+    cols = {"version": version, "uid": uid + 100, "ts": ts, "changeset": changeset,
+            "user": [users[i] for i in uid], "visible": visible}
+    fields = list(_TYPE["info"])
+    return pa.StructArray.from_arrays([pa.array(cols[f.name], f.type) for f in fields], fields=fields)
 
 
 def generate(
@@ -134,7 +142,6 @@ def generate(
     n_relations: int = 95,
     seed: int = 42,
     spans_per_doc: int = 4,
-    codec: str = "zlib",
     write_pbf_file: bool = True,
     bbox: dict = LONDON_BBOX,
     n_polygons: int = 24,
@@ -147,42 +154,48 @@ def generate(
 
     # ---- nodes ----
     lat_deg, lon_deg = _gen_points(rng, n_nodes, bbox)
-    lat_nano = _nano_grid(lat_deg)
-    lon_nano = _nano_grid(lon_deg)
     node_ids = np.cumsum(rng.integers(1, 20, n_nodes)) + 1_000_000
-    node_tags = _gen_tags(rng, n_nodes, 0.25)
-    node_info = _gen_info(rng, n_nodes, users)
-    node_info["user"] = [users[i] for i in node_info["uid"]]
-    node_info["uid"] = node_info["uid"] + 100
+    node_tags = _tags(_gen_tags(rng, n_nodes, 0.25))
+    nodes = pa.table(
+        {
+            "id": node_ids,
+            "lat_nano": _nano_grid(lat_deg),
+            "lon_nano": _nano_grid(lon_deg),
+            "tags": node_tags,
+            "info": _gen_info(rng, n_nodes, users),
+        }
+    )
 
     # ---- ways: runs of consecutive node ids ----
     way_ids = np.cumsum(rng.integers(1, 10, n_ways)) + 50_000_000
     way_lens = rng.integers(2, 30, n_ways)
     way_starts = rng.integers(0, max(1, n_nodes - 31), n_ways)
-    way_tags = _gen_tags(rng, n_ways, 0.6)
-    ways = [
+    way_tags = _tags(_gen_tags(rng, n_ways, 0.6))
+    way_info = [
         {
-            "id": int(way_ids[i]),
-            "refs": node_ids[way_starts[i] : way_starts[i] + way_lens[i]].tolist(),
-            "tags": way_tags[i],
-            "info": {
-                "version": int(rng.integers(1, 4)),
-                "ts_ms": int(rng.integers(1_420_070_400, 1_735_689_600)) * 1000,
-                "changeset": int(rng.integers(1_000_000, 9_000_000)),
-                "uid": int(rng.integers(100, 300)),
-                "user": users[int(rng.integers(0, len(users)))],
-            },
+            "version": int(rng.integers(1, 4)),
+            "ts": int(rng.integers(1_420_070_400, 1_735_689_600)) * 1_000_000,
+            "changeset": int(rng.integers(1_000_000, 9_000_000)),
+            "uid": int(rng.integers(100, 300)),
+            "user": users[int(rng.integers(0, len(users)))],
         }
-        for i in range(n_ways)
+        for _ in range(n_ways)
     ]
+    ways = pa.table(
+        {
+            "id": way_ids,
+            "tags": way_tags,
+            "refs": pa.array([node_ids[s : s + k] for s, k in zip(way_starts, way_lens)], _TYPE["refs"]),
+            "info": pa.array(way_info, _TYPE["info"]),
+        }
+    )
 
     # ---- relations ----
     rel_ids = np.cumsum(rng.integers(1, 5, n_relations)) + 90_000_000
-    relations = []
-    for i in range(n_relations):
-        n_members = int(rng.integers(2, 8))
+    rel_members, rel_tags = [], []
+    for _ in range(n_relations):
         members = []
-        for _ in range(n_members):
+        for _ in range(int(rng.integers(2, 8))):
             t = int(rng.integers(0, 3))
             if t == 0:
                 ref = int(node_ids[rng.integers(0, n_nodes)])
@@ -190,56 +203,27 @@ def generate(
                 ref = int(way_ids[rng.integers(0, n_ways)])
             else:
                 ref = int(rel_ids[rng.integers(0, n_relations)])
-            members.append({"ref": ref, "type": t, "role": ["outer", "inner", "", "stop"][int(rng.integers(0, 4))]})
-        relations.append(
-            {
-                "id": int(rel_ids[i]),
-                "tags": [("type", "multipolygon")] if rng.random() < 0.5 else [],
-                "members": members,
-            }
-        )
+            role = ["outer", "inner", "", "stop"][int(rng.integers(0, 4))]
+            members.append({"ref": ref, "type": MEMBER_TYPE_NAMES[t], "role": role})
+        rel_members.append(members)
+        rel_tags.append([("type", "multipolygon")] if rng.random() < 0.5 else [])
+    relations = pa.table(
+        {
+            "id": rel_ids,
+            "tags": _tags(rel_tags),
+            "members": pa.array(rel_members, _TYPE["members"]),
+            "info": pa.nulls(n_relations, _TYPE["info"]),
+        }
+    )
 
     # ---- blocks → blobs (≤8000 entities per block, one group per block) ----
     # store the compressed payload (what the decode UDF consumes); the Blob
     # proto wrapper is only assembled when writing the standalone .pbf file
     blobs: list[tuple[str, bytes, int]] = []  # (type, compressed_payload, raw_size)
-
-    def add_block(groups, table):
-        raw = build_primitive_block(groups, table)
-        blobs.append(("OSMData", wire_frame.compress_payload(raw, codec), len(raw)))
-
-    for s in range(0, n_nodes, ENTITY_LIMIT):
-        e = min(s + ENTITY_LIMIT, n_nodes)
-        st = StringTable()
-        for t in node_tags[s:e]:
-            for k, v in t:
-                st.add(k, v)
-        st.add_array(node_info["user"][s:e])
-        table, sid = st.build()
-        info = {k: (v[s:e] if not isinstance(v, list) else v[s:e]) for k, v in node_info.items()}
-        g = build_dense_nodes_group(
-            node_ids[s:e], lat_nano[s:e], lon_nano[s:e], node_tags[s:e], sid, info=info
-        )
-        add_block([g], table)
-    for s in range(0, n_ways, ENTITY_LIMIT):
-        chunk = ways[s : s + ENTITY_LIMIT]
-        st = StringTable()
-        for w in chunk:
-            for k, v in w["tags"]:
-                st.add(k, v)
-            st.add(w["info"]["user"])
-        table, sid = st.build()
-        add_block([build_ways_group(chunk, sid)], table)
-    for s in range(0, n_relations, ENTITY_LIMIT):
-        chunk = relations[s : s + ENTITY_LIMIT]
-        st = StringTable()
-        for r in chunk:
-            for k, v in r["tags"]:
-                st.add(k, v)
-            for m in r["members"]:
-                st.add(m["role"])
-        table, sid = st.build()
-        add_block([build_relations_group(chunk, sid)], table)
+    for kind, table in (("node", nodes), ("way", ways), ("relation", relations)):
+        for s in range(0, table.num_rows, ENTITY_LIMIT):
+            raw = encode_block(kind, table.slice(s, ENTITY_LIMIT))
+            blobs.append(("OSMData", wire_frame.compress_payload(raw), len(raw)))
 
     header = Header(
         bbox_nano=(
@@ -253,18 +237,18 @@ def generate(
         source="synthetic-seed-42",
     )
     header_raw = build_header_block(header)
-    header_payload = wire_frame.compress_payload(header_raw, codec)
+    header_payload = wire_frame.compress_payload(header_raw)
 
     # ---- standalone PBF file ----
     if write_pbf_file:
         with open(out_dir / "fixture.osm.pbf", "wb") as f:
             f.write(
                 wire_frame.frame_blob(
-                    "OSMHeader", wire_frame.build_blob(codec, len(header_raw), header_payload)
+                    "OSMHeader", wire_frame.build_blob("zlib", len(header_raw), header_payload)
                 )
             )
             for btype, payload, raw_size in blobs:
-                f.write(wire_frame.frame_blob(btype, wire_frame.build_blob(codec, raw_size, payload)))
+                f.write(wire_frame.frame_blob(btype, wire_frame.build_blob("zlib", raw_size, payload)))
 
     # ---- media_blobs sidecar (header blob is blob_seq 0) ----
     all_blobs = [("OSMHeader", header_payload, len(header_raw))] + blobs
@@ -274,7 +258,7 @@ def generate(
             "media_ref": pa.array(media_refs, pa.string()),
             "blob_seq": pa.array(range(len(all_blobs)), pa.int64()),
             "blob_type": pa.array([b[0] for b in all_blobs], pa.string()),
-            "codec": pa.array([codec] * len(all_blobs), pa.string()),
+            "codec": pa.array(["zlib"] * len(all_blobs), pa.string()),
             "raw_size": pa.array([b[2] for b in all_blobs], pa.int32()),
             "payload": pa.array([b[1] for b in all_blobs], pa.binary()),
         }
@@ -351,7 +335,7 @@ def generate(
         "n_blobs": len(all_blobs),
         "n_docs": n_docs,
         "spans_per_doc": spans_per_doc,
-        "codec": codec,
+        "codec": "zlib",
         "granularity": 100,
         "date_granularity": 1000,
     }

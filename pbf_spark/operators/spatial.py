@@ -4,7 +4,7 @@ Filter-refine spatial join, the classic distributed pattern:
 
 1. polygons → adaptive multi-level S2 covering (coarse cells interior,
    fine at the boundary — spatial/covering.py), computed DISTRIBUTED via
-   mapInPandas and **broadcast** — no shuffle of the big point side
+   mapInArrow and **broadcast** — no shuffle of the big point side
    beyond the cell equi-join, no driver-side polygon collect;
 2. candidate pairs by ancestor-cell equality: points explode to their
    (≤3) ancestor ids — pure bit math — and hash-join the covering once;

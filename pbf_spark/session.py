@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -29,6 +30,11 @@ def get_spark(
       bytes — the big setting is safe there too.
     - shuffle partitions sized to cores locally (cluster deployments
       override via spark-submit conf; AQE coalesces the excess)
+    - local dirs from the environment: ``spark.local.dir`` (shuffle,
+      spill) is ``SPARK_LOCAL_DIRS``, and the warehouse of managed (e.g.
+      bucketed) tables sits in its first dir; without it both go under
+      the system temp dir. No node-specific path, so one code path
+      serves local and cluster runs
     - Python workers fork from ``pbf_spark.worker_daemon``: stock
       workers re-read the zip directories of ~16 importers (over
       ``pyspark.zip``, the spark-core jar and py4j) on every task,
@@ -38,6 +44,8 @@ def get_spark(
       the workers' PYTHONPATH or working directory.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    env_dirs = os.environ.get("SPARK_LOCAL_DIRS")
+    local_root = (env_dirs or tempfile.gettempdir()).split(",")[0]
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         n = master.removeprefix("local[").removesuffix("]")
@@ -62,13 +70,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.ui.enabled", "false")
-        # managed (e.g. bucketed) tables land in tmpfs, not the repo tree
-        .config("spark.sql.warehouse.dir", "/dev/shm/pbf-spark-warehouse")
+        .config("spark.sql.warehouse.dir", os.path.join(local_root, "pbf-spark-warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        # this sandbox's disk shows multi-second IO stalls (loadavg >> with
-        # idle CPU); shuffle/spill through tmpfs — a cluster's local SSDs
-        # play this role in production
-        .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/dev/shm/pbf-spark-local"))
+        .config("spark.local.dir", env_dirs or os.path.join(local_root, "pbf-spark-local"))
         .config(*WORKER_DAEMON_CONF)
     )
     for k, v in (extra_conf or {}).items():

@@ -27,12 +27,14 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from .proto import WT_I32, WT_I64, WT_LEN, WT_VARINT, MessageBuilder, parse_message, scan_fields
 from .varint import (
     decode_varint,
     decode_varints,
     encode_varints,
+    varint_sizes,
     zigzag_decode,
     zigzag_encode,
 )
@@ -772,186 +774,177 @@ def to_degrees(nano: np.ndarray) -> np.ndarray:
 
 
 # --------------------------------------------------------------------------
-# encode (fixture generator / PBF sink)
+# encode (PBF sink / fixture generator)
 # --------------------------------------------------------------------------
 
+_MEMBER_TYPES = pa.array(MEMBER_TYPE_NAMES.tolist())  # member type string → enum 0/1/2
 
-class StringTable:
-    """Block-local sorted dictionary, "" reserved at index 0.
 
-    Mirrors /root/reference/internal/encoder/table.go:20-84.
+def _ragged(col: pa.Array) -> tuple[np.ndarray, pa.Array]:
+    """List column → (offsets[n+1], flat values); a null list is empty."""
+    off = np.zeros(len(col) + 1, dtype=np.int64)
+    np.cumsum(pc.list_value_length(col).fill_null(0).to_numpy(), out=off[1:])
+    return off, pc.list_flatten(col)
+
+
+def _sints(vals, off: np.ndarray) -> np.ndarray:
+    """Zigzag deltas restarting at each segment ``off[i]:off[i+1]`` —
+    calcDeltas (encoder/primitive.go:267-280) per entity."""
+    v = np.asarray(vals, dtype=np.int64)
+    d = np.diff(v, prepend=np.int64(0))
+    starts = off[:-1][np.diff(off) > 0]
+    d[starts] = v[starts]
+    return zigzag_encode(d)
+
+
+def _runs(u: np.ndarray, off: np.ndarray) -> list[bytes]:
+    """Packed varint payload of each segment ``u[off[i]:off[i+1]]``: one
+    encode over all values, sliced at the segments' byte offsets."""
+    buf = encode_varints(u)
+    ends = np.zeros(u.size + 1, dtype=np.int64)
+    np.cumsum(varint_sizes(u), out=ends[1:])
+    at = ends[off].tolist()
+    return [buf[s:e] for s, e in zip(at[:-1], at[1:])]
+
+
+def _string_table(*cols: pa.Array) -> tuple[list[str], list[np.ndarray]]:
+    """Sorted block string table with "" at index 0 over the string
+    columns (nulls read as ""), and each column's string ids — the
+    reference's table.go:20-84."""
+    enc = pc.dictionary_encode(pa.concat_arrays([c.cast(pa.string()).fill_null("") for c in cols]))
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    table = enc.dictionary.take(order).to_pylist()
+    rank = np.empty(order.size, dtype=np.int64)
+    rank[order] = np.arange(order.size)
+    if table[:1] != [""]:
+        table.insert(0, "")
+        rank += 1
+    ids = rank[enc.indices.to_numpy()]
+    return table, np.split(ids, np.cumsum([len(c) for c in cols[:-1]]))
+
+
+def encode_block(kind: str, table: pa.Table) -> bytes:
+    """≤ENTITY_LIMIT rows of one entity kind → PrimitiveBlock bytes
+    (extractPrimitiveBlock, encoder/primitive.go:99-124).
+
+    ``table`` has ENTITY_ARROW_SCHEMA's ``id``, ``tags`` and ``info``
+    columns and the kind's own: ``lat_nano``/``lon_nano`` for nodes,
+    ``refs`` for ways, ``members`` for relations. Ways whose
+    ``way_lats``/``way_lons`` (degrees, parallel to refs) are non-empty
+    emit LocationsOnWays fields 9/10 (osm.proto:228-235); the file's
+    header must then declare the optional feature.
+
+    An entity has Info when its ``info.version`` is non-null. A way's or
+    relation's Info writes ts, changeset and uid only when non-null. The
+    DenseInfo arrays of nodes cover every node of the block or none, so
+    a node without Info, or with null fields, writes defaults there:
+    version -1, ts, changeset and uid 0, user "", visible.
     """
+    if kind not in ("node", "way", "relation"):
+        raise ValueError(f"unknown entity kind {kind!r}")
+    n = table.num_rows
+    col = lambda name: table.column(name).combine_chunks()  # noqa: E731
+    ids = col("id").to_numpy()
+    tag_off, tags = _ragged(col("tags"))
+    info_col = col("info")
+    info = {f.name: pc.struct_field(info_col, f.name) for f in info_col.type}
+    has_info = info["version"].is_valid()
+    has = has_info.to_numpy(zero_copy_only=False)
+    version = info["version"].fill_null(-1).to_numpy().astype(np.int64)
+    ts_s = info["ts"].cast(pa.int64()).fill_null(0).to_numpy() // 1_000_000  # us → s
+    changeset = info["changeset"].fill_null(0).to_numpy()
+    uid = info["uid"].fill_null(0).to_numpy().astype(np.int64)
+    visible = info["visible"].fill_null(True).to_numpy(zero_copy_only=False) | ~has
+    strings = [pc.struct_field(tags, "key"), pc.struct_field(tags, "value")]
+    strings.append(pc.if_else(has_info, info["user"], ""))
+    if kind == "relation":
+        mem_off, members = _ragged(col("members"))
+        strings.append(pc.struct_field(members, "role"))
+    string_table, (key_id, val_id, user_id, *role_id) = _string_table(*strings)
+    # tags sorted per entity by (key, value): string ids sort like their strings
+    owner = np.repeat(np.arange(n), np.diff(tag_off))
+    order = np.lexsort((val_id, key_id, owner))
+    key_id, val_id = key_id[order], val_id[order]
 
-    def __init__(self) -> None:
-        self._seen: set[str] = set()
+    if kind == "node":  # extractDenseNodes (encoder/primitive.go:126-187)
+        whole = np.array([0, n])
+        dense = MessageBuilder().bytes_field(1, encode_varints(_sints(ids, whole)))
+        if has.any():
+            di = MessageBuilder().bytes_field(1, encode_varints(version.view(np.uint64)))
+            for f, v in enumerate((ts_s, changeset, uid, user_id), start=2):
+                di.bytes_field(f, encode_varints(_sints(np.where(has, v, 0), whole)))
+            dense.message(5, di.bytes_field(6, encode_varints(visible.astype(np.uint64))))
+        for f, name in ((8, "lat_nano"), (9, "lon_nano")):
+            coord = col(name).to_numpy() // DEFAULT_GRANULARITY
+            dense.bytes_field(f, encode_varints(_sints(coord, whole)))
+        kv = np.zeros(2 * key_id.size + n, dtype=np.uint64)  # k, v pairs, 0 after each node
+        at = 2 * np.arange(key_id.size) + owner
+        kv[at], kv[at + 1] = key_id, val_id
+        dense.bytes_field(10, encode_varints(kv))
+        return build_primitive_block([MessageBuilder().message(2, dense)], string_table)
 
-    def add(self, *values: str) -> None:
-        self._seen.update(values)
-
-    def add_array(self, values) -> None:
-        self._seen.update(values)
-
-    def build(self) -> tuple[list[str], dict[str, int]]:
-        table = [""] + sorted(self._seen - {""})
-        return table, {s: i for i, s in enumerate(table)}
-
-
-def _delta(vals: np.ndarray) -> np.ndarray:
-    """Delta encode (inverse of cumsum) — calcDeltas (encoder/primitive.go:267-280)."""
-    v = np.ascontiguousarray(vals, dtype=np.int64)
-    out = v.copy()
-    out[1:] = v[1:] - v[:-1]
-    return out
-
-
-def _encode_info(
-    b: MessageBuilder,
-    field_no: int,
-    version: int,
-    ts_ms: int | None,
-    changeset: int | None,
-    uid: int | None,
-    user_sid: int | None,
-    visible: bool,
-    date_granularity: int,
-) -> None:
-    info = MessageBuilder()
-    info.varint(1, version & 0xFFFFFFFF if version >= 0 else (1 << 64) - 1)
-    if ts_ms is not None:
-        info.varint(2, ts_ms // date_granularity)
-    if changeset is not None:
-        info.varint(3, changeset)
-    if uid is not None:
-        info.varint(4, uid)
-    if user_sid is not None:
-        info.varint(5, user_sid)
-    if not visible:
-        info.varint(6, 0)
-    b.message(field_no, info)
-
-
-def build_dense_nodes_group(
-    ids: np.ndarray,
-    lat_nano: np.ndarray,
-    lon_nano: np.ndarray,
-    tags: list[list[tuple[str, str]]] | None,
-    sid: dict[str, int],
-    info: dict | None = None,
-    granularity: int = DEFAULT_GRANULARITY,
-    date_granularity: int = DEFAULT_DATE_GRANULARITY,
-) -> MessageBuilder:
-    """DenseNodes group — extractDenseNodes (encoder/primitive.go:126-187)."""
-    dense = MessageBuilder()
-    lat_coord = np.asarray(lat_nano, np.int64) // granularity
-    lon_coord = np.asarray(lon_nano, np.int64) // granularity
-    dense.bytes_field(1, encode_varints(zigzag_encode(_delta(ids))))
-    if info is not None:
-        di = MessageBuilder()
-        di.bytes_field(1, encode_varints(np.asarray(info["version"], np.uint64)))
-        di.bytes_field(
-            2,
-            encode_varints(
-                zigzag_encode(_delta(np.asarray(info["ts_ms"], np.int64) // date_granularity))
-            ),
-        )
-        di.bytes_field(3, encode_varints(zigzag_encode(_delta(info["changeset"]))))
-        di.bytes_field(4, encode_varints(zigzag_encode(_delta(info["uid"]))))
-        di.bytes_field(
-            5,
-            encode_varints(
-                zigzag_encode(_delta(np.array([sid[u] for u in info["user"]], np.int64)))
-            ),
-        )
-        if "visible" in info:
-            di.bytes_field(6, encode_varints(np.asarray(info["visible"], np.uint64)))
-        dense.message(5, di)
-    dense.bytes_field(8, encode_varints(zigzag_encode(_delta(lat_coord))))
-    dense.bytes_field(9, encode_varints(zigzag_encode(_delta(lon_coord))))
-    if tags is not None:
-        kv: list[int] = []
-        for node_tags in tags:
-            for k, v in sorted(node_tags):
-                kv.append(sid[k])
-                kv.append(sid[v])
-            kv.append(0)
-        dense.bytes_field(10, encode_varints(np.array(kv, dtype=np.uint64)))
-    group = MessageBuilder()
-    group.message(2, dense)
-    return group
-
-
-def _tag_fields(b: MessageBuilder, kf: int, vf: int, tags: list[tuple[str, str]], sid) -> None:
-    if not tags:
-        return
-    st = sorted(tags)
-    b.bytes_field(kf, encode_varints(np.array([sid[k] for k, _ in st], np.uint64)))
-    b.bytes_field(vf, encode_varints(np.array([sid[v] for _, v in st], np.uint64)))
-
-
-def build_ways_group(
-    ways: list[dict],
-    sid: dict[str, int],
-    date_granularity: int = DEFAULT_DATE_GRANULARITY,
-    granularity: int = DEFAULT_GRANULARITY,
-) -> MessageBuilder:
-    """Ways group — extractWays (encoder/primitive.go:189-215).
-
-    Parity-plus: ways carrying ``lat_nanos``/``lon_nanos`` (parallel to
-    refs) emit LocationsOnWays fields 9/10 (osm.proto:228-235, delta
-    sint64 in granularity units). The writer of such a file MUST set the
-    'LocationsOnWays' optional feature in the header (spec)."""
-    group = MessageBuilder()
-    for w in ways:
-        wb = MessageBuilder()
-        wb.varint(1, w["id"])
-        _tag_fields(wb, 2, 3, w.get("tags", []), sid)
-        if w.get("info"):
-            i = w["info"]
-            _encode_info(wb, 4, i.get("version", -1), i.get("ts_ms"), i.get("changeset"), i.get("uid"), sid.get(i.get("user", "")), i.get("visible", True), date_granularity)
-        wb.bytes_field(8, encode_varints(zigzag_encode(_delta(np.asarray(w["refs"], np.int64)))))
-        if w.get("lat_nanos") is not None:
-            lat_coord = np.asarray(w["lat_nanos"], np.int64) // granularity
-            lon_coord = np.asarray(w["lon_nanos"], np.int64) // granularity
-            if lat_coord.size != len(w["refs"]) or lon_coord.size != len(w["refs"]):
+    # Ways and relations: one message per entity over per-entity slices
+    # (extractWays / extractRelations, encoder/primitive.go:189-248)
+    keys, vals = _runs(key_id.view(np.uint64), tag_off), _runs(val_id.view(np.uint64), tag_off)
+    present = lambda f: (has & info[f].is_valid().to_numpy(zero_copy_only=False)).tolist()  # noqa: E731
+    has_ts, has_cs, has_uid = present("ts"), present("changeset"), present("uid")
+    if kind == "way":
+        ref_off, refs = _ragged(col("refs"))
+        packed = [(8, _runs(_sints(refs.to_numpy(), ref_off), ref_off), [True] * n)]
+        if "way_lats" in table.column_names:
+            (lat_off, lats), (lon_off, lons) = _ragged(col("way_lats")), _ragged(col("way_lons"))
+            n_refs = np.diff(ref_off)
+            has_loc = np.diff(lat_off) > 0
+            if (has_loc & ((np.diff(lat_off) != n_refs) | (np.diff(lon_off) != n_refs))).any():
                 raise ValueError("LocationsOnWays lat/lon counts must match refs")
-            wb.bytes_field(9, encode_varints(zigzag_encode(_delta(lat_coord))))
-            wb.bytes_field(10, encode_varints(zigzag_encode(_delta(lon_coord))))
-        group.message(3, wb)
-    return group
-
-
-def build_relations_group(rels: list[dict], sid: dict[str, int], date_granularity: int = DEFAULT_DATE_GRANULARITY) -> MessageBuilder:
-    """Relations group — extractRelations (encoder/primitive.go:217-248)."""
+            # degrees → nano: the decode's nano * 1e-9 double is within half
+            # an ulp of the exact value, so rint recovers the integer
+            for f, off, deg in ((9, lat_off, lats), (10, lon_off, lons)):
+                coord = np.rint(deg.to_numpy() * 1e9).astype(np.int64) // DEFAULT_GRANULARITY
+                packed.append((f, _runs(_sints(coord, off), off), has_loc.tolist()))
+    else:
+        mem_type = pc.index_in(pc.struct_field(members, "type"), value_set=_MEMBER_TYPES)
+        if mem_type.null_count:
+            raise ValueError("unknown relation member type")
+        mem_ref = pc.struct_field(members, "ref").to_numpy()
+        has_mem = (np.diff(mem_off) > 0).tolist()
+        packed = [
+            (8, _runs(role_id[0].view(np.uint64), mem_off), has_mem),
+            (9, _runs(_sints(mem_ref, mem_off), mem_off), has_mem),
+            (10, _runs(mem_type.to_numpy().astype(np.uint64), mem_off), has_mem),
+        ]
+    has_tags = (np.diff(tag_off) > 0).tolist()
+    ids, has, version, ts_s, changeset, uid, user_id, visible = (
+        a.tolist() for a in (ids, has, version, ts_s, changeset, uid, user_id, visible)
+    )
     group = MessageBuilder()
-    for r in rels:
-        rb = MessageBuilder()
-        rb.varint(1, r["id"])
-        _tag_fields(rb, 2, 3, r.get("tags", []), sid)
-        if r.get("info"):
-            i = r["info"]
-            _encode_info(rb, 4, i.get("version", -1), i.get("ts_ms"), i.get("changeset"), i.get("uid"), sid.get(i.get("user", "")), i.get("visible", True), date_granularity)
-        members = r.get("members", [])
-        if members:
-            rb.bytes_field(8, encode_varints(np.array([sid[m["role"]] for m in members], np.uint64)))
-            rb.bytes_field(
-                9,
-                encode_varints(
-                    zigzag_encode(_delta(np.array([m["ref"] for m in members], np.int64)))
-                ),
-            )
-            rb.bytes_field(
-                10, encode_varints(np.array([m["type"] for m in members], np.uint64))
-            )
-        group.message(4, rb)
-    return group
+    for i in range(n):
+        m = MessageBuilder().varint(1, ids[i])
+        if has_tags[i]:
+            m.bytes_field(2, keys[i]).bytes_field(3, vals[i])
+        if has[i]:
+            inf = MessageBuilder().varint(1, version[i])
+            if has_ts[i]:
+                inf.varint(2, ts_s[i])
+            if has_cs[i]:
+                inf.varint(3, changeset[i])
+            if has_uid[i]:
+                inf.varint(4, uid[i])
+            inf.varint(5, user_id[i])
+            if not visible[i]:
+                inf.varint(6, 0)
+            m.message(4, inf)
+        for f, runs, emit in packed:
+            if emit[i]:
+                m.bytes_field(f, runs[i])
+        group.message(3 if kind == "way" else 4, m)
+    return build_primitive_block([group], string_table)
 
 
-def build_primitive_block(
-    groups: list[MessageBuilder],
-    string_table: list[str],
-    granularity: int = DEFAULT_GRANULARITY,
-    date_granularity: int = DEFAULT_DATE_GRANULARITY,
-) -> bytes:
+def build_primitive_block(groups: list[MessageBuilder], string_table: list[str]) -> bytes:
+    """PrimitiveBlock: the string table, then the groups. Granularity,
+    date granularity and offsets stay at the defaults (fields 17-20
+    absent)."""
     block = MessageBuilder()
     st = MessageBuilder()
     for s in string_table:
@@ -959,10 +952,6 @@ def build_primitive_block(
     block.message(1, st)
     for g in groups:
         block.message(2, g)
-    if granularity != DEFAULT_GRANULARITY:
-        block.varint(17, granularity)
-    if date_granularity != DEFAULT_DATE_GRANULARITY:
-        block.varint(18, date_granularity)
     return block.tobytes()
 
 

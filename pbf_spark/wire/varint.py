@@ -51,17 +51,23 @@ def decode_varints(buf: bytes | np.ndarray) -> np.ndarray:
     return np.add.reduceat(contrib, starts)
 
 
-def encode_varints(vals: np.ndarray) -> bytes:
-    """Encode a uint64 array as back-to-back varints (packed payload)."""
+def varint_sizes(vals: np.ndarray) -> np.ndarray:
+    """Byte length of each uint64 value's varint: 1 + floor((bit_length - 1) / 7)."""
     v = np.ascontiguousarray(vals, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    # byte length of each varint: 1 + floor(bit_length-1 / 7)
     nbytes = np.ones(v.size, dtype=np.int64)
     tmp = v >> _SEVEN
     while tmp.any():
         nbytes += tmp != 0
         tmp >>= _SEVEN
+    return nbytes
+
+
+def encode_varints(vals: np.ndarray) -> bytes:
+    """Encode a uint64 array as back-to-back varints (packed payload)."""
+    v = np.ascontiguousarray(vals, dtype=np.uint64)
+    if v.size == 0:
+        return b""
+    nbytes = varint_sizes(v)
     offsets = np.cumsum(nbytes) - nbytes
     out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
     for k in range(10):

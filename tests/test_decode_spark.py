@@ -88,21 +88,15 @@ def test_way_locations_decode(spark):
 
     from pbf_spark.util import small_df
     from pbf_spark.model.schema import MEDIA_BLOB_SCHEMA
-    from pbf_spark.wire.osmformat import (
-        StringTable,
-        build_primitive_block,
-        build_ways_group,
-    )
+    from pbf_spark.wire.osmformat import encode_block
 
-    st = StringTable()
-    st.add("")
-    table, sid = st.build()
+    from .conftest import entity_table
+
     lats = [51_500_000_000, 51_500_001_000, 51_499_999_000]
     lons = [-100_000_000, -99_999_000, -99_998_000]
-    raw = build_primitive_block(
-        [build_ways_group([dict(id=7, refs=[10, 25, 30], lat_nanos=lats, lon_nanos=lons)], sid)],
-        table,
-    )
+    raw = encode_block("way", entity_table("way", [
+        dict(id=7, refs=[10, 25, 30], way_lats=[v / 1e9 for v in lats], way_lons=[v / 1e9 for v in lons])
+    ]))
     blob_df = small_df(
         spark, [("m0", 0, "OSMData", "raw", len(raw), bytearray(raw))], MEDIA_BLOB_SCHEMA
     )
@@ -129,10 +123,11 @@ def test_corrupt_blob_error_names_blob(spark):
     from pbf_spark.model.schema import MEDIA_BLOB_SCHEMA
     from pbf_spark.util import small_df
     from pbf_spark.wire import frame
-    from pbf_spark.wire.osmformat import StringTable, build_primitive_block, build_ways_group
+    from pbf_spark.wire.osmformat import encode_block
 
-    table, sid = StringTable().build()
-    raw = build_primitive_block([build_ways_group([dict(id=7, refs=[10, 25])], sid)], table)
+    from .conftest import entity_table
+
+    raw = encode_block("way", entity_table("way", [dict(id=7, refs=[10, 25])]))
     good = frame.compress_payload(raw)
     rows = [
         ("m0", seq, "OSMData", "zlib", len(raw), bytearray(payload))

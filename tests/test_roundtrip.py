@@ -128,29 +128,26 @@ def test_roundtrip_locations_on_ways_file(spark, tmp_path_factory):
     decode again, way coordinates bit-exact."""
     from pbf_spark.model.schema import MEDIA_BLOB_SCHEMA
     from pbf_spark.util import small_df
-    from pbf_spark.wire.osmformat import (
-        StringTable,
-        build_dense_nodes_group,
-        build_primitive_block,
-        build_ways_group,
-    )
-    import numpy as np
+    from pbf_spark.wire.osmformat import encode_block
 
-    st = StringTable()
-    st.add("")
-    table, sid = st.build()
+    from .conftest import entity_table
+
     # granularity-100 representable (the default wire precision is 1e-7 deg)
     lats = [51_500_000_000, 51_500_001_000, 51_499_999_100]
     lons = [-100_000_000, -99_999_000, -99_998_400]
-    nodes_g = build_dense_nodes_group(
-        np.array([10, 25, 30]), np.array(lats, np.int64), np.array(lons, np.int64), None, sid
-    )
-    ways_g = build_ways_group(
-        [dict(id=7, refs=[10, 25, 30], lat_nanos=lats, lon_nanos=lons)], sid
-    )
-    raw = build_primitive_block([nodes_g, ways_g], table)
+    nodes_blk = encode_block("node", entity_table("node", [
+        dict(id=i, lat_nano=a, lon_nano=o) for i, a, o in zip((10, 25, 30), lats, lons)
+    ]))
+    ways_blk = encode_block("way", entity_table("way", [
+        dict(id=7, refs=[10, 25, 30], way_lats=[v / 1e9 for v in lats], way_lons=[v / 1e9 for v in lons])
+    ]))
     blob_df = small_df(
-        spark, [("m0", 0, "OSMData", "raw", len(raw), bytearray(raw))], MEDIA_BLOB_SCHEMA
+        spark,
+        [
+            ("m0", 0, "OSMData", "raw", len(nodes_blk), bytearray(nodes_blk)),
+            ("m1", 1, "OSMData", "raw", len(ways_blk), bytearray(ways_blk)),
+        ],
+        MEDIA_BLOB_SCHEMA,
     )
     ents = decode.decode_blobs(blob_df, way_locations=True)
 
@@ -175,36 +172,53 @@ def test_roundtrip_locations_on_ways_file(spark, tmp_path_factory):
     assert "LocationsOnWays" not in pbf_file.load_header(out2).optional_features
 
 
+def test_roundtrip_keeps_null_info_fields(spark, tmp_path_factory):
+    """A way's or relation's Info without timestamp and uid (fields 2
+    and 4 absent) decodes with null ``ts`` and ``uid``; write_pbf and a
+    second decode keep them null instead of writing 1970-01-01 and 0."""
+    from pbf_spark.model.schema import MEDIA_BLOB_SCHEMA
+    from pbf_spark.util import small_df
+    from pbf_spark.wire.osmformat import build_primitive_block
+    from pbf_spark.wire.proto import MessageBuilder
+
+    info = MessageBuilder().varint(1, 3).varint(3, 11).varint(5, 0)  # version, changeset, user ""
+    way = MessageBuilder().varint(1, 7).message(4, info).bytes_field(8, bytes([20, 10]))  # refs 10, 15
+    rel = MessageBuilder().varint(1, 9).message(4, info)
+    groups = [MessageBuilder().message(3, way), MessageBuilder().message(4, rel)]
+    raw = build_primitive_block(groups, [""])
+    blob_df = small_df(
+        spark, [("m0", 0, "OSMData", "raw", len(raw), bytearray(raw))], MEDIA_BLOB_SCHEMA
+    )
+    out = tmp_path_factory.mktemp("rtnull") / "null-info.osm.pbf"
+
+    def infos(df):
+        return sorted((r["id"], r["info"].asDict()) for r in df.select("id", "info").collect())
+
+    first = infos(decode.decode_blobs(blob_df))
+    assert [(i, v["ts"], v["uid"], v["changeset"]) for i, v in first] == [(7, None, None, 11), (9, None, None, 11)]
+    pbf_sink.write_pbf(decode.decode_blobs(blob_df), out)
+    assert infos(decode.decode_blobs(pbf_file.read_blob_table(spark, out))) == first
+
+
 def test_write_pbf_rejects_mixed_locations_on_ways(spark, tmp_path_factory):
     """LocationsOnWays is all-or-nothing per file (ADVICE r4): mixed
     presence would write a file our own decoder rejects, so write_pbf
     must fail eagerly with a clear error."""
     from pbf_spark.model.schema import MEDIA_BLOB_SCHEMA
     from pbf_spark.util import small_df
-    from pbf_spark.wire.osmformat import (
-        StringTable,
-        build_dense_nodes_group,
-        build_primitive_block,
-        build_ways_group,
-    )
-    import numpy as np
+    from pbf_spark.wire.osmformat import encode_block
 
-    st = StringTable()
-    st.add("")
-    table, sid = st.build()
+    from .conftest import entity_table
+
     lats = [51_500_000_000, 51_500_001_000]
     lons = [-100_000_000, -99_999_000]
-    nodes_g = build_dense_nodes_group(
-        np.array([10, 25]), np.array(lats, np.int64), np.array(lons, np.int64), None, sid
-    )
-    with_locs = build_primitive_block(
-        [build_ways_group([dict(id=7, refs=[10, 25], lat_nanos=lats, lon_nanos=lons)], sid)],
-        table,
-    )
-    without_locs = build_primitive_block(
-        [build_ways_group([dict(id=8, refs=[25, 10])], sid)], table
-    )
-    nodes_blk = build_primitive_block([nodes_g], table)
+    nodes_blk = encode_block("node", entity_table("node", [
+        dict(id=i, lat_nano=a, lon_nano=o) for i, a, o in zip((10, 25), lats, lons)
+    ]))
+    with_locs = encode_block("way", entity_table("way", [
+        dict(id=7, refs=[10, 25], way_lats=[v / 1e9 for v in lats], way_lons=[v / 1e9 for v in lons])
+    ]))
+    without_locs = encode_block("way", entity_table("way", [dict(id=8, refs=[25, 10])]))
     blob_df = small_df(
         spark,
         [

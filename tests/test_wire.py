@@ -14,19 +14,16 @@ import pytest
 from pbf_spark.wire import frame, osmformat
 from pbf_spark.wire.osmformat import (
     Header,
-    StringTable,
-    build_dense_nodes_group,
     build_header_block,
     build_primitive_block,
-    build_relations_group,
-    build_ways_group,
+    encode_block,
     parse_header_block,
     parse_primitive_block,
 )
 
-from pbf_spark.wire.proto import MessageBuilder
+from pbf_spark.wire.proto import MessageBuilder, parse_message, scan_fields
 
-from .conftest import SAMPLE_PBF
+from .conftest import SAMPLE_PBF, entity_table
 
 
 def _decode_file(path):
@@ -78,16 +75,39 @@ def test_unsupported_required_feature_rejected():
         parse_header_block(raw)
 
 
+def _tag_rows(tags):
+    return [{"key": k, "value": v} for k, v in tags]
+
+
+def _node_rows(ids, lat, lon, tags, info):
+    """Node rows for ``entity_table`` from parallel per-node lists."""
+    return [
+        dict(
+            id=int(ids[i]), lat_nano=int(lat[i]), lon_nano=int(lon[i]), tags=_tag_rows(tags[i]),
+            info=dict(version=info["version"][i], ts=info["ts_ms"][i] * 1000, changeset=info["changeset"][i],
+                      uid=info["uid"][i], user=info["user"][i], visible=bool(info["visible"][i])),
+        )
+        for i in range(len(ids))
+    ]
+
+
+def _group(raw: bytes) -> MessageBuilder:
+    """The one PrimitiveGroup of an ``encode_block`` block, re-framed
+    for ``build_primitive_block``."""
+    group = MessageBuilder()
+    for f, _wt, v in scan_fields(parse_message(raw)[2][0]):
+        group.bytes_field(f, v)
+    return group
+
+
 def test_primitive_block_roundtrip():
-    st = StringTable()
-    st.add("highway", "primary", "name", "Test St", "alice", "outer", "")
-    table, sid = st.build()
-    assert table[0] == ""  # reserved index (encoder/table.go:44-46)
-    assert table == sorted(table)
     ids = np.array([10, 25, 30])
     lat = np.array([51_500_000_000, 51_500_001_000, -8_000_000_100])
     lon = np.array([-100_000_000, -99_999_000, 179_999_999_900])
-    tags = [[("highway", "primary")], [], [("name", "Test St"), ("highway", "primary")]]
+    # every kind carries the same strings (the last node's tags, the
+    # roles and the user), so the three blocks share one string table
+    # and their groups frame as one multi-group block
+    tags = [[("highway", "primary")], [], [("name", "Test St"), ("highway", "primary"), ("alice", "outer")]]
     info = dict(
         version=[1, 2, 3],
         ts_ms=[1_000_000, 2_000_000, 3_000_000],
@@ -96,25 +116,24 @@ def test_primitive_block_roundtrip():
         user=["alice", "alice", "alice"],
         visible=[1, 0, 1],
     )
-    g1 = build_dense_nodes_group(ids, lat, lon, tags, sid, info=info)
-    g2 = build_ways_group(
-        [dict(id=7, refs=[10, 25, 30, 25], tags=[("highway", "primary")])], sid
-    )
-    g3 = build_relations_group(
-        [
-            dict(
-                id=99,
-                tags=[("name", "Test St")],
-                members=[
-                    dict(ref=7, type=1, role="outer"),
-                    dict(ref=10, type=0, role=""),
-                    dict(ref=99, type=2, role="outer"),
-                ],
-            )
-        ],
-        sid,
-    )
-    blk = parse_primitive_block(build_primitive_block([g1, g2, g3], table))
+    nodes = _node_rows(ids, lat, lon, tags, info)
+    way = dict(id=7, refs=[10, 25, 30, 25], tags=_tag_rows(tags[2]))
+    members = [
+        dict(ref=7, type="way", role="outer"),
+        dict(ref=10, type="node", role=""),
+        dict(ref=99, type="relation", role="outer"),
+    ]
+    rel = dict(id=99, tags=_tag_rows(tags[2]), members=members)
+    raws = [
+        encode_block(kind, entity_table(kind, rows))
+        for kind, rows in (("node", nodes), ("way", [way]), ("relation", [rel]))
+    ]
+    tables = {tuple(parse_primitive_block(raw).strings) for raw in raws}
+    assert len(tables) == 1
+    table = list(tables.pop())
+    assert table[0] == ""  # reserved index (encoder/table.go:44-46)
+    assert table == sorted(table)
+    blk = parse_primitive_block(build_primitive_block([_group(raw) for raw in raws], table))
 
     nodes = blk.nodes
     assert (nodes.id == ids).all()
@@ -146,25 +165,22 @@ def test_primitive_block_roundtrip():
     assert list(blk.strings[rels.mem_role]) == ["outer", "", "outer"]
 
 
+def _degrees(nanos):
+    return [v / 1e9 for v in nanos]
+
+
 def test_locations_on_ways_roundtrip():
     """LocationsOnWays (osm.proto:228-235): optional delta-coded lat/lon
     parallel to refs. Parity-plus vs the reference — its decoder never
     reads fields 9/10 (model/entities.go Way has no coordinates)."""
-    st = StringTable()
-    st.add("")
-    table, sid = st.build()
     lat1 = [51_500_000_000, 51_500_001_000, 51_499_999_000]
     lon1 = [-100_000_000, -99_999_000, -99_998_000]
     lat2 = [10_000_000_000, 10_000_000_100]
     lon2 = [20_000_000_000, 19_999_999_900]
-    g = build_ways_group(
-        [
-            dict(id=7, refs=[10, 25, 30], lat_nanos=lat1, lon_nanos=lon1),
-            dict(id=8, refs=[30, 10], lat_nanos=lat2, lon_nanos=lon2),
-        ],
-        sid,
-    )
-    blk = parse_primitive_block(build_primitive_block([g], table))
+    blk = parse_primitive_block(encode_block("way", entity_table("way", [
+        dict(id=7, refs=[10, 25, 30], way_lats=_degrees(lat1), way_lons=_degrees(lon1)),
+        dict(id=8, refs=[30, 10], way_lats=_degrees(lat2), way_lons=_degrees(lon2)),
+    ])))
     ways = blk.ways
     assert list(ways.ref_off) == [0, 3, 5]
     got_lat = osmformat.nano_degrees(ways.way_lat_coord, blk.lat_offset, blk.granularity)
@@ -173,15 +189,41 @@ def test_locations_on_ways_roundtrip():
     assert list(got_lon) == lon1 + lon2
 
     # ways WITHOUT locations keep None (no phantom columns downstream)
-    g_plain = build_ways_group([dict(id=9, refs=[1, 2])], sid)
-    blk2 = parse_primitive_block(build_primitive_block([g_plain], table))
+    blk2 = parse_primitive_block(encode_block("way", entity_table("way", [dict(id=9, refs=[1, 2])])))
     assert blk2.ways.way_lat_coord is None
 
     # count-mismatch must be rejected on both ends
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="match refs"):
-        build_ways_group([dict(id=1, refs=[1, 2], lat_nanos=[0], lon_nanos=[0])], sid)
+        encode_block("way", entity_table("way", [dict(id=1, refs=[1, 2], way_lats=[0.0], way_lons=[0.0])]))
+
+
+# sha256 of each decompressed blob (header first) of the seed-42 test
+# fixture: 9000 nodes, 700 ways, 40 relations (conftest ``fixture_dir``)
+_FIXTURE_BLOCKS = [
+    "6329540d62b3ab7f15d07d22001a5e9cfed14cdd7f6b4277047ce75c6f1f4125",
+    "64680ce88ba903bd014fae663045faf12db8aa6d729793572725f87b8f90e212",
+    "67e22a525e6e8e785c191a0037e932edf6c49695b5f53ae53f84b7f4c30c9190",
+    "abb29d89d5a85c04615adf050a4a84bf8e2d61d03e216d4b3fd34483cfa534b2",
+    "f4c74e1ad08e924c4602ddb4cd8920379b511db0c9e906e603ba80988ff9586f",
+]
+
+
+def test_generator_blocks_unchanged(fixture_dir):
+    """The generator's raw blocks are pinned: the golden counts and the
+    benchmark's inputs are generated, so an encoder change that moves a
+    byte shows here. Hashed after inflate, independent of the zlib build."""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    rows = pq.read_table(fixture_dir / "media_blobs" / "data").sort_by("blob_seq").to_pylist()
+    got = [
+        hashlib.sha256(frame.decompress_payload(r["codec"], r["payload"], r["raw_size"])).hexdigest()
+        for r in rows
+    ]
+    assert got == _FIXTURE_BLOCKS
 
 
 def test_degrees_fixed_point_roundtrip():
@@ -437,10 +479,11 @@ def _plain_nodes_group(ids, lat_nano, lon_nano, tags, sid, info):
         if st:
             nb.bytes_field(2, encode_varints(np.array([sid[k] for k, _ in st], np.uint64)))
             nb.bytes_field(3, encode_varints(np.array([sid[v] for _, v in st], np.uint64)))
-        osmformat._encode_info(
-            nb, 4, info["version"][i], info["ts_ms"][i], info["changeset"][i], info["uid"][i],
-            sid[info["user"][i]], bool(info["visible"][i]), 1000,
-        )
+        inf = MessageBuilder().varint(1, info["version"][i]).varint(2, info["ts_ms"][i] // 1000)
+        inf.varint(3, info["changeset"][i]).varint(4, info["uid"][i]).varint(5, sid[info["user"][i]])
+        if not info["visible"][i]:
+            inf.varint(6, 0)
+        nb.message(4, inf)
         nb.svarint(8, int(lat_nano[i]) // 100)
         nb.svarint(9, int(lon_nano[i]) // 100)
         group.message(1, nb)
@@ -453,9 +496,6 @@ def test_plain_nodes_decode_like_dense_nodes():
     coordinates, tags and Info."""
     from pbf_spark.operators.decode import decode_blob_payload
 
-    st = StringTable()
-    st.add("amenity", "cafe", "name", "Café", "alice", "bob")
-    table, sid = st.build()
     ids = np.array([-7, 10, 25, 30])
     lat = np.array([51_500_000_000, -33_868_800_000, 0, -89_999_999_900])
     lon = np.array([-100_000_000, 151_209_300_000, -179_999_999_900, 42_000_000_000])
@@ -469,16 +509,19 @@ def test_plain_nodes_decode_like_dense_nodes():
         visible=[1, 0, 1, 1],
     )
 
-    def rows(groups):
-        raw = build_primitive_block(groups, table)
+    def rows(raw):
         batches = decode_blob_payload(raw, "raw", len(raw))
         return [r for rb in batches for r in rb.to_pylist()]
 
-    dense = rows([build_dense_nodes_group(ids, lat, lon, tags, sid, info=info)])
-    plain = rows([
+    dense_raw = encode_block("node", entity_table("node", _node_rows(ids, lat, lon, tags, info)))
+    table = list(parse_primitive_block(dense_raw).strings)
+    assert table == ["", "Café", "alice", "amenity", "bob", "cafe", "name"]
+    sid = {s: i for i, s in enumerate(table)}
+    dense = rows(dense_raw)
+    plain = rows(build_primitive_block([
         _plain_nodes_group(ids[:2], lat[:2], lon[:2], tags[:2], sid, {k: v[:2] for k, v in info.items()}),
         _plain_nodes_group(ids[2:], lat[2:], lon[2:], tags[2:], sid, {k: v[2:] for k, v in info.items()}),
-    ])
+    ], table))
     assert plain == dense
     assert [r["lat_nano"] for r in plain] == list(lat)
     assert [r["lon_nano"] for r in plain] == list(lon)
@@ -563,14 +606,14 @@ def test_key_val_count_mismatch_raises(group_field):
 def test_truncated_dense_nodes_raise():
     """A DenseNodes message cut short, or one whose id, lat and lon runs
     differ in length, raises instead of decoding a partial block."""
-    from pbf_spark.wire.proto import parse_message
     from pbf_spark.wire.varint import encode_varints, zigzag_encode
 
-    table, sid = StringTable().build()
-    ids, lat, lon = np.array([1, 2, 3]), np.array([100, 200, 300]), np.array([-100, -200, -300])
-    group = build_dense_nodes_group(ids, lat, lon, None, sid)
-    dense = bytes(parse_message(group.tobytes())[2][0])
-    assert len(parse_primitive_block(build_primitive_block([group], table)).nodes) == 3
+    raw = encode_block("node", entity_table("node", [
+        dict(id=i, lat_nano=100 * i, lon_nano=-100 * i) for i in (1, 2, 3)
+    ]))
+    table = list(parse_primitive_block(raw).strings)
+    dense = bytes(parse_message(parse_message(raw)[2][0])[2][0])
+    assert len(parse_primitive_block(raw).nodes) == 3
     cut = MessageBuilder().bytes_field(2, dense[:-2])
     with pytest.raises(ValueError, match="truncated"):
         parse_primitive_block(build_primitive_block([cut], table))
