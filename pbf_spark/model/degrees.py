@@ -2,7 +2,7 @@
 
 Closes the A28 residual from round 1: DMS formatting, ParseDegrees, the
 E5/E6/E7 fixed-point projections and epsilon comparison, alongside the
-nano-degree round trip that already lives in wire/osmformat.py
+nano-degree conversions the wire decode applies in wire/osmformat.py
 (nano_degrees / to_degrees).
 
 Everything except DMS formatting is a pure Catalyst column expression;

@@ -155,6 +155,20 @@ def entity_schema_subset(fields) -> tuple[T.StructType, pa.schema]:
     return T.StructType(spark_fields), pa.schema(arrow_fields)
 
 
+# One PrimitiveBlock's entities of one kind, the columns the wire carries:
+# wire/osmformat.parse_primitive_block returns these tables and
+# encode_block takes them. A way block without LocationsOnWays has null
+# way_lats/way_lons; the decode projects these onto ENTITY_ARROW_SCHEMA.
+BLOCK_SCHEMAS: dict[str, pa.Schema] = {
+    kind: entity_schema_subset(cols)[1]
+    for kind, cols in {
+        "node": ("id", "lat_nano", "lon_nano", "tags", "info"),
+        "way": ("id", "tags", "refs", "info", "way_lats", "way_lons"),
+        "relation": ("id", "tags", "members", "info"),
+    }.items()
+}
+
+
 # ---------------------------------------------------------------------------
 # interleaved document table (north-rule input, BASELINE.json input_hint)
 # ---------------------------------------------------------------------------

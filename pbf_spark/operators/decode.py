@@ -5,9 +5,10 @@ decode pipeline (/root/reference/decoder.go:65-71 — blob framing is done
 by the source; batching by Arrow; the parallel fan-out by Spark task
 parallelism across blob partitions). No per-row Python in the hot path:
 each blob (≤8000 entities, mirroring the reference's EntityLimit) is
-inflated and parsed once, then every array decode (delta cumsum,
-string-table gather, tag splitting) is a numpy pass; output is built
-directly as Arrow arrays.
+inflated and parsed once into one Arrow table per entity kind (the wire
+codec builds the arrays directly: delta cumsum and tag splitting in
+numpy, string-table gathers in Arrow), and this operator only projects
+those tables onto the output schema.
 
 Provenance columns (doc_id, span_idx, blob_seq) ride along so any entity
 row can be traced back to its document span (north-rule span-sequence
@@ -25,164 +26,51 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..model.schema import (
-    ENTITY_ARROW_SCHEMA,
-    ENTITY_SCHEMA,
-    KIND_FIELDS,
-    WAY_LOC_ARROW_FIELDS,
-    entity_schema_subset,
-)
-
-_WAY_LATS_TYPE = WAY_LOC_ARROW_FIELDS[0].type
-_WAY_LONS_TYPE = WAY_LOC_ARROW_FIELDS[1].type
+from ..model.schema import ENTITY_ARROW_SCHEMA, ENTITY_SCHEMA, KIND_FIELDS, entity_schema_subset
 from ..util import spread
 from ..wire import frame as wire_frame
 from ..wire import osmformat
-from ..wire.osmformat import MEMBER_TYPE_NAMES, BlockSoA, EntitySoA
 
-_TAG_TYPE = ENTITY_ARROW_SCHEMA.field("tags").type
-_MEMBER_TYPE = ENTITY_ARROW_SCHEMA.field("members").type
-_INFO_TYPE = ENTITY_ARROW_SCHEMA.field("info").type
-
-
-def _take_str(strings_arr: pa.Array, ids: np.ndarray) -> pa.Array:
-    """String-table gather in Arrow C++ (no per-entity Python objects)."""
-    return pc.take(strings_arr, pa.array(ids, pa.int64()))
-
-
-def _tags_array(soa: EntitySoA, strings_arr: pa.Array) -> pa.ListArray:
-    keys = _take_str(strings_arr, soa.tag_key)
-    vals = _take_str(strings_arr, soa.tag_val)
-    struct = pa.StructArray.from_arrays([keys, vals], fields=list(_TAG_TYPE.value_type))
-    return pa.ListArray.from_arrays(pa.array(soa.tag_off, pa.int32()), struct, type=_TAG_TYPE)
-
-
-def _info_array(soa: EntitySoA, strings_arr: pa.Array, n: int) -> pa.Array:
-    info = soa.info
-    if info is None:
-        return pa.nulls(n, _INFO_TYPE)
-    ts = pa.array(
-        info.ts_ms.astype("int64") * 1000,
-        pa.timestamp("us", tz="UTC"),
-        mask=~(info.has_ts & info.has_info),
-    )
-    fields = [
-        pa.array(info.version, pa.int32()),
-        pa.array(info.uid, pa.int32(), mask=~info.has_uid),
-        ts,
-        pa.array(info.changeset, pa.int64()),
-        _take_str(strings_arr, info.user_sid),
-        pa.array(info.visible, pa.bool_()),
-    ]
-    return pa.StructArray.from_arrays(
-        fields, fields=list(_INFO_TYPE), mask=pa.array(~info.has_info)
-    )
-
-
-def _way_loc_array(
-    soa: EntitySoA, coord, offset: int, block: BlockSoA, n: int, typ: pa.DataType
-) -> pa.Array:
-    """LocationsOnWays coords (parallel to refs) → list<double> degrees."""
-    if coord is None:
-        return pa.nulls(n, typ)
-    vals = osmformat.to_degrees(osmformat.nano_degrees(coord, offset, block.granularity))
-    return pa.ListArray.from_arrays(
-        pa.array(soa.ref_off, pa.int32()), pa.array(vals, pa.float64()), type=typ
-    )
+# the nested columns ``columns=`` prunes to nulls
+_PRUNABLE = frozenset({"tags", "info", "refs", "members"})
 
 
 def _entity_batch(
     kind: str,
-    soa: EntitySoA,
-    block: BlockSoA,
+    table: pa.Table,
     doc_id: str | None,
     span_idx: int | None,
     blob_seq: int | None,
     columns: frozenset[str] | None = None,
     out_schema: pa.Schema = ENTITY_ARROW_SCHEMA,
 ) -> pa.RecordBatch | None:
-    """One (kind, SoA) → Arrow batch holding exactly ``out_schema``'s
-    fields. The slim path drops whole columns (not just nulls them):
-    the JVM columnar→row conversion after mapInArrow costs per column
-    per row even when every value is null."""
-    n = len(soa)
+    """One kind's block table (``schema.BLOCK_SCHEMAS[kind]``) projected
+    onto exactly ``out_schema``'s fields: degrees from the nano-degrees,
+    constant entity_type and provenance, and nulls for a column the kind
+    does not carry or ``columns`` prunes. The slim path drops whole
+    columns (not just nulls them): the JVM columnar→row conversion after
+    mapInArrow costs per column per row even when every value is null."""
+    n = table.num_rows
     if n == 0:
         return None
+    consts = {"entity_type": kind, "doc_id": doc_id, "span_idx": span_idx, "blob_seq": blob_seq}
+    zeros = pa.array(np.zeros(n, np.int32))
 
-    want_names = set(out_schema.names)
+    def column(f: pa.Field) -> pa.Array:
+        if f.name in consts:  # a constant column is one value taken n times, in C++
+            return pa.array([consts[f.name]], f.type).take(zeros)
+        if f.name in ("lat", "lon") and kind == "node":
+            return pa.array(osmformat.to_degrees(table.column(f.name + "_nano").to_numpy()))
+        pruned = columns is not None and f.name in _PRUNABLE and f.name not in columns
+        if f.name in table.column_names and not pruned:
+            return table.column(f.name).chunk(0)
+        return pa.nulls(n, f.type)
 
-    def want(col: str) -> bool:
-        return col in want_names and (columns is None or col in columns)
-
-    strings_arr = block.strings_arrow  # already Arrow — no conversion
-    nulls_f64 = pa.nulls(n, pa.float64())
-    nulls_i64 = pa.nulls(n, pa.int64())
-    lat = lon = nulls_f64
-    lat_nano_a = lon_nano_a = nulls_i64
-    if kind == "node" and {"lat", "lon", "lat_nano", "lon_nano"} & want_names:
-        lat_nano = osmformat.nano_degrees(soa.lat_coord, block.lat_offset, block.granularity)
-        lon_nano = osmformat.nano_degrees(soa.lon_coord, block.lon_offset, block.granularity)
-        lat = pa.array(osmformat.to_degrees(lat_nano), pa.float64())
-        lon = pa.array(osmformat.to_degrees(lon_nano), pa.float64())
-        lat_nano_a = pa.array(lat_nano, pa.int64())
-        lon_nano_a = pa.array(lon_nano, pa.int64())
-    if kind == "way" and want("refs"):
-        refs = pa.ListArray.from_arrays(
-            pa.array(soa.ref_off, pa.int32()), pa.array(soa.refs, pa.int64())
-        )
-    else:
-        refs = pa.nulls(n, pa.list_(pa.int64()))
-    if kind == "relation" and want("members"):
-        mstruct = pa.StructArray.from_arrays(
-            [
-                pa.array(soa.mem_ref, pa.int64()),
-                pc.take(pa.array(["node", "way", "relation"]), pa.array(soa.mem_type, pa.int8())),
-                _take_str(strings_arr, soa.mem_role),
-            ],
-            fields=list(_MEMBER_TYPE.value_type),
-        )
-        members = pa.ListArray.from_arrays(
-            pa.array(soa.mem_off, pa.int32()), mstruct, type=_MEMBER_TYPE
-        )
-    else:
-        members = pa.nulls(n, _MEMBER_TYPE)
-
-    def const_str(v):
-        # constant column without n python objects: dictionary take in C++
-        if v is None:
-            return pa.nulls(n, pa.string())
-        return pc.take(pa.array([v], pa.string()), pa.array(np.zeros(n, np.int32)))
-
-    builders = {
-        "entity_type": lambda: const_str(kind),
-        "id": lambda: pa.array(soa.id, pa.int64()),
-        "lat": lambda: lat,
-        "lon": lambda: lon,
-        "lat_nano": lambda: lat_nano_a,
-        "lon_nano": lambda: lon_nano_a,
-        "tags": lambda: _tags_array(soa, strings_arr) if want("tags") else pa.nulls(n, _TAG_TYPE),
-        "refs": lambda: refs,
-        "members": lambda: members,
-        "info": lambda: _info_array(soa, strings_arr, n) if want("info") else pa.nulls(n, _INFO_TYPE),
-        "doc_id": lambda: const_str(doc_id),
-        "span_idx": lambda: pa.nulls(n, pa.int32())
-        if span_idx is None
-        else pa.array(np.full(n, span_idx, np.int32)),
-        "blob_seq": lambda: pa.nulls(n, pa.int64())
-        if blob_seq is None
-        else pa.array(np.full(n, blob_seq, np.int64)),
-        "way_lats": lambda: _way_loc_array(soa, soa.way_lat_coord, block.lat_offset, block, n, _WAY_LATS_TYPE)
-        if kind == "way"
-        else pa.nulls(n, _WAY_LATS_TYPE),
-        "way_lons": lambda: _way_loc_array(soa, soa.way_lon_coord, block.lon_offset, block, n, _WAY_LONS_TYPE)
-        if kind == "way"
-        else pa.nulls(n, _WAY_LONS_TYPE),
-    }
-    arrays = [builders[name]() for name in out_schema.names]
-    return pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+    return pa.RecordBatch.from_arrays([column(f) for f in out_schema], schema=out_schema)
 
 
 _ALL_KINDS = ("node", "way", "relation")
+
 
 def _normalize_tag_filter(tf) -> dict | None:
     """Accepts an iterable of keys or a {key: values-or-None} mapping;
@@ -197,27 +85,23 @@ def _normalize_tag_filter(tf) -> dict | None:
     return {str(k): None for k in tf}
 
 
-def _tag_filter_sel(soa, block, tag_filter: dict) -> np.ndarray:
-    """Boolean row mask: entity has ≥1 tag matching the filter — decided
-    on STRING-TABLE IDS (one vectorized lookup per filter key against
-    the block's table, then isin over the flat tag-id arrays), so
-    non-matching entities never reach Arrow materialization. This is
-    predicate pushdown below the columnar boundary: the decode-side
-    analogue of a parquet row-group filter."""
-    strings = block.strings
-    hit = np.zeros(soa.tag_key.size, dtype=bool)
+def _tag_filter_mask(tags: pa.ListArray, tag_filter: dict) -> np.ndarray:
+    """Boolean row mask: the entity has ≥1 tag matching the filter. The
+    match runs in Arrow over the flattened keys and values, so non-matching
+    entities are dropped before the projection: predicate pushdown below
+    the columnar boundary, the decode-side analogue of a parquet row-group
+    filter."""
+    flat = pc.list_flatten(tags)
+    keys, values = pc.struct_field(flat, "key"), pc.struct_field(flat, "value")
+    hit = pa.repeat(False, len(flat))
     for key, vals in tag_filter.items():
-        ksids = np.nonzero(strings == key)[0]
-        if ksids.size == 0:
-            continue
-        kmask = np.isin(soa.tag_key, ksids)
+        match = pc.equal(keys, key)
         if vals is not None:
-            vsids = np.nonzero(np.isin(strings, np.array(vals, dtype=object)))[0]
-            kmask &= np.isin(soa.tag_val, vsids)
-        hit |= kmask
-    cs = np.zeros(soa.tag_key.size + 1, dtype=np.int64)
-    np.cumsum(hit, out=cs[1:])
-    return (cs[soa.tag_off[1:]] - cs[soa.tag_off[:-1]]) > 0
+            match = pc.and_(match, pc.is_in(values, pa.array(vals, pa.string())))
+        hit = pc.or_(hit, match)
+    keep = np.zeros(len(tags), dtype=bool)
+    keep[pc.list_parent_indices(tags).filter(hit).to_numpy()] = True
+    return keep
 
 
 def decode_blob_payload(
@@ -239,16 +123,12 @@ def decode_blob_payload(
         raw = wire_frame.decompress_payload(codec, payload, raw_size)
         block = osmformat.parse_primitive_block(raw)
         out = []
-        for kind, soa in (("node", block.nodes), ("way", block.ways), ("relation", block.relations)):
+        for kind, table in zip(_ALL_KINDS, block):
             if kind not in kinds:
                 continue
-            if tag_filter is not None and len(soa):
-                sel = _tag_filter_sel(soa, block, tag_filter)
-                if not sel.any():
-                    continue
-                if not sel.all():
-                    soa = osmformat.subset_entities(soa, sel)
-            rb = _entity_batch(kind, soa, block, doc_id, span_idx, blob_seq, columns, out_schema)
+            if tag_filter is not None and table.num_rows:
+                table = table.filter(_tag_filter_mask(table.column("tags").chunk(0), tag_filter))
+            rb = _entity_batch(kind, table, doc_id, span_idx, blob_seq, columns, out_schema)
             if rb is not None:
                 out.append(rb)
     except (ValueError, IndexError, zlib.error) as e:
@@ -347,7 +227,7 @@ def decode_blobs(
     come back null with the schema unchanged.
 
     ``kinds``: restrict to a subset of entity types at the source (the
-    non-requested SoAs are never materialized). ``slim=True`` (requires
+    other kinds' tables are never projected or shipped). ``slim=True`` (requires
     ``kinds``) additionally DROPS the columns no requested kind can
     populate (schema.KIND_FIELDS union) instead of emitting them as
     nulls — the row-conversion cost after mapInArrow is per column per
@@ -355,10 +235,11 @@ def decode_blobs(
 
     ``tag_filter``: decode-side predicate pushdown — an iterable of tag
     KEYS (presence test) or a ``{key: values-or-None}`` mapping; only
-    entities with ≥1 matching tag are materialized to Arrow. The match
-    runs on string-table ids inside the wire SoA (one table lookup per
-    filter key per block), so a planet-scale "extract POIs" decode pays
-    Arrow build + transfer only for matches. NOTE an entity-level
+    entities with ≥1 matching tag are projected and shipped. The match
+    runs in Arrow on each block's decoded ``tags`` column (key equality
+    and value membership over the flattened tags), so a planet-scale
+    "extract POIs" decode pays the projection and transfer only for
+    matches. NOTE an entity-level
     predicate: a ways filter drops the untagged nodes carrying their
     geometry — decode nodes in a separate ``kinds=("node",)`` pass (or
     use LocationsOnWays files) when geometry is needed.

@@ -12,6 +12,12 @@ from pyspark.sql import SparkSession
 WORKER_DAEMON_CONF = ("spark.python.daemon.module", "pbf_spark.worker_daemon")
 
 
+def local_root() -> str:
+    """Where a session's scratch goes on this node: the first dir of
+    ``SPARK_LOCAL_DIRS``, else the system temp dir."""
+    return (os.environ.get("SPARK_LOCAL_DIRS") or tempfile.gettempdir()).split(",")[0]
+
+
 def get_spark(
     app_name: str = "pbf_spark",
     master: str | None = None,
@@ -45,7 +51,7 @@ def get_spark(
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     env_dirs = os.environ.get("SPARK_LOCAL_DIRS")
-    local_root = (env_dirs or tempfile.gettempdir()).split(",")[0]
+    root = local_root()
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         n = master.removeprefix("local[").removesuffix("]")
@@ -70,9 +76,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.warehouse.dir", os.path.join(local_root, "pbf-spark-warehouse"))
+        .config("spark.sql.warehouse.dir", os.path.join(root, "pbf-spark-warehouse"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.local.dir", env_dirs or os.path.join(local_root, "pbf-spark-local"))
+        .config("spark.local.dir", env_dirs or os.path.join(root, "pbf-spark-local"))
         .config(*WORKER_DAEMON_CONF)
     )
     for k, v in (extra_conf or {}).items():

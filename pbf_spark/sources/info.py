@@ -50,9 +50,8 @@ def read_info(path: str | Path, extended: bool = False) -> dict:
                     break
             elif blob_type == "OSMData" and extended:
                 blk = osmformat.parse_primitive_block(frame.unpack_blob(blob))
-                for kind, soa in (("node", blk.nodes), ("way", blk.ways), ("relation", blk.relations)):
-                    if soa is not None:
-                        counts[kind] += int(soa.id.size)
+                for kind, table in zip(counts, blk):
+                    counts[kind] += table.num_rows
     if h is None:
         raise ValueError("no OSMHeader blob found")
     info = {

@@ -1,8 +1,10 @@
-"""OSM PBF PrimitiveBlock / HeaderBlock codec ⇄ numpy struct-of-arrays.
+"""OSM PBF PrimitiveBlock / HeaderBlock codec ⇄ Arrow entity tables.
 
 Clean-room implementation of the public OSM PBF format (wiki.openstreetmap.org
 /wiki/PBF_Format; field numbers as in /root/reference/internal/pb/osm.proto).
-Decode semantics mirror the reference decoder
+A block's entities of one kind are one ``pyarrow.Table`` with
+``schema.BLOCK_SCHEMAS[kind]``: ``parse_primitive_block`` returns them and
+``encode_block`` takes them. Decode semantics mirror the reference decoder
 (/root/reference/internal/decoder/primitive.go):
 
 - per-block string table, index 0 reserved empty (osm.proto:121-124)
@@ -23,12 +25,14 @@ entities per block (EntityLimit, primitive.go:38-41).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from ..model.schema import BLOCK_SCHEMAS
 from .proto import WT_I32, WT_I64, WT_LEN, WT_VARINT, MessageBuilder, parse_message, scan_fields
 from .varint import (
     decode_varint,
@@ -43,103 +47,55 @@ ENTITY_LIMIT = 8000  # osmosis-compatible block size (encoder/primitive.go:38-41
 DEFAULT_GRANULARITY = 100
 DEFAULT_DATE_GRANULARITY = 1000
 
-NODE, WAY, RELATION = 0, 1, 2
 MEMBER_TYPE_NAMES = np.array(["node", "way", "relation"], dtype=object)
+_MEMBER_TYPES = pa.array(MEMBER_TYPE_NAMES.tolist())  # member type enum 0/1/2 ⇄ string
 
 _EMPTY_I64 = np.empty(0, dtype=np.int64)
+_TYPE = {f.name: f.type for s in BLOCK_SCHEMAS.values() for f in s}
 
 
 def _to_i64(u: np.ndarray) -> np.ndarray:
     return u.astype(np.int64, copy=False) if u.dtype != np.int64 else u
 
 
-@dataclass
-class InfoSoA:
-    """Parallel metadata arrays; one slot per entity (has_info gates nulls)."""
-
-    version: np.ndarray  # int32, -1 when absent
-    ts_ms: np.ndarray  # int64 epoch millis (already × date_granularity)
-    has_ts: np.ndarray  # bool
-    changeset: np.ndarray  # int64
-    has_changeset: np.ndarray
-    uid: np.ndarray  # int32
-    has_uid: np.ndarray
-    user_sid: np.ndarray  # int64 string-table ids
-    visible: np.ndarray  # bool (default True when absent on wire)
-    has_info: np.ndarray  # bool
-
-    @staticmethod
-    def empty(n: int) -> "InfoSoA":
-        return InfoSoA(
-            version=np.full(n, -1, dtype=np.int32),
-            ts_ms=np.zeros(n, dtype=np.int64),
-            has_ts=np.zeros(n, dtype=bool),
-            changeset=np.zeros(n, dtype=np.int64),
-            has_changeset=np.zeros(n, dtype=bool),
-            uid=np.zeros(n, dtype=np.int32),
-            has_uid=np.zeros(n, dtype=bool),
-            user_sid=np.zeros(n, dtype=np.int64),
-            visible=np.ones(n, dtype=bool),
-            has_info=np.zeros(n, dtype=bool),
-        )
+# --------------------------------------------------------------------------
+# decode
+# --------------------------------------------------------------------------
 
 
-@dataclass
-class EntitySoA:
-    """One entity type's rows within a block, in file order."""
+class Block(NamedTuple):
+    """One PrimitiveBlock's entities, one table per kind in file order,
+    each with ``schema.BLOCK_SCHEMAS[kind]`` and one chunk per column
+    (none when the block has no entity of the kind)."""
 
-    id: np.ndarray = field(default_factory=lambda: _EMPTY_I64)
-    # tags: ragged → offsets into flat string-id arrays
-    tag_off: np.ndarray = field(default_factory=lambda: np.zeros(1, dtype=np.int64))
-    tag_key: np.ndarray = field(default_factory=lambda: _EMPTY_I64)
-    tag_val: np.ndarray = field(default_factory=lambda: _EMPTY_I64)
-    info: InfoSoA | None = None
-    # nodes: raw wire coordinates (granularity units); convert with nano_degrees()
-    lat_coord: np.ndarray | None = None
-    lon_coord: np.ndarray | None = None
-    # ways
-    ref_off: np.ndarray | None = None
-    refs: np.ndarray | None = None
-    # LocationsOnWays (osm.proto Way.lat/lon fields 9/10, optional):
-    # delta-coded coords parallel to refs, sharing ref_off. The reference
-    # decoder never reads these fields (its model.Way has no coordinates,
-    # model/entities.go:77-83) — parity-plus: way geometries without a
-    # node join are exactly what a spatial engine wants at scale.
-    way_lat_coord: np.ndarray | None = None
-    way_lon_coord: np.ndarray | None = None
-    # relations
-    mem_off: np.ndarray | None = None
-    mem_ref: np.ndarray | None = None
-    mem_type: np.ndarray | None = None  # int8 enum 0/1/2
-    mem_role: np.ndarray | None = None  # string ids
-
-    def __len__(self) -> int:
-        return int(self.id.size)
+    nodes: pa.Table
+    ways: pa.Table
+    relations: pa.Table
 
 
-@dataclass
-class BlockSoA:
-    # Arrow string array (offsets + one data buffer, no per-string Python
-    # objects — the string table was the #2 parse cost as a decode loop)
-    strings_arrow: "object"
+class _Scale(NamedTuple):
+    """What a block's entities decode against: its string table and its
+    coordinate and timestamp units (PrimitiveBlock fields 1, 17-20)."""
+
+    strings: pa.Array
     granularity: int
     lat_offset: int
     lon_offset: int
     date_granularity: int
-    nodes: EntitySoA
-    ways: EntitySoA
-    relations: EntitySoA
 
-    @property
-    def strings(self) -> np.ndarray:
-        """numpy object-array view (convenience for tests/tools; the hot
-        decode path consumes ``strings_arrow`` directly)."""
-        return self.strings_arrow.to_numpy(zero_copy_only=False)
+    def nanos(self, lat: np.ndarray, lon: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """Wire coordinates → full nano-degrees."""
+        return (
+            nano_degrees(lat, self.lat_offset, self.granularity),
+            nano_degrees(lon, self.lon_offset, self.granularity),
+        )
 
 
-# --------------------------------------------------------------------------
-# decode
-# --------------------------------------------------------------------------
+def _table(kind: str, n: int, cols: dict[str, pa.Array]) -> pa.Table:
+    """The kind's block table over ``n`` entities; a column not in
+    ``cols`` is null."""
+    schema = BLOCK_SCHEMAS[kind]
+    return pa.Table.from_arrays([cols.get(f.name, pa.nulls(n, f.type)) for f in schema], schema=schema)
 
 
 def _decode_string_table(buf: memoryview) -> "pa.Array":
@@ -228,7 +184,61 @@ def _kv_to_ragged(kv: np.ndarray, n_nodes: int) -> tuple[np.ndarray, np.ndarray,
     return off, _to_i64(pairs[0::2]), _to_i64(pairs[1::2])
 
 
-def _decode_dense_nodes(buf: memoryview, date_granularity: int) -> EntitySoA:
+def _list(name: str, off: np.ndarray, values: pa.Array) -> pa.ListArray:
+    """Ragged (offsets[n+1], flat values) → the list column ``name``."""
+    return pa.ListArray.from_arrays(pa.array(off, pa.int32()), values, type=_TYPE[name])
+
+
+def _tags(scale: _Scale, off: np.ndarray, keys: np.ndarray, vals: np.ndarray) -> pa.ListArray:
+    pairs = [scale.strings.take(keys), scale.strings.take(vals)]
+    return _list("tags", off, pa.StructArray.from_arrays(pairs, fields=list(_TYPE["tags"].value_type)))
+
+
+def _info(
+    scale: _Scale, n: int, owners: np.ndarray | None, fields: dict[int, tuple[np.ndarray, np.ndarray]]
+) -> pa.StructArray:
+    """Info (osm.proto:155-176) → the ``info`` column of ``n`` entities.
+
+    ``fields`` maps an Info field (version 1, timestamp 2, changeset 3,
+    uid 4, user_sid 5, visible 6) to (values, present) over the entities
+    ``owners`` (an index into the n; None for all n). An entity without
+    Info is null; an absent timestamp, changeset or uid is null; an
+    absent version reads -1, user "" and visible true."""
+    has_info = np.ones(n, dtype=bool)
+    if owners is not None:
+        has_info[:] = False
+        has_info[owners] = True
+
+    def get(f: int, default: int) -> tuple[np.ndarray, np.ndarray]:
+        if f not in fields:
+            return np.full(n, default, dtype=np.int64), np.zeros(n, dtype=bool)
+        vals, present = fields[f]
+        vals = np.where(present, _to_i64(vals), default)
+        if owners is None:
+            return vals, present
+        v, p = np.full(n, default, dtype=np.int64), np.zeros(n, dtype=bool)
+        v[owners], p[owners] = vals, present
+        return v, p
+
+    (version, _), (ts, has_ts), (changeset, has_cs), (uid, has_uid), (user, _), (visible, _) = (
+        get(f, d) for f, d in ((1, -1), (2, 0), (3, 0), (4, 0), (5, 0), (6, 1))
+    )
+    ts_us = ts * (scale.date_granularity * 1000)
+    return pa.StructArray.from_arrays(
+        [
+            pa.array(version.astype(np.int32)),
+            pa.array(uid.astype(np.int32), mask=~has_uid),
+            pa.array(ts_us, _TYPE["info"].field("ts").type, mask=~has_ts),
+            pa.array(changeset, mask=~has_cs),
+            scale.strings.take(user),
+            pa.array(visible != 0),
+        ],
+        fields=list(_TYPE["info"]),
+        mask=pa.array(~has_info),
+    )
+
+
+def _decode_dense_nodes(buf: memoryview, scale: _Scale) -> pa.Table:
     ids = lats = lons = _EMPTY_I64
     kv = _EMPTY_I64
     dense_info_buf: memoryview | None = None
@@ -246,69 +256,38 @@ def _decode_dense_nodes(buf: memoryview, date_granularity: int) -> EntitySoA:
     n = ids.size
     if lats.size != n or lons.size != n:
         raise ValueError(f"DenseNodes has {n} ids, {lats.size} lats and {lons.size} lons")
-    soa = EntitySoA(
-        id=np.cumsum(ids),
-        lat_coord=np.cumsum(lats),
-        lon_coord=np.cumsum(lons),
-    )
-    soa.tag_off, soa.tag_key, soa.tag_val = _kv_to_ragged(kv, n)
+    lat_nano, lon_nano = scale.nanos(np.cumsum(lats), np.cumsum(lons))
+    cols = {
+        "id": pa.array(np.cumsum(ids)),
+        "lat_nano": pa.array(lat_nano),
+        "lon_nano": pa.array(lon_nano),
+        "tags": _tags(scale, *_kv_to_ragged(kv, n)),
+    }
     if dense_info_buf is not None:
-        info = InfoSoA.empty(n)
+        runs = {}
         for f, _wt, v in scan_fields(dense_info_buf):
-            if f == 1:
-                info.version = decode_varints(v).astype(np.int32)
-            elif f == 2:
-                info.ts_ms = np.cumsum(zigzag_decode(decode_varints(v))) * date_granularity
-                info.has_ts[:] = True
-            elif f == 3:
-                info.changeset = np.cumsum(zigzag_decode(decode_varints(v)))
-                info.has_changeset[:] = True
-            elif f == 4:
-                info.uid = np.cumsum(zigzag_decode(decode_varints(v))).astype(np.int32)
-                info.has_uid[:] = True
-            elif f == 5:
-                info.user_sid = np.cumsum(zigzag_decode(decode_varints(v)))
-            elif f == 6:
-                vis = decode_varints(v)
-                if vis.size:  # an empty run means "all visible"
-                    info.visible = vis.astype(bool)
-        info.has_info[:] = True
-        if any(a.size != n for a in vars(info).values()):
+            run = decode_varints(v)
+            if f in (2, 3, 4, 5):  # sint64 deltas
+                runs[f] = np.cumsum(zigzag_decode(run))
+            elif f == 1 or (f == 6 and run.size):  # an empty visible run means "all visible"
+                runs[f] = run
+        if any(run.size != n for run in runs.values()):
             raise ValueError(f"DenseInfo arrays disagree with the {n} DenseNodes ids")
-        soa.info = info
-    return soa
+        everyone = np.ones(n, dtype=bool)
+        cols["info"] = _info(scale, n, None, {f: (run, everyone) for f, run in runs.items()})
+    return _table("node", n, cols)
 
 
 def _decode_info_batch_spans(
-    b: np.ndarray,
-    owners: np.ndarray,
-    starts: np.ndarray,
-    lens: np.ndarray,
-    n: int,
-    date_granularity: int,
-) -> InfoSoA:
+    b: np.ndarray, owners: np.ndarray, starts: np.ndarray, lens: np.ndarray, n: int, scale: _Scale
+) -> pa.StructArray:
     """Vectorized Info decode over the submessage SPANS the wavefront
     scan collected: one more wavefront pass over all Info submessages of
     a group instead of per-entity field handling."""
     varints, present, _spans = _scan_spans_vec(
         b, starts, starts + lens, packed_fields=(), varint_fields=(1, 2, 3, 4, 5, 6), msg_fields=()
     )
-    info = InfoSoA.empty(n)
-    ver = varints[1].astype(np.int32)
-    ver[~present[1]] = -1
-    info.version[owners] = ver
-    info.ts_ms[owners] = varints[2] * date_granularity
-    info.has_ts[owners] = present[2]
-    info.changeset[owners] = varints[3]
-    info.has_changeset[owners] = True
-    info.uid[owners] = varints[4].astype(np.int32)
-    info.has_uid[owners] = present[4]
-    info.user_sid[owners] = varints[5]
-    vis = np.ones(owners.size, dtype=bool)
-    vis[present[6]] = varints[6][present[6]] != 0
-    info.visible[owners] = vis
-    info.has_info[owners] = True
-    return info
+    return _info(scale, n, owners, {f: (varints[f], present[f]) for f in varints})
 
 
 def _gather_varints(b: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
@@ -516,6 +495,8 @@ def _packed_spans(
     return off, flat
 
 
+_KINDS = {1: "node", 3: "way", 4: "relation"}  # PrimitiveGroup field → entity kind
+_EMPTY = {kind: schema.empty_table() for kind, schema in BLOCK_SCHEMAS.items()}
 # Packed repeated fields beyond keys 2 / vals 3 per PrimitiveGroup field
 # → sint64 delta-coded (True) or plain uint (False), osm.proto Way/Relation
 _PACKED = {
@@ -526,10 +507,11 @@ _PACKED = {
 
 
 def _decode_entities_arr(
-    group_field: int, b: np.ndarray, starts: np.ndarray, ends: np.ndarray, date_granularity: int
-) -> EntitySoA:
+    group_field: int, b: np.ndarray, starts: np.ndarray, ends: np.ndarray, scale: _Scale
+) -> pa.Table:
     """Node (group field 1), Way (3) or Relation (4) messages at
-    ``b[starts:ends]`` → EntitySoA, all through one wavefront scan.
+    ``b[starts:ends]`` → the kind's entity table, all through one
+    wavefront scan.
 
     Every kind carries id 1, packed keys 2 / vals 3 and Info 4; a Node's
     id, lat 8 and lon 9 are zigzag varints (a Way's or Relation's id is a
@@ -549,134 +531,55 @@ def _decode_entities_arr(
             )
 
     parallel(2, 3)
-    soa = EntitySoA(id=varints[1], tag_off=rag[2][0], tag_key=rag[2][1], tag_val=rag[3][1])
+    ids = zigzag_decode(varints[1]) if node else varints[1]
+    cols = {"id": pa.array(ids), "tags": _tags(scale, rag[2][0], rag[2][1], rag[3][1])}
+    if spans[4][0].size:
+        cols["info"] = _decode_info_batch_spans(b, *spans[4], n, scale)
     if node:
-        soa.id, soa.lat_coord, soa.lon_coord = (zigzag_decode(varints[f]) for f in (1, 8, 9))
+        lat, lon = (zigzag_decode(varints[f]) for f in (8, 9))
+        cols["lat_nano"], cols["lon_nano"] = map(pa.array, scale.nanos(lat, lon))
     elif group_field == 3:
-        soa.ref_off, soa.refs = rag[8]
+        ref_off, refs = rag[8]
+        cols["refs"] = _list("refs", ref_off, pa.array(refs))
         if rag[9][1].size or rag[10][1].size:
             # spec: per way, refs, lat and lon have equal counts (osm.proto:233-235)
             parallel(8, 9, 10)
-            soa.way_lat_coord, soa.way_lon_coord = rag[9][1], rag[10][1]
+            for name, nano in zip(("way_lats", "way_lons"), scale.nanos(rag[9][1], rag[10][1])):
+                cols[name] = _list(name, ref_off, pa.array(to_degrees(nano)))
     else:
         parallel(9, 8, 10)
-        soa.mem_off, soa.mem_ref = rag[9]
+        mem_off, mem_ref = rag[9]
         types = rag[10][1]
         if (types > 2).any() or (types < 0).any():
             raise ValueError("unknown relation member type")
-        soa.mem_role, soa.mem_type = rag[8][1], types.astype(np.int8)
-    if spans[4][0].size:
-        soa.info = _decode_info_batch_spans(b, *spans[4], n=n, date_granularity=date_granularity)
-    return soa
+        members = [pa.array(mem_ref), _MEMBER_TYPES.take(types), scale.strings.take(rag[8][1])]
+        member = pa.StructArray.from_arrays(members, fields=list(_TYPE["members"].value_type))
+        cols["members"] = _list("members", mem_off, member)
+    return _table(_KINDS[group_field], n, cols)
 
 
-def _subset_ragged(
-    off: np.ndarray, sel: np.ndarray, flats: list[np.ndarray | None]
-) -> tuple[np.ndarray, list[np.ndarray | None]]:
-    """Row-subset a ragged (offsets + flat arrays) layout: keep the
-    segments of selected rows, rebuild offsets."""
-    lens = np.diff(off)
-    take = np.repeat(sel, lens)
-    new_off = np.zeros(int(sel.sum()) + 1, dtype=off.dtype)
-    np.cumsum(lens[sel], out=new_off[1:])
-    return new_off, [None if a is None else a[take] for a in flats]
+def _int64(u: int) -> int:
+    """A varint field read as proto ``int64`` (two's complement)."""
+    return u - (1 << 64) if u >= 1 << 63 else u
 
 
-def subset_entities(soa: EntitySoA, sel: np.ndarray) -> EntitySoA:
-    """Row-subset an EntitySoA by boolean mask (vectorized gather of
-    every parallel array, ragged layouts re-sliced) — the decode-side
-    predicate-pushdown primitive (operators/decode tag_filter)."""
-    out = EntitySoA(id=soa.id[sel])
-    out.tag_off, (out.tag_key, out.tag_val) = _subset_ragged(
-        soa.tag_off, sel, [soa.tag_key, soa.tag_val]
-    )
-    for attr in ("lat_coord", "lon_coord"):
-        v = getattr(soa, attr)
-        if v is not None:
-            setattr(out, attr, v[sel])
-    if soa.ref_off is not None:
-        out.ref_off, (out.refs, out.way_lat_coord, out.way_lon_coord) = _subset_ragged(
-            soa.ref_off, sel, [soa.refs, soa.way_lat_coord, soa.way_lon_coord]
-        )
-    if soa.mem_off is not None:
-        out.mem_off, (out.mem_ref, out.mem_type, out.mem_role) = _subset_ragged(
-            soa.mem_off, sel, [soa.mem_ref, soa.mem_type, soa.mem_role]
-        )
-    if soa.info is not None:
-        out.info = InfoSoA(
-            **{
-                f_: getattr(soa.info, f_)[sel]
-                for f_ in InfoSoA.__dataclass_fields__
-            }
-        )
-    return out
-
-
-def _concat_entity(parts: list[EntitySoA]) -> EntitySoA:
-    if len(parts) == 1:
-        return parts[0]
-    out = EntitySoA(id=np.concatenate([p.id for p in parts]))
-    out.tag_key = np.concatenate([p.tag_key for p in parts])
-    out.tag_val = np.concatenate([p.tag_val for p in parts])
-    offs = [parts[0].tag_off]
-    base = parts[0].tag_off[-1]
-    for p in parts[1:]:
-        offs.append(p.tag_off[1:] + base)
-        base += p.tag_off[-1]
-    out.tag_off = np.concatenate(offs)
-
-    def _cat(attr):
-        vals = [getattr(p, attr) for p in parts]
-        if all(v is None for v in vals):
-            return None
-        if any(v is None for v in vals):
-            raise ValueError(f"mixed presence of {attr} across groups in one block")
-        return np.concatenate(vals)
-
-    out.lat_coord = _cat("lat_coord")
-    out.lon_coord = _cat("lon_coord")
-    out.refs = _cat("refs")
-    out.way_lat_coord = _cat("way_lat_coord")
-    out.way_lon_coord = _cat("way_lon_coord")
-    out.mem_ref = _cat("mem_ref")
-    out.mem_type = _cat("mem_type")
-    out.mem_role = _cat("mem_role")
-    for off_attr in ("ref_off", "mem_off"):
-        if getattr(parts[0], off_attr) is not None:
-            offs = [getattr(parts[0], off_attr)]
-            base = offs[0][-1]
-            for p in parts[1:]:
-                o = getattr(p, off_attr)
-                offs.append(o[1:] + base)
-                base += o[-1]
-            setattr(out, off_attr, np.concatenate(offs))
-    if any(p.info is not None for p in parts):
-        infos = [p.info if p.info is not None else InfoSoA.empty(len(p)) for p in parts]
-        out.info = InfoSoA(
-            **{
-                f_: np.concatenate([getattr(x, f_) for x in infos])
-                for f_ in InfoSoA.__dataclass_fields__
-            }
-        )
-    return out
-
-
-def parse_primitive_block(raw: bytes) -> BlockSoA:
-    """Decode an (already uncompressed) PrimitiveBlock into SoA form.
+def parse_primitive_block(raw: bytes) -> Block:
+    """Decode an (already uncompressed) PrimitiveBlock into one entity
+    table per kind.
 
     Mirrors parsePrimitiveBlock (/root/reference/internal/decoder/
     primitive.go:27-44): all groups emitted in file order, grouped by type.
     """
     fields = parse_message(raw)
-    strings = (
-        _decode_string_table(fields[1][0]) if 1 in fields else pa.array([""], pa.string())
+    scale = _Scale(
+        strings=_decode_string_table(fields[1][0]) if 1 in fields else pa.array([""], pa.string()),
+        granularity=fields.get(17, [DEFAULT_GRANULARITY])[0],
+        lat_offset=_int64(fields.get(19, [0])[0]),
+        lon_offset=_int64(fields.get(20, [0])[0]),
+        date_granularity=fields.get(18, [DEFAULT_DATE_GRANULARITY])[0],
     )
-    granularity = fields.get(17, [DEFAULT_GRANULARITY])[0]
-    lat_offset = fields.get(19, [0])[0]
-    lon_offset = fields.get(20, [0])[0]
-    date_granularity = fields.get(18, [DEFAULT_DATE_GRANULARITY])[0]
 
-    parts: dict[int, list[EntitySoA]] = {1: [], 3: [], 4: []}  # by Node/Way/Relation field
+    parts: dict[int, list[pa.Table]] = {1: [], 3: [], 4: []}  # by Node/Way/Relation field
     for group_buf in fields.get(2, []):
         # specialized tight scan (no generator, no per-entry memoryview
         # slicing): a group is a serial run of LEN entries — up to 8000
@@ -709,9 +612,7 @@ def parse_primitive_block(raw: bytes) -> BlockSoA:
                         shift += 7
                 f = key >> 3
                 if f == 2:
-                    parts[1].append(
-                        _decode_dense_nodes(group_buf[pos : pos + ln], date_granularity)
-                    )
+                    parts[1].append(_decode_dense_nodes(group_buf[pos : pos + ln], scale))
                 else:
                     put_f(f)
                     put_s(pos)
@@ -744,22 +645,14 @@ def parse_primitive_block(raw: bytes) -> BlockSoA:
         for f, kind_parts in parts.items():
             sel = fa == f
             if sel.any():
-                kind_parts.append(
-                    _decode_entities_arr(f, seg, starts[sel], ends[sel], date_granularity)
-                )
-
-    def merge(f: int) -> EntitySoA:
-        return _concat_entity(parts[f]) if parts[f] else EntitySoA()
-
-    return BlockSoA(
-        strings_arrow=strings,
-        granularity=int(granularity),
-        lat_offset=int(lat_offset),
-        lon_offset=int(lon_offset),
-        date_granularity=int(date_granularity),
-        nodes=merge(1),
-        ways=merge(3),
-        relations=merge(4),
+                kind_parts.append(_decode_entities_arr(f, seg, starts[sel], ends[sel], scale))
+    return Block(
+        *(
+            _EMPTY[kind] if not parts[f]
+            else parts[f][0] if len(parts[f]) == 1
+            else pa.concat_tables(parts[f]).combine_chunks()
+            for f, kind in _KINDS.items()
+        )
     )
 
 
@@ -776,9 +669,6 @@ def to_degrees(nano: np.ndarray) -> np.ndarray:
 # --------------------------------------------------------------------------
 # encode (PBF sink / fixture generator)
 # --------------------------------------------------------------------------
-
-_MEMBER_TYPES = pa.array(MEMBER_TYPE_NAMES.tolist())  # member type string → enum 0/1/2
-
 
 def _ragged(col: pa.Array) -> tuple[np.ndarray, pa.Array]:
     """List column → (offsets[n+1], flat values); a null list is empty."""
@@ -827,12 +717,14 @@ def encode_block(kind: str, table: pa.Table) -> bytes:
     """≤ENTITY_LIMIT rows of one entity kind → PrimitiveBlock bytes
     (extractPrimitiveBlock, encoder/primitive.go:99-124).
 
-    ``table`` has ENTITY_ARROW_SCHEMA's ``id``, ``tags`` and ``info``
-    columns and the kind's own: ``lat_nano``/``lon_nano`` for nodes,
-    ``refs`` for ways, ``members`` for relations. Ways whose
-    ``way_lats``/``way_lons`` (degrees, parallel to refs) are non-empty
-    emit LocationsOnWays fields 9/10 (osm.proto:228-235); the file's
-    header must then declare the optional feature.
+    ``table`` has the columns of ``schema.BLOCK_SCHEMAS[kind]`` (the
+    tables ``parse_primitive_block`` returns): ``id``, ``tags``, ``info``
+    and the kind's own, ``lat_nano``/``lon_nano`` for nodes, ``refs`` for
+    ways, ``members`` for relations; other columns are ignored. Ways whose
+    ``way_lats``/``way_lons`` (degrees, parallel to refs; optional
+    columns) are non-empty emit LocationsOnWays fields 9/10
+    (osm.proto:228-235); the file's header must then declare the
+    optional feature.
 
     An entity has Info when its ``info.version`` is non-null. A way's or
     relation's Info writes ts, changeset and uid only when non-null. The

@@ -368,8 +368,8 @@ def test_mid_stream_cancellation(spark, fixture_dir):
 
 
 def test_tag_filter_pushdown_matches_spark_filter(spark, fixture_dir, entities):
-    """Decode-side tag predicate pushdown (decode.py _tag_filter_sel +
-    osmformat.subset_entities): the filtered decode must equal the
+    """Decode-side tag predicate pushdown (decode.py _tag_filter_mask +
+    ``Table.filter`` on the block tables): the filtered decode must equal the
     unfiltered decode filtered in Spark — rows, tags, ragged payloads
     (refs/members) intact — for both key-presence and key=value forms."""
     docs = iceberg_lite.read_table(spark, fixture_dir / "documents_interleaved")

@@ -172,16 +172,14 @@ def test_roundtrip_locations_on_ways_file(spark, tmp_path_factory):
     assert "LocationsOnWays" not in pbf_file.load_header(out2).optional_features
 
 
-def test_roundtrip_keeps_null_info_fields(spark, tmp_path_factory):
-    """A way's or relation's Info without timestamp and uid (fields 2
-    and 4 absent) decodes with null ``ts`` and ``uid``; write_pbf and a
-    second decode keep them null instead of writing 1970-01-01 and 0."""
+def _null_info_roundtrip(spark, out, info):
+    """A way and a relation carrying the Info message ``info``: their
+    (id, info) rows after decode, and after write_pbf and a second decode."""
     from pbf_spark.model.schema import MEDIA_BLOB_SCHEMA
     from pbf_spark.util import small_df
     from pbf_spark.wire.osmformat import build_primitive_block
     from pbf_spark.wire.proto import MessageBuilder
 
-    info = MessageBuilder().varint(1, 3).varint(3, 11).varint(5, 0)  # version, changeset, user ""
     way = MessageBuilder().varint(1, 7).message(4, info).bytes_field(8, bytes([20, 10]))  # refs 10, 15
     rel = MessageBuilder().varint(1, 9).message(4, info)
     groups = [MessageBuilder().message(3, way), MessageBuilder().message(4, rel)]
@@ -189,15 +187,38 @@ def test_roundtrip_keeps_null_info_fields(spark, tmp_path_factory):
     blob_df = small_df(
         spark, [("m0", 0, "OSMData", "raw", len(raw), bytearray(raw))], MEDIA_BLOB_SCHEMA
     )
-    out = tmp_path_factory.mktemp("rtnull") / "null-info.osm.pbf"
 
     def infos(df):
         return sorted((r["id"], r["info"].asDict()) for r in df.select("id", "info").collect())
 
     first = infos(decode.decode_blobs(blob_df))
-    assert [(i, v["ts"], v["uid"], v["changeset"]) for i, v in first] == [(7, None, None, 11), (9, None, None, 11)]
     pbf_sink.write_pbf(decode.decode_blobs(blob_df), out)
-    assert infos(decode.decode_blobs(pbf_file.read_blob_table(spark, out))) == first
+    return first, infos(decode.decode_blobs(pbf_file.read_blob_table(spark, out)))
+
+
+def test_roundtrip_keeps_null_info_fields(spark, tmp_path_factory):
+    """A way's or relation's Info without timestamp and uid (fields 2
+    and 4 absent) decodes with null ``ts`` and ``uid``; write_pbf and a
+    second decode keep them null instead of writing 1970-01-01 and 0."""
+    from pbf_spark.wire.proto import MessageBuilder
+
+    info = MessageBuilder().varint(1, 3).varint(3, 11).varint(5, 0)  # version, changeset, user ""
+    out = tmp_path_factory.mktemp("rtnull") / "null-info.osm.pbf"
+    first, second = _null_info_roundtrip(spark, out, info)
+    assert [(i, v["ts"], v["uid"], v["changeset"]) for i, v in first] == [(7, None, None, 11), (9, None, None, 11)]
+    assert second == first
+
+
+def test_roundtrip_keeps_null_changeset(spark, tmp_path_factory):
+    """An Info without changeset (field 3) decodes null, and write_pbf
+    does not turn it into changeset 0."""
+    from pbf_spark.wire.proto import MessageBuilder
+
+    info = MessageBuilder().varint(1, 3).varint(5, 0)  # version, user ""
+    out = tmp_path_factory.mktemp("rtnull") / "null-changeset.osm.pbf"
+    first, second = _null_info_roundtrip(spark, out, info)
+    assert [(i, v["ts"], v["uid"], v["changeset"]) for i, v in first] == [(7, None, None, None), (9, None, None, None)]
+    assert second == first
 
 
 def test_write_pbf_rejects_mixed_locations_on_ways(spark, tmp_path_factory):

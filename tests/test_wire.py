@@ -9,8 +9,11 @@ import re
 import struct
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
+from pbf_spark.model.schema import BLOCK_SCHEMAS
 from pbf_spark.wire import frame, osmformat
 from pbf_spark.wire.osmformat import (
     Header,
@@ -61,11 +64,9 @@ def test_sample_header():
 
 def test_sample_tags_resolved():
     _, blocks = _decode_file(SAMPLE_PBF)
-    n = blocks[0].nodes
-    tagged = np.flatnonzero(np.diff(n.tag_off) > 0)
-    assert tagged.size > 0
-    s, e = n.tag_off[tagged[0]], n.tag_off[tagged[0] + 1]
-    keys = list(blocks[0].strings[n.tag_key[s:e]])
+    tagged = [t for t in blocks[0].nodes.column("tags").to_pylist() if t]
+    assert tagged
+    keys = [tag["key"] for tag in tagged[0]]
     assert all(isinstance(k, str) and k for k in keys)
 
 
@@ -89,6 +90,22 @@ def _node_rows(ids, lat, lon, tags, info):
         )
         for i in range(len(ids))
     ]
+
+
+def _strings(raw: bytes) -> list[str]:
+    """The string table of a PrimitiveBlock, as written."""
+    return [bytes(v).decode() for _f, _wt, v in scan_fields(parse_message(raw)[1][0])]
+
+
+def _block_columns(kind: str, t: pa.Table) -> pa.Table:
+    """``t``'s columns of the kind's block schema, the layout
+    ``parse_primitive_block`` returns (a column ``t`` lacks is null)."""
+    schema = BLOCK_SCHEMAS[kind]
+    cols = [
+        t.column(f.name).cast(f.type) if f.name in t.column_names else pa.nulls(len(t), f.type)
+        for f in schema
+    ]
+    return pa.Table.from_arrays(cols, schema=schema)
 
 
 def _group(raw: bytes) -> MessageBuilder:
@@ -116,57 +133,67 @@ def test_primitive_block_roundtrip():
         user=["alice", "alice", "alice"],
         visible=[1, 0, 1],
     )
-    nodes = _node_rows(ids, lat, lon, tags, info)
-    way = dict(id=7, refs=[10, 25, 30, 25], tags=_tag_rows(tags[2]))
+    ways = [
+        dict(id=7, refs=[10, 25, 30, 25], tags=_tag_rows(tags[2])),
+        # Info without timestamp, changeset and uid
+        dict(id=8, refs=[30], info=dict(version=4, user="alice", visible=False)),
+    ]
     members = [
         dict(ref=7, type="way", role="outer"),
         dict(ref=10, type="node", role=""),
         dict(ref=99, type="relation", role="outer"),
     ]
     rel = dict(id=99, tags=_tag_rows(tags[2]), members=members)
-    raws = [
-        encode_block(kind, entity_table(kind, rows))
-        for kind, rows in (("node", nodes), ("way", [way]), ("relation", [rel]))
-    ]
-    tables = {tuple(parse_primitive_block(raw).strings) for raw in raws}
+    rows = {"node": _node_rows(ids, lat, lon, tags, info), "way": ways, "relation": [rel]}
+    raws = [encode_block(kind, entity_table(kind, r)) for kind, r in rows.items()]
+    tables = {tuple(_strings(raw)) for raw in raws}
     assert len(tables) == 1
     table = list(tables.pop())
     assert table[0] == ""  # reserved index (encoder/table.go:44-46)
     assert table == sorted(table)
     blk = parse_primitive_block(build_primitive_block([_group(raw) for raw in raws], table))
 
+    # the decoded tables are the encoded columns, tags sorted per entity
+    for kind, got in zip(rows, blk):
+        want = [{**r, "tags": sorted(r.get("tags", []), key=lambda t: (t["key"], t["value"]))}
+                for r in rows[kind]]
+        assert got.equals(_block_columns(kind, entity_table(kind, want))), kind
+
     nodes = blk.nodes
-    assert (nodes.id == ids).all()
-    assert (osmformat.nano_degrees(nodes.lat_coord, blk.lat_offset, blk.granularity) == lat).all()
-    assert (osmformat.nano_degrees(nodes.lon_coord, blk.lon_offset, blk.granularity) == lon).all()
-    got_tags = [
-        list(
-            zip(
-                blk.strings[nodes.tag_key[nodes.tag_off[i] : nodes.tag_off[i + 1]]],
-                blk.strings[nodes.tag_val[nodes.tag_off[i] : nodes.tag_off[i + 1]]],
-            )
-        )
-        for i in range(3)
-    ]
+    assert nodes.column("id").to_pylist() == list(ids)
+    assert nodes.column("lat_nano").to_pylist() == list(lat)
+    assert nodes.column("lon_nano").to_pylist() == list(lon)
+    got_tags = [[(t["key"], t["value"]) for t in ts] for ts in nodes.column("tags").to_pylist()]
     assert got_tags == [sorted(t) for t in tags]
-    assert list(nodes.info.visible) == [True, False, True]
-    assert list(nodes.info.ts_ms) == info["ts_ms"]
-    assert list(nodes.info.version) == [1, 2, 3]
-    assert list(blk.strings[nodes.info.user_sid]) == ["alice"] * 3
+    node_info = nodes.column("info").to_pylist()
+    assert [i["visible"] for i in node_info] == [True, False, True]
+    assert [i["ts"].timestamp() * 1000 for i in node_info] == info["ts_ms"]
+    assert [i["version"] for i in node_info] == [1, 2, 3]
+    assert [i["user"] for i in node_info] == ["alice"] * 3
 
     ways = blk.ways
-    assert ways.id[0] == 7 and list(ways.refs) == [10, 25, 30, 25]
-    assert ways.info is None
+    assert ways.column("id").to_pylist() == [7, 8]
+    assert ways.column("refs").to_pylist() == [[10, 25, 30, 25], [30]]
+    way_info = ways.column("info").to_pylist()
+    assert way_info[0] is None
+    assert way_info[1] == dict(version=4, uid=None, ts=None, changeset=None, user="alice", visible=False)
 
     rels = blk.relations
-    assert rels.id[0] == 99
-    assert list(rels.mem_ref) == [7, 10, 99]
-    assert list(rels.mem_type) == [1, 0, 2]
-    assert list(blk.strings[rels.mem_role]) == ["outer", "", "outer"]
+    assert rels.column("id").to_pylist() == [99]
+    got_members = rels.column("members").to_pylist()[0]
+    assert [m["ref"] for m in got_members] == [7, 10, 99]
+    assert [m["type"] for m in got_members] == ["way", "node", "relation"]
+    assert [m["role"] for m in got_members] == ["outer", "", "outer"]
 
 
 def _degrees(nanos):
     return [v / 1e9 for v in nanos]
+
+
+def _nanos(degrees) -> list[int]:
+    """Degrees → nano-degrees. ``v / 1e9`` and the decoder's ``nano *
+    1e-9`` can differ in the last ulp, so compare as rounded integers."""
+    return np.rint(np.asarray(degrees) * 1e9).astype(np.int64).tolist()
 
 
 def test_locations_on_ways_roundtrip():
@@ -182,21 +209,58 @@ def test_locations_on_ways_roundtrip():
         dict(id=8, refs=[30, 10], way_lats=_degrees(lat2), way_lons=_degrees(lon2)),
     ])))
     ways = blk.ways
-    assert list(ways.ref_off) == [0, 3, 5]
-    got_lat = osmformat.nano_degrees(ways.way_lat_coord, blk.lat_offset, blk.granularity)
-    got_lon = osmformat.nano_degrees(ways.way_lon_coord, blk.lon_offset, blk.granularity)
-    assert list(got_lat) == lat1 + lat2
-    assert list(got_lon) == lon1 + lon2
+    assert pc.list_value_length(ways.column("refs")).to_pylist() == [3, 2]
+    assert pc.list_value_length(ways.column("way_lats")).to_pylist() == [3, 2]
+    assert _nanos(pc.list_flatten(ways.column("way_lats"))) == lat1 + lat2
+    assert _nanos(pc.list_flatten(ways.column("way_lons"))) == lon1 + lon2
 
-    # ways WITHOUT locations keep None (no phantom columns downstream)
+    # ways WITHOUT locations decode null (no phantom values downstream)
     blk2 = parse_primitive_block(encode_block("way", entity_table("way", [dict(id=9, refs=[1, 2])])))
-    assert blk2.ways.way_lat_coord is None
+    assert blk2.ways.column("way_lats").null_count == 1
+    assert blk2.ways.column("way_lons").null_count == 1
 
     # count-mismatch must be rejected on both ends
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="match refs"):
         encode_block("way", entity_table("way", [dict(id=1, refs=[1, 2], way_lats=[0.0], way_lons=[0.0])]))
+
+
+def test_block_units_and_negative_offsets():
+    """PrimitiveBlock granularity (17), date_granularity (18) and the
+    int64 lat/lon offsets (19/20; a negative one is a 10-byte varint)
+    scale every coordinate and timestamp of the block."""
+    node = entity_table("node", [dict(
+        id=1, lat_nano=51_500_000_000, lon_nano=-100_000_000,
+        info=dict(version=1, ts=2_000_000, changeset=3, uid=4, user="u", visible=True),
+    )])
+    way = entity_table("way", [dict(id=7, refs=[1, 2], way_lats=[51.5, 51.4999999], way_lons=[-0.1, -0.0999999])])
+    lon_offset = (-7) & (2**64 - 1)  # int64 -7 on the wire
+    units = MessageBuilder().varint(17, 1000).varint(19, 5).varint(20, lon_offset).varint(18, 500).tobytes()
+    nodes = parse_primitive_block(encode_block("node", node) + units).nodes
+    # wire coord = nano / 100 (the encoder's granularity); decoded = offset + 1000 * coord
+    assert nodes.column("lat_nano").to_pylist() == [5 + 1000 * 515_000_000]
+    assert nodes.column("lon_nano").to_pylist() == [-7 + 1000 * -1_000_000]
+    # the encoder writes seconds; 2 s × 500 ms
+    assert nodes.column("info").to_pylist()[0]["ts"].timestamp() == 1.0
+    ways = parse_primitive_block(encode_block("way", way) + units).ways
+    assert _nanos(ways.column("way_lats").to_pylist()[0]) == [5 + 1000 * 515_000_000, 5 + 1000 * 514_999_999]
+    assert _nanos(ways.column("way_lons").to_pylist()[0]) == [-7 + 1000 * -1_000_000, -7 + 1000 * -999_999]
+
+
+def test_missing_changeset_decodes_null():
+    """A way's or relation's Info without changeset (field 3) decodes
+    null, like a missing timestamp or uid, not 0."""
+    from pbf_spark.operators.decode import decode_blob_payload
+
+    info = MessageBuilder().varint(1, 2).varint(5, 1)  # version, user_sid
+    way = MessageBuilder().varint(1, 7).message(4, info)
+    rel = MessageBuilder().varint(1, 9).message(4, info)
+    groups = [MessageBuilder().message(3, way), MessageBuilder().message(4, rel)]
+    raw = build_primitive_block(groups, ["", "bob"])
+    rows = [r for rb in decode_blob_payload(raw, "raw", len(raw)) for r in rb.to_pylist()]
+    want = dict(version=2, uid=None, ts=None, changeset=None, user="bob", visible=True)
+    assert [(r["id"], r["info"]) for r in rows] == [(7, want), (9, want)]
 
 
 # sha256 of each decompressed blob (header first) of the seed-42 test
@@ -318,12 +382,19 @@ def _packed_sint64_delta(vals):
     return encode_varints(zigzag_encode(deltas).view(np.uint64))
 
 
+# a string table for the hand-built blocks: string id i is "s<i>"
+_STRINGS = [""] + [f"s{i}" for i in range(1, 100)]
+
+
 def _decode_entities(group_field, *msgs):
-    """Decode entity messages laid end to end, as in a PrimitiveGroup."""
-    lens = np.array([len(m) for m in msgs], dtype=np.int64)
-    ends = np.cumsum(lens)
-    b = np.frombuffer(b"".join(msgs), dtype=np.uint8)
-    return osmformat._decode_entities_arr(group_field, b, ends - lens, ends, 1000)
+    """Decode entity messages as one PrimitiveGroup (field 1 Node, 3 Way,
+    4 Relation) of a block whose string table holds ids 0-99 → the
+    kind's table."""
+    group = MessageBuilder()
+    for m in msgs:
+        group.bytes_field(group_field, m)
+    blk = parse_primitive_block(build_primitive_block([group], _STRINGS))
+    return blk[{1: 0, 3: 1, 4: 2}[group_field]]
 
 
 def test_way_unknown_fixed_width_fields_skipped():
@@ -342,9 +413,9 @@ def test_way_unknown_fixed_width_fields_skipped():
         + encode_varint(98 << 3 | WT_I32)
         + b"\x01\x02\x03\x04"
     )
-    soa = _decode_entities(3, raw)
-    assert soa.id[0] == 7
-    assert list(soa.refs) == [10, 25, 30]
+    ways = _decode_entities(3, raw)
+    assert ways.column("id").to_pylist() == [7]
+    assert ways.column("refs").to_pylist() == [[10, 25, 30]]
 
 
 def test_way_refs_split_across_packed_chunks():
@@ -362,15 +433,14 @@ def test_way_refs_split_across_packed_chunks():
     b.varint(1, 11)
     b.bytes_field(8, part1)
     b.bytes_field(8, part2)
-    soa = _decode_entities(3, b.tobytes())
-    assert list(soa.refs) == [10, 25, 30, 40]
+    ways = _decode_entities(3, b.tobytes())
+    assert ways.column("refs").to_pylist() == [[10, 25, 30, 40]]
     # and a two-message batch where only one message is split
     b2 = MessageBuilder()
     b2.varint(1, 12)
     b2.bytes_field(8, _packed_sint64_delta([100, 90]))
-    soa2 = _decode_entities(3, b.tobytes(), b2.tobytes())
-    assert list(soa2.refs[soa2.ref_off[0] : soa2.ref_off[1]]) == [10, 25, 30, 40]
-    assert list(soa2.refs[soa2.ref_off[1] : soa2.ref_off[2]]) == [100, 90]
+    ways2 = _decode_entities(3, b.tobytes(), b2.tobytes())
+    assert ways2.column("refs").to_pylist() == [[10, 25, 30, 40], [100, 90]]
 
 
 @pytest.mark.parametrize("codec,mod", [("lz4", "lz4.frame"), ("zstd", "zstandard")])
@@ -435,6 +505,29 @@ def test_cli_info(capsys):
     j = _json.loads(capsys.readouterr().out)
     assert j["node_count"] == 290
     assert main(["info", "/nonexistent.osm.pbf"]) == 1
+
+
+def test_info_counts_generated_file(fixture_dir, fixture_manifest, capsys):
+    """``read_info(extended=True)`` and ``python -m pbf_spark info -e -j``
+    count every entity of the generated fixture's standalone file."""
+    import json as _json
+
+    from pbf_spark.__main__ import main
+    from pbf_spark.sources import info
+
+    path = fixture_dir / "fixture.osm.pbf"
+    want = {f"{kind}_count": n for kind, n in fixture_manifest["counts"].items()}
+    i = info.read_info(path, extended=True)
+    assert {k: i[k] for k in want} == want
+    assert info.render_txt(i).splitlines()[-3:] == [
+        f"NodeCount: {want['node_count']:,}",
+        f"WayCount: {want['way_count']:,}",
+        f"RelationCount: {want['relation_count']:,}",
+    ]
+    assert main(["info", "-e", "-j", str(path)]) == 0
+    j = _json.loads(capsys.readouterr().out)
+    assert {k: j[k] for k in want} == want
+    assert j["writing_program"] == "pbf_spark-fixture-gen"
 
 
 def test_scan_spans_vec_rejects_varint_crossing_message_boundary():
@@ -514,7 +607,7 @@ def test_plain_nodes_decode_like_dense_nodes():
         return [r for rb in batches for r in rb.to_pylist()]
 
     dense_raw = encode_block("node", entity_table("node", _node_rows(ids, lat, lon, tags, info)))
-    table = list(parse_primitive_block(dense_raw).strings)
+    table = _strings(dense_raw)
     assert table == ["", "Café", "alice", "amenity", "bob", "cafe", "name"]
     sid = {s: i for i, s in enumerate(table)}
     dense = rows(dense_raw)
@@ -570,26 +663,25 @@ def test_unpacked_repeated_fields_decode_like_packed(group_field):
     """proto2 parsers accept a repeated scalar unpacked: keys, vals,
     refs, roles, memids and member types decode the same packed,
     unpacked, or split between the two."""
-    import dataclasses
-
     got = {f: _decode_entities(group_field, *_entity_msgs(group_field, f))
            for f in ("packed", "unpacked", "mixed")}
     for form in ("unpacked", "mixed"):
-        for fld in dataclasses.fields(osmformat.EntitySoA):
-            a, b = getattr(got["packed"], fld.name), getattr(got[form], fld.name)
-            assert (a is None) == (b is None), (form, fld.name)
-            if a is not None:
-                np.testing.assert_array_equal(a, b, err_msg=f"{form} {fld.name}")
-    soa = got["unpacked"]
-    assert list(soa.tag_off) == [0, 3, 4]
-    assert list(soa.tag_key) == [1, 3, 5, 1] and list(soa.tag_val) == [2, 4, 6, 9]
+        assert got[form].equals(got["packed"]), form
+    t = got["unpacked"]
+    assert [[(kv["key"], kv["value"]) for kv in tags] for tags in t.column("tags").to_pylist()] == [
+        [("s1", "s2"), ("s3", "s4"), ("s5", "s6")],
+        [("s1", "s9")],
+    ]
     if group_field == 1:
-        assert list(soa.id) == [-7, -8] and list(soa.lat_coord) == [-7000, -8000]
+        assert t.column("id").to_pylist() == [-7, -8]
+        assert t.column("lat_nano").to_pylist() == [-700_000, -800_000]  # coord × granularity 100
     elif group_field == 3:
-        assert list(soa.refs) == [70, 25, -30, 25, 80, 25, -30, 25]
+        assert t.column("refs").to_pylist() == [[70, 25, -30, 25], [80, 25, -30, 25]]
     else:
-        assert list(soa.mem_ref) == [7, -10, 99, 8, -10, 99]
-        assert list(soa.mem_type) == [1, 0, 2] * 2 and list(soa.mem_role) == [1, 0, 1] * 2
+        members = [m for ms in t.column("members").to_pylist() for m in ms]
+        assert [m["ref"] for m in members] == [7, -10, 99, 8, -10, 99]
+        assert [m["type"] for m in members] == ["way", "node", "relation"] * 2
+        assert [m["role"] for m in members] == ["s1", "", "s1"] * 2
 
 
 @pytest.mark.parametrize("group_field", [1, 3, 4])
@@ -611,7 +703,7 @@ def test_truncated_dense_nodes_raise():
     raw = encode_block("node", entity_table("node", [
         dict(id=i, lat_nano=100 * i, lon_nano=-100 * i) for i in (1, 2, 3)
     ]))
-    table = list(parse_primitive_block(raw).strings)
+    table = _strings(raw)
     dense = bytes(parse_message(parse_message(raw)[2][0])[2][0])
     assert len(parse_primitive_block(raw).nodes) == 3
     cut = MessageBuilder().bytes_field(2, dense[:-2])

@@ -68,8 +68,12 @@ def main(fixture_dir: str, out_json: str, barrier_dir: str, worker_id: int, n_wo
     tracker = CpuTracker(os.getppid())
     cpu_fn = tracker.total
 
-    from pbf_spark.session import WORKER_DAEMON_CONF
+    from pbf_spark.session import WORKER_DAEMON_CONF, local_root
 
+    # per-worker local dir and warehouse: the ways_bucketed phase's
+    # bucketed tables must never collide across concurrent workers
+    local_dir = os.path.join(local_root(), f"pbf-spark-local-w{worker_id}")
+    wh = os.path.join(local_root(), f"pbf-spark-scaling-wh-w{worker_id}")
     spark = (
         SparkSession.builder.appName(f"pbf_spark-scaling-w{worker_id}")
         .config("spark.sql.adaptive.enabled", "true")
@@ -77,10 +81,8 @@ def main(fixture_dir: str, out_json: str, barrier_dir: str, worker_id: int, n_wo
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.local.dir", f"/dev/shm/pbf-spark-local-w{worker_id}")
-        # static config: per-worker warehouse so the ways_bucketed phase's
-        # bucketed tables never collide across concurrent workers
-        .config("spark.sql.warehouse.dir", f"/dev/shm/pbf-spark-scaling-wh-w{worker_id}")
+        .config("spark.local.dir", local_dir)
+        .config("spark.sql.warehouse.dir", wh)  # static config
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "524288")
         .config(*WORKER_DAEMON_CONF)
@@ -160,7 +162,6 @@ def main(fixture_dir: str, out_json: str, barrier_dir: str, worker_id: int, n_wo
     # shuffles. Table writes are setup (ingest-time), not timed.
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     n_buckets = max(cores * 4, 8)
-    wh = f"/dev/shm/pbf-spark-scaling-wh-w{worker_id}"
     import shutil
 
     shutil.rmtree(wh, ignore_errors=True)
