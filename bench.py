@@ -222,7 +222,7 @@ def main() -> None:
     from pbf_spark.operators import ways as ways_ops
 
     ways_df = (
-        decode.decode_documents(docs, blobs, columns=frozenset({"refs"}), kinds=("way",), slim=True)
+        decode.decode_documents(docs, blobs, columns=frozenset({"refs"}), kinds=("way",))
         .select("id", "refs")
         .cache()
     )

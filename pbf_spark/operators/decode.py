@@ -8,7 +8,8 @@ each blob (≤8000 entities, mirroring the reference's EntityLimit) is
 inflated and parsed once into one Arrow table per entity kind (the wire
 codec builds the arrays directly: delta cumsum and tag splitting in
 numpy, string-table gathers in Arrow), and this operator only projects
-those tables onto the output schema.
+those tables onto the output schema. One rule, ``schema.projection``,
+sets both that schema and which kinds and columns the wire builds.
 
 Provenance columns (doc_id, span_idx, blob_seq) ride along so any entity
 row can be traced back to its document span (north-rule span-sequence
@@ -25,64 +26,56 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..model.schema import ENTITY_ARROW_SCHEMA, ENTITY_SCHEMA, KIND_FIELDS, entity_schema_subset
+from ..model.schema import ENTITY_KINDS, projection
 from ..util import spread
 from ..wire import frame as wire_frame
 from ..wire import osmformat
-
-# the nested columns ``columns=`` prunes to nulls
-_PRUNABLE = frozenset({"tags", "info", "refs", "members"})
 
 
 def _entity_batch(
     kind: str,
     table: pa.Table,
+    schema: pa.Schema,
     doc_id: str | None,
     span_idx: int | None,
     blob_seq: int | None,
-    columns: frozenset[str] | None = None,
-    out_schema: pa.Schema = ENTITY_ARROW_SCHEMA,
 ) -> pa.RecordBatch | None:
-    """One kind's block table (``schema.BLOCK_SCHEMAS[kind]``) projected
-    onto exactly ``out_schema``'s fields: degrees from the nano-degrees,
-    constant entity_type and provenance, and nulls for a column the kind
-    does not carry or ``columns`` prunes. The slim path drops whole
-    columns (not just nulls them): the JVM columnar→row conversion after
-    mapInArrow costs per column per row even when every value is null."""
+    """One kind's block table projected onto exactly ``schema``'s fields:
+    degrees from the nano-degrees, constant entity_type and provenance,
+    and nulls for a column the kind does not carry."""
     n = table.num_rows
     if n == 0:
         return None
     consts = {"entity_type": kind, "doc_id": doc_id, "span_idx": span_idx, "blob_seq": blob_seq}
-    zeros = pa.array(np.zeros(n, np.int32))
 
     def column(f: pa.Field) -> pa.Array:
-        if f.name in consts:  # a constant column is one value taken n times, in C++
-            return pa.array([consts[f.name]], f.type).take(zeros)
+        if f.name in consts:  # a constant column is one value repeated n times, in C++
+            return pa.repeat(pa.scalar(consts[f.name], f.type), n)
         if f.name in ("lat", "lon") and kind == "node":
             return pa.array(osmformat.to_degrees(table.column(f.name + "_nano").to_numpy()))
-        pruned = columns is not None and f.name in _PRUNABLE and f.name not in columns
-        if f.name in table.column_names and not pruned:
+        if f.name in table.column_names:
             return table.column(f.name).chunk(0)
         return pa.nulls(n, f.type)
 
-    return pa.RecordBatch.from_arrays([column(f) for f in out_schema], schema=out_schema)
+    return pa.RecordBatch.from_arrays([column(f) for f in schema], schema=schema)
 
 
-_ALL_KINDS = ("node", "way", "relation")
+def _strs(v) -> tuple[str, ...]:
+    """One string, or an iterable of them (a bare ``str`` is one value)."""
+    return (v,) if isinstance(v, str) else tuple(str(x) for x in v)
 
 
 def _normalize_tag_filter(tf) -> dict | None:
-    """Accepts an iterable of keys or a {key: values-or-None} mapping;
-    normalized once driver-side so the per-blob hot path sees a dict."""
+    """Accepts a key, an iterable of keys or a {key: value-or-values-or-None}
+    mapping; normalized once driver-side so the per-blob hot path sees a
+    dict."""
     if tf is None:
         return None
     if isinstance(tf, dict):
-        return {
-            str(k): (None if v is None else tuple(str(x) for x in v))
-            for k, v in tf.items()
-        }
-    return {str(k): None for k in tf}
+        return {str(k): None if v is None else _strs(v) for k, v in tf.items()}
+    return dict.fromkeys(_strs(tf))
 
 
 def _tag_filter_mask(tags: pa.ListArray, tag_filter: dict) -> np.ndarray:
@@ -112,23 +105,27 @@ def decode_blob_payload(
     span_idx: int | None = None,
     blob_seq: int | None = None,
     columns: frozenset[str] | None = None,
-    kinds: tuple[str, ...] = _ALL_KINDS,
-    out_schema: pa.Schema = ENTITY_ARROW_SCHEMA,
+    kinds: tuple[str, ...] = ENTITY_KINDS,
+    way_locations: bool = False,
     tag_filter: dict | None = None,
 ) -> list[pa.RecordBatch]:
-    """One OSMData blob payload → entity record batches (nodes, ways, rels).
+    """One OSMData blob payload → entity record batches (nodes, ways, rels)
+    with the ``schema.projection(kinds, columns, way_locations)`` schema;
+    the wire builds only those columns (and ``tags`` for a tag filter).
     Malformed wire input (a bad stream, a truncated message, a string id
     outside the table) raises ValueError naming the blob."""
+    schema = projection(kinds, columns, way_locations)
+    build = set(schema.names) | ({"tags"} if tag_filter is not None else set())
     try:
         raw = wire_frame.decompress_payload(codec, payload, raw_size)
-        block = osmformat.parse_primitive_block(raw)
+        block = osmformat.parse_primitive_block(raw, dict.fromkeys(kinds, build))
         out = []
-        for kind, table in zip(_ALL_KINDS, block):
+        for kind, table in zip(ENTITY_KINDS, block):
             if kind not in kinds:
                 continue
             if tag_filter is not None and table.num_rows:
                 table = table.filter(_tag_filter_mask(table.column("tags").chunk(0), tag_filter))
-            rb = _entity_batch(kind, table, doc_id, span_idx, blob_seq, columns, out_schema)
+            rb = _entity_batch(kind, table, schema, doc_id, span_idx, blob_seq)
             if rb is not None:
                 out.append(rb)
     except (ValueError, IndexError, zlib.error) as e:
@@ -145,15 +142,14 @@ _COALESCE_ROWS = 65536
 def _decode_map_arrow(
     batches: Iterator[pa.RecordBatch],
     columns: frozenset[str] | None = None,
-    coalesce_rows: int = _COALESCE_ROWS,
-    kinds: tuple[str, ...] = _ALL_KINDS,
-    out_schema: pa.Schema = ENTITY_ARROW_SCHEMA,
+    kinds: tuple[str, ...] = ENTITY_KINDS,
+    way_locations: bool = False,
     tag_filter: dict | None = None,
 ) -> Iterator[pa.RecordBatch]:
     # Per-blob decode emits ≤8000-row batches (1-3 per blob); shipping
     # those individually costs a fixed Arrow-IPC + JVM-columnar-batch
     # overhead per batch, which dominated r2's flat ~1.1M entities/s.
-    # Coalescing into ~coalesce_rows batches pays one extra column-level
+    # Coalescing into ~_COALESCE_ROWS batches pays one extra column-level
     # memcpy (cheap: warm memcpy streams at ~18 GB/s) to cut the per-batch
     # fixed cost ~8x.
     pending: list[pa.RecordBatch] = []
@@ -196,12 +192,12 @@ def _decode_map_arrow(
                 blob_seqs[i],
                 columns,
                 kinds,
-                out_schema,
+                way_locations,
                 tag_filter,
             ):
                 pending.append(rb)
                 pending_rows += rb.num_rows
-                if pending_rows >= coalesce_rows:
+                if pending_rows >= _COALESCE_ROWS:
                     yield from flush()
     yield from flush()
 
@@ -209,8 +205,7 @@ def _decode_map_arrow(
 def decode_blobs(
     blob_df: DataFrame,
     columns: frozenset[str] | set[str] | None = None,
-    kinds: tuple[str, ...] | None = None,
-    slim: bool = False,
+    kinds: tuple[str, ...] = ENTITY_KINDS,
     way_locations: bool = False,
     tag_filter=None,
 ) -> DataFrame:
@@ -221,51 +216,39 @@ def decode_blobs(
     (PrimitiveBlock independence, public osmformat spec), so this is a
     narrow transformation — no shuffle.
 
-    ``columns``: mapInArrow is opaque to Catalyst, so column pruning is
-    pushed into the UDF explicitly — pass the expensive nested columns
-    you need of {"tags", "info", "refs", "members"}; pruned columns
-    come back null with the schema unchanged.
+    The output schema is ``schema.projection(kinds, columns,
+    way_locations)``, and the wire builds only its columns: mapInArrow is
+    opaque to Catalyst, so column pruning is pushed into the UDF
+    explicitly.
 
-    ``kinds``: restrict to a subset of entity types at the source (the
-    other kinds' tables are never projected or shipped). ``slim=True`` (requires
-    ``kinds``) additionally DROPS the columns no requested kind can
-    populate (schema.KIND_FIELDS union) instead of emitting them as
-    nulls — the row-conversion cost after mapInArrow is per column per
-    row, so a nodes-only pipeline should not ship refs/members at all.
+    ``columns``: the nested columns you need of {"tags", "info", "refs",
+    "members"} (None: all); a pruned column is absent from the schema.
 
-    ``tag_filter``: decode-side predicate pushdown — an iterable of tag
-    KEYS (presence test) or a ``{key: values-or-None}`` mapping; only
+    ``kinds``: the entity types to decode; the schema holds only the
+    columns they can populate (``schema.KIND_FIELDS`` union), since the
+    row conversion after mapInArrow costs per column per row even for
+    all-null columns.
+
+    ``way_locations``: add the LocationsOnWays ``way_lats``/``way_lons``
+    columns (when ways are decoded).
+
+    ``tag_filter``: decode-side predicate pushdown — a tag KEY or an
+    iterable of them (presence test), or a ``{key: value-or-values-or-
+    None}`` mapping (a bare string is one key or one value); only
     entities with ≥1 matching tag are projected and shipped. The match
-    runs in Arrow on each block's decoded ``tags`` column (key equality
-    and value membership over the flattened tags), so a planet-scale
-    "extract POIs" decode pays the projection and transfer only for
-    matches. NOTE an entity-level
-    predicate: a ways filter drops the untagged nodes carrying their
+    runs in Arrow on each block's decoded ``tags`` column (built for the
+    filter even when ``columns`` prunes it), so a planet-scale "extract
+    POIs" decode pays the projection and transfer only for matches.
+    NOTE an entity-level predicate: a ways filter drops the untagged nodes carrying their
     geometry — decode nodes in a separate ``kinds=("node",)`` pass (or
     use LocationsOnWays files) when geometry is needed.
     """
     want = frozenset(columns) if columns is not None else None
-    kinds_t = tuple(kinds) if kinds is not None else _ALL_KINDS
-    spark_schema, arrow_schema = ENTITY_SCHEMA, ENTITY_ARROW_SCHEMA
-    way_locs = ["way_lats", "way_lons"] if (way_locations and "way" in kinds_t) else []
-    if slim:
-        if kinds is None:
-            raise ValueError("slim=True requires kinds=(...) — the union schema is not slim")
-        fields: list[str] = []
-        for k in kinds_t:
-            fields.extend(f for f in KIND_FIELDS[k] if f not in fields)
-        if want is not None:
-            drop = {"tags", "info", "refs", "members"} - want
-            fields = [f for f in fields if f not in drop]
-        spark_schema, arrow_schema = entity_schema_subset(fields + way_locs)
-    elif way_locs:
-        spark_schema, arrow_schema = entity_schema_subset(
-            [f.name for f in ENTITY_SCHEMA.fields] + way_locs
-        )
+    kinds = tuple(kinds)
+    schema = from_arrow_schema(projection(kinds, want, way_locations))
     tf = _normalize_tag_filter(tag_filter)
     return blob_df.mapInArrow(
-        lambda it: _decode_map_arrow(it, want, _COALESCE_ROWS, kinds_t, arrow_schema, tf),
-        spark_schema,
+        lambda it: _decode_map_arrow(it, want, kinds, way_locations, tf), schema
     )
 
 
@@ -295,8 +278,7 @@ def decode_documents(
     docs: DataFrame,
     media_blobs: DataFrame,
     columns: frozenset[str] | set[str] | None = None,
-    kinds: tuple[str, ...] | None = None,
-    slim: bool = False,
+    kinds: tuple[str, ...] = ENTITY_KINDS,
     tag_filter=None,
 ) -> DataFrame:
     """Interleaved document table + blob sidecar → entity DataFrame (B1+B2):
@@ -305,7 +287,7 @@ def decode_documents(
     # wildly underestimates decode CPU: one task per core (util.spread;
     # a streaming plan keeps the join's partitions)
     joined = spread(document_blobs(docs, media_blobs))
-    return decode_blobs(joined, columns, kinds=kinds, slim=slim, tag_filter=tag_filter)
+    return decode_blobs(joined, columns, kinds=kinds, tag_filter=tag_filter)
 
 
 def count_by_type(entities: DataFrame) -> DataFrame:

@@ -29,10 +29,6 @@ def _metadata_dir(table_dir: str | Path) -> Path:
     return Path(table_dir) / "metadata"
 
 
-def _data_dir(table_dir: str | Path) -> Path:
-    return Path(table_dir) / "data"
-
-
 def current_snapshot(table_dir: str | Path) -> dict | None:
     md = _metadata_dir(table_dir)
     hint = md / VERSION_HINT

@@ -49,7 +49,8 @@ def read_info(path: str | Path, extended: bool = False) -> dict:
                 if not extended:
                     break
             elif blob_type == "OSMData" and extended:
-                blk = osmformat.parse_primitive_block(frame.unpack_blob(blob))
+                # the counts need only the ids: build no other column
+                blk = osmformat.parse_primitive_block(frame.unpack_blob(blob), {})
                 for kind, table in zip(counts, blk):
                     counts[kind] += table.num_rows
     if h is None:

@@ -3,8 +3,9 @@
 Clean-room implementation of the public OSM PBF format (wiki.openstreetmap.org
 /wiki/PBF_Format; field numbers as in /root/reference/internal/pb/osm.proto).
 A block's entities of one kind are one ``pyarrow.Table`` with
-``schema.BLOCK_SCHEMAS[kind]``: ``parse_primitive_block`` returns them and
-``encode_block`` takes them. Decode semantics mirror the reference decoder
+``schema.BLOCK_SCHEMAS[kind]``: ``parse_primitive_block`` returns them (or
+the columns a decode projects) and ``encode_block`` takes them. Decode
+semantics mirror the reference decoder
 (/root/reference/internal/decoder/primitive.go):
 
 - per-block string table, index 0 reserved empty (osm.proto:121-124)
@@ -25,6 +26,7 @@ entities per block (EntityLimit, primitive.go:38-41).
 
 from __future__ import annotations
 
+from collections.abc import Collection, Mapping
 from dataclasses import dataclass
 from typing import NamedTuple
 
@@ -65,8 +67,9 @@ def _to_i64(u: np.ndarray) -> np.ndarray:
 
 class Block(NamedTuple):
     """One PrimitiveBlock's entities, one table per kind in file order,
-    each with ``schema.BLOCK_SCHEMAS[kind]`` and one chunk per column
-    (none when the block has no entity of the kind)."""
+    each with the columns of ``schema.BLOCK_SCHEMAS[kind]`` that the parse
+    builds and one chunk per column (none when the block has no entity of
+    the kind)."""
 
     nodes: pa.Table
     ways: pa.Table
@@ -90,11 +93,19 @@ class _Scale(NamedTuple):
             nano_degrees(lon, self.lon_offset, self.granularity),
         )
 
+    def check_ids(self, *ids: np.ndarray) -> None:
+        """Raise on a string id outside the table. Every string column's
+        ids are checked whether or not the parse builds the column, so
+        malformed input raises the same error whatever the decode builds."""
+        for a in ids:
+            if a.size and (a.min() < 0 or a.max() >= len(self.strings)):
+                bad = a[(a < 0) | (a >= len(self.strings))][0]
+                raise IndexError(f"string id {bad} outside the block's {len(self.strings)}-entry table")
 
-def _table(kind: str, n: int, cols: dict[str, pa.Array]) -> pa.Table:
-    """The kind's block table over ``n`` entities; a column not in
-    ``cols`` is null."""
-    schema = BLOCK_SCHEMAS[kind]
+
+def _table(schema: pa.Schema, n: int, cols: dict[str, pa.Array]) -> pa.Table:
+    """The table of ``schema`` (a kind's block columns to build) over
+    ``n`` entities; a column not in ``cols`` is null."""
     return pa.Table.from_arrays([cols.get(f.name, pa.nulls(n, f.type)) for f in schema], schema=schema)
 
 
@@ -238,7 +249,7 @@ def _info(
     )
 
 
-def _decode_dense_nodes(buf: memoryview, scale: _Scale) -> pa.Table:
+def _decode_dense_nodes(buf: memoryview, scale: _Scale, schema: pa.Schema) -> pa.Table:
     ids = lats = lons = _EMPTY_I64
     kv = _EMPTY_I64
     dense_info_buf: memoryview | None = None
@@ -256,13 +267,15 @@ def _decode_dense_nodes(buf: memoryview, scale: _Scale) -> pa.Table:
     n = ids.size
     if lats.size != n or lons.size != n:
         raise ValueError(f"DenseNodes has {n} ids, {lats.size} lats and {lons.size} lons")
-    lat_nano, lon_nano = scale.nanos(np.cumsum(lats), np.cumsum(lons))
-    cols = {
-        "id": pa.array(np.cumsum(ids)),
-        "lat_nano": pa.array(lat_nano),
-        "lon_nano": pa.array(lon_nano),
-        "tags": _tags(scale, *_kv_to_ragged(kv, n)),
-    }
+    build = schema.names
+    cols = {"id": pa.array(np.cumsum(ids))}
+    if "lat_nano" in build or "lon_nano" in build:
+        lat_nano, lon_nano = scale.nanos(np.cumsum(lats), np.cumsum(lons))
+        cols["lat_nano"], cols["lon_nano"] = pa.array(lat_nano), pa.array(lon_nano)
+    off, keys, vals = _kv_to_ragged(kv, n)
+    scale.check_ids(keys, vals)
+    if "tags" in build:
+        cols["tags"] = _tags(scale, off, keys, vals)
     if dense_info_buf is not None:
         runs = {}
         for f, _wt, v in scan_fields(dense_info_buf):
@@ -274,20 +287,27 @@ def _decode_dense_nodes(buf: memoryview, scale: _Scale) -> pa.Table:
         if any(run.size != n for run in runs.values()):
             raise ValueError(f"DenseInfo arrays disagree with the {n} DenseNodes ids")
         everyone = np.ones(n, dtype=bool)
-        cols["info"] = _info(scale, n, None, {f: (run, everyone) for f, run in runs.items()})
-    return _table("node", n, cols)
+        _info_column(cols, schema, scale, n, None, {f: (run, everyone) for f, run in runs.items()})
+    return _table(schema, n, cols)
 
 
-def _decode_info_batch_spans(
-    b: np.ndarray, owners: np.ndarray, starts: np.ndarray, lens: np.ndarray, n: int, scale: _Scale
-) -> pa.StructArray:
+def _info_column(cols: dict, schema: pa.Schema, scale: _Scale, n: int, owners, fields) -> None:
+    """Check the user string ids (Info field 5); ``cols["info"]`` from
+    ``_info`` when the schema has the column."""
+    if 5 in fields:
+        scale.check_ids(fields[5][0])
+    if "info" in schema.names:
+        cols["info"] = _info(scale, n, owners, fields)
+
+
+def _info_spans(b: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> dict:
     """Vectorized Info decode over the submessage SPANS the wavefront
     scan collected: one more wavefront pass over all Info submessages of
-    a group instead of per-entity field handling."""
+    a group instead of per-entity field handling → ``_info``'s fields."""
     varints, present, _spans = _scan_spans_vec(
         b, starts, starts + lens, packed_fields=(), varint_fields=(1, 2, 3, 4, 5, 6), msg_fields=()
     )
-    return _info(scale, n, owners, {f: (varints[f], present[f]) for f in varints})
+    return {f: (varints[f], present[f]) for f in varints}
 
 
 def _gather_varints(b: np.ndarray, starts: np.ndarray, ends: np.ndarray) -> np.ndarray:
@@ -496,7 +516,6 @@ def _packed_spans(
 
 
 _KINDS = {1: "node", 3: "way", 4: "relation"}  # PrimitiveGroup field → entity kind
-_EMPTY = {kind: schema.empty_table() for kind, schema in BLOCK_SCHEMAS.items()}
 # Packed repeated fields beyond keys 2 / vals 3 per PrimitiveGroup field
 # → sint64 delta-coded (True) or plain uint (False), osm.proto Way/Relation
 _PACKED = {
@@ -507,11 +526,16 @@ _PACKED = {
 
 
 def _decode_entities_arr(
-    group_field: int, b: np.ndarray, starts: np.ndarray, ends: np.ndarray, scale: _Scale
+    group_field: int,
+    b: np.ndarray,
+    starts: np.ndarray,
+    ends: np.ndarray,
+    scale: _Scale,
+    schema: pa.Schema,
 ) -> pa.Table:
     """Node (group field 1), Way (3) or Relation (4) messages at
-    ``b[starts:ends]`` → the kind's entity table, all through one
-    wavefront scan.
+    ``b[starts:ends]`` → the kind's entity table with ``schema``'s
+    columns, all through one wavefront scan.
 
     Every kind carries id 1, packed keys 2 / vals 3 and Info 4; a Node's
     id, lat 8 and lon 9 are zigzag varints (a Way's or Relation's id is a
@@ -532,30 +556,39 @@ def _decode_entities_arr(
 
     parallel(2, 3)
     ids = zigzag_decode(varints[1]) if node else varints[1]
-    cols = {"id": pa.array(ids), "tags": _tags(scale, rag[2][0], rag[2][1], rag[3][1])}
+    build = schema.names
+    cols = {"id": pa.array(ids)}
+    scale.check_ids(rag[2][1], rag[3][1])
+    if "tags" in build:
+        cols["tags"] = _tags(scale, rag[2][0], rag[2][1], rag[3][1])
     if spans[4][0].size:
-        cols["info"] = _decode_info_batch_spans(b, *spans[4], n, scale)
+        _info_column(cols, schema, scale, n, spans[4][0], _info_spans(b, *spans[4][1:]))
     if node:
-        lat, lon = (zigzag_decode(varints[f]) for f in (8, 9))
-        cols["lat_nano"], cols["lon_nano"] = map(pa.array, scale.nanos(lat, lon))
+        if "lat_nano" in build or "lon_nano" in build:
+            lat, lon = (zigzag_decode(varints[f]) for f in (8, 9))
+            cols["lat_nano"], cols["lon_nano"] = map(pa.array, scale.nanos(lat, lon))
     elif group_field == 3:
         ref_off, refs = rag[8]
-        cols["refs"] = _list("refs", ref_off, pa.array(refs))
+        if "refs" in build:
+            cols["refs"] = _list("refs", ref_off, pa.array(refs))
         if rag[9][1].size or rag[10][1].size:
             # spec: per way, refs, lat and lon have equal counts (osm.proto:233-235)
             parallel(8, 9, 10)
-            for name, nano in zip(("way_lats", "way_lons"), scale.nanos(rag[9][1], rag[10][1])):
-                cols[name] = _list(name, ref_off, pa.array(to_degrees(nano)))
+            if "way_lats" in build or "way_lons" in build:
+                for name, nano in zip(("way_lats", "way_lons"), scale.nanos(rag[9][1], rag[10][1])):
+                    cols[name] = _list(name, ref_off, pa.array(to_degrees(nano)))
     else:
         parallel(9, 8, 10)
         mem_off, mem_ref = rag[9]
         types = rag[10][1]
         if (types > 2).any() or (types < 0).any():
             raise ValueError("unknown relation member type")
-        members = [pa.array(mem_ref), _MEMBER_TYPES.take(types), scale.strings.take(rag[8][1])]
-        member = pa.StructArray.from_arrays(members, fields=list(_TYPE["members"].value_type))
-        cols["members"] = _list("members", mem_off, member)
-    return _table(_KINDS[group_field], n, cols)
+        scale.check_ids(rag[8][1])
+        if "members" in build:
+            members = [pa.array(mem_ref), _MEMBER_TYPES.take(types), scale.strings.take(rag[8][1])]
+            member = pa.StructArray.from_arrays(members, fields=list(_TYPE["members"].value_type))
+            cols["members"] = _list("members", mem_off, member)
+    return _table(schema, n, cols)
 
 
 def _int64(u: int) -> int:
@@ -563,13 +596,23 @@ def _int64(u: int) -> int:
     return u - (1 << 64) if u >= 1 << 63 else u
 
 
-def parse_primitive_block(raw: bytes) -> Block:
+def parse_primitive_block(raw: bytes, columns: Mapping[str, Collection[str]] | None = None) -> Block:
     """Decode an (already uncompressed) PrimitiveBlock into one entity
     table per kind.
+
+    ``columns`` maps a kind to the ``BLOCK_SCHEMAS`` columns to build
+    (``id`` always; a kind it leaves out builds only ``id``); None builds
+    every column of every kind. Every entity is parsed and checked either
+    way, so malformed input raises whatever the projection.
 
     Mirrors parsePrimitiveBlock (/root/reference/internal/decoder/
     primitive.go:27-44): all groups emitted in file order, grouped by type.
     """
+    schemas = {
+        kind: schema if columns is None
+        else pa.schema([f for f in schema if f.name == "id" or f.name in columns.get(kind, ())])
+        for kind, schema in BLOCK_SCHEMAS.items()
+    }
     fields = parse_message(raw)
     scale = _Scale(
         strings=_decode_string_table(fields[1][0]) if 1 in fields else pa.array([""], pa.string()),
@@ -612,7 +655,7 @@ def parse_primitive_block(raw: bytes) -> Block:
                         shift += 7
                 f = key >> 3
                 if f == 2:
-                    parts[1].append(_decode_dense_nodes(group_buf[pos : pos + ln], scale))
+                    parts[1].append(_decode_dense_nodes(group_buf[pos : pos + ln], scale, schemas["node"]))
                 else:
                     put_f(f)
                     put_s(pos)
@@ -645,10 +688,11 @@ def parse_primitive_block(raw: bytes) -> Block:
         for f, kind_parts in parts.items():
             sel = fa == f
             if sel.any():
-                kind_parts.append(_decode_entities_arr(f, seg, starts[sel], ends[sel], scale))
+                kind = _KINDS[f]
+                kind_parts.append(_decode_entities_arr(f, seg, starts[sel], ends[sel], scale, schemas[kind]))
     return Block(
         *(
-            _EMPTY[kind] if not parts[f]
+            pa.Table.from_batches([], schemas[kind]) if not parts[f]
             else parts[f][0] if len(parts[f]) == 1
             else pa.concat_tables(parts[f]).combine_chunks()
             for f, kind in _KINDS.items()

@@ -28,7 +28,7 @@ def test_golden_counts(entities, fixture_manifest):
     assert got == fixture_manifest["counts"]
 
 
-def test_decode_coalescing_row_identical(fixture_dir):
+def test_decode_coalescing_row_identical(fixture_dir, monkeypatch):
     """Batch coalescing (~64k-row output batches) must be a pure
     repackaging: same rows, same order, as per-blob batches."""
     import pyarrow as pa
@@ -39,8 +39,9 @@ def test_decode_coalescing_row_identical(fixture_dir):
     files = sorted((fixture_dir / "media_blobs" / "data").glob("*.parquet"))
     t = pa.concat_tables([pq.read_table(p) for p in files])
     batches = t.to_batches(max_chunksize=100)
-    per_blob = pa.Table.from_batches(list(_decode_map_arrow(iter(batches), coalesce_rows=1)))
     coalesced = pa.Table.from_batches(list(_decode_map_arrow(iter(batches))))
+    monkeypatch.setattr(decode, "_COALESCE_ROWS", 1)
+    per_blob = pa.Table.from_batches(list(_decode_map_arrow(iter(batches))))
     assert coalesced.num_rows == per_blob.num_rows
     assert coalesced.combine_chunks().equals(per_blob.combine_chunks())
 
@@ -53,32 +54,71 @@ def test_sample_pbf_file_golden(spark):
     assert got == {"node": 290, "way": 44, "relation": 5}  # info_integration_test.go analogue
 
 
-def test_slim_typed_decode_matches_unified(spark, fixture_dir, entities, fixture_manifest):
-    """kinds+slim decode: node-only slim frame drops refs/members from
-    the SCHEMA (not just nulls them) and its rows equal the unified
-    frame's node rows; way-only slim keeps refs and matches too."""
+def test_projection_matches_unified(spark, fixture_dir, entities, fixture_manifest):
+    """One projection rule: a decode's columns are exactly
+    ``schema.projection(kinds, columns)`` and its rows equal the unified
+    frame's rows of those kinds projected onto them. A pruned column is
+    absent, not null; a kinds decode drops the columns no requested kind
+    populates (node-only: no refs/members; way-only: no lat/members;
+    relation-only: no refs/lat). A tag filter reads tags the projection
+    does not output."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from pbf_spark.model.schema import ENTITY_ARROW_SCHEMA, ENTITY_KINDS, projection
+
     docs = iceberg_lite.read_table(spark, fixture_dir / "documents_interleaved")
     blobs = iceberg_lite.read_table(spark, fixture_dir / "media_blobs")
+    assert entities.schema == from_arrow_schema(ENTITY_ARROW_SCHEMA)
 
-    nodes = decode.decode_documents(docs, blobs, kinds=("node",), slim=True)
+    def check(df, want, kinds):
+        want = want.where(F.col("entity_type").isin(*kinds)).select(*df.columns)
+        assert df.exceptAll(want).isEmpty() and want.exceptAll(df).isEmpty()
+        assert df.count() == sum(fixture_manifest["counts"][k] for k in kinds)
+
+    cases = {
+        "default": {},
+        "geometry": dict(columns=frozenset()),
+        "way refs": dict(kinds=("way",), columns={"refs"}),
+        "nodes": dict(kinds=("node",)),
+        "ways": dict(kinds=("way",)),
+        "relations": dict(kinds=("relation",)),
+    }
+    frames = {}
+    for name, kw in cases.items():
+        kinds = kw.get("kinds", ENTITY_KINDS)
+        df = frames[name] = decode.decode_documents(docs, blobs, **kw)
+        assert df.columns == projection(kinds, kw.get("columns")).names, name
+        check(df, entities, kinds)
+
+    assert frames["default"].columns == entities.columns
+    assert frames["geometry"].columns == [
+        "entity_type", "id", "lat", "lon", "lat_nano", "lon_nano", "doc_id", "span_idx", "blob_seq"
+    ]
+    assert frames["way refs"].columns == ["entity_type", "id", "refs", "doc_id", "span_idx", "blob_seq"]
+    nodes, ways, rels = frames["nodes"], frames["ways"], frames["relations"]
     assert "refs" not in nodes.columns and "members" not in nodes.columns
     assert {"lat", "lon", "lat_nano", "lon_nano", "tags", "info"} <= set(nodes.columns)
-    assert nodes.count() == fixture_manifest["counts"]["node"]
-    cols = nodes.columns
-    uni_nodes = entities.where("entity_type='node'").select(*cols)
-    assert nodes.exceptAll(uni_nodes).isEmpty() and uni_nodes.exceptAll(nodes).isEmpty()
-
-    ways = decode.decode_documents(docs, blobs, kinds=("way",), slim=True)
     assert "lat" not in ways.columns and "members" not in ways.columns
-    assert ways.count() == fixture_manifest["counts"]["way"]
-    uni_ways = entities.where("entity_type='way'").select(*ways.columns)
-    assert ways.exceptAll(uni_ways).isEmpty() and uni_ways.exceptAll(ways).isEmpty()
-
-    rels = decode.decode_documents(docs, blobs, kinds=("relation",), slim=True)
     assert "refs" not in rels.columns and "lat" not in rels.columns
-    assert rels.count() == fixture_manifest["counts"]["relation"]
-    uni_rels = entities.where("entity_type='relation'").select(*rels.columns)
-    assert rels.exceptAll(uni_rels).isEmpty() and uni_rels.exceptAll(rels).isEmpty()
+
+    pushed = decode.decode_documents(docs, blobs, columns=frozenset(), tag_filter=["highway"])
+    assert "tags" not in pushed.columns
+    highway = entities.where(F.exists("tags", lambda t: t["key"] == F.lit("highway")))
+    want = highway.select(*pushed.columns)
+    assert pushed.exceptAll(want).isEmpty() and want.exceptAll(pushed).isEmpty()
+    assert pushed.count() > 0
+
+
+def test_projection_rejects_unknown_names(spark, fixture_dir):
+    """A misspelt kind or column raises, naming the valid ones, instead
+    of decoding nothing or pruning the column."""
+    blobs = iceberg_lite.read_table(spark, fixture_dir / "media_blobs")
+    with pytest.raises(ValueError, match="unknown kinds \\['nodes'\\]; valid kinds: node, way, relation"):
+        decode.decode_blobs(blobs, kinds=("nodes",))
+    with pytest.raises(ValueError, match="unknown columns \\['tag'\\]; valid columns: tags, info, refs, members"):
+        decode.decode_blobs(blobs, columns={"tag"})
+    with pytest.raises(ValueError, match="valid kinds"):
+        decode.decode_blob_payload(b"", "raw", 0, kinds=("nodes",))
 
 
 def test_way_locations_decode(spark):
@@ -109,10 +149,10 @@ def test_way_locations_decode(spark):
 
     # default schema unchanged (opt-in column)
     assert "way_lats" not in decode.decode_blobs(blob_df).columns
-    # slim way decode can carry them too
-    slim = decode.decode_blobs(blob_df, kinds=("way",), slim=True, way_locations=True)
-    assert "way_lats" in slim.columns and "lat" not in slim.columns
-    assert slim.collect()[0]["way_lats"] == row["way_lats"]
+    # a way-only decode can carry them too
+    ways = decode.decode_blobs(blob_df, kinds=("way",), way_locations=True)
+    assert "way_lats" in ways.columns and "lat" not in ways.columns
+    assert ways.collect()[0]["way_lats"] == row["way_lats"]
 
 
 def test_corrupt_blob_error_names_blob(spark):
@@ -413,3 +453,12 @@ def test_tag_filter_pushdown_matches_spark_filter(spark, fixture_dir, entities):
 
     # filter on a key absent from the corpus -> empty, not an error
     assert decode.decode_documents(docs, blobs, tag_filter=["no_such_key"]).count() == 0
+
+    # a bare string is one key, or one value
+    assert canon(decode.decode_documents(docs, blobs, tag_filter="highway").select(*sel)) == canon(pushed)
+    one_value = decode.decode_documents(docs, blobs, tag_filter={"highway": "primary"}).select(*sel)
+    expected_one = entities.where(
+        F.exists("tags", lambda t: (t["key"] == F.lit("highway")) & (t["value"] == F.lit("primary")))
+    ).select(*sel)
+    assert canon(one_value) == canon(expected_one)
+    assert expected_one.count() > 0

@@ -767,3 +767,56 @@ def test_blob_decode_errors_name_the_blob():
     for codec, payload in (("zlib", b"\x00" + packed[1:]), ("raw", raw[:-2]), ("raw", raw)):
         with pytest.raises(ValueError, match="doc_id=d1 span_idx=2 blob_seq=5: "):
             decode_blob_payload(payload, codec, len(raw), "d1", 2, 5)
+
+
+def _out_of_range_string_id_groups():
+    """One PrimitiveGroup per string column, each naming string id 150:
+    tag keys (Node, DenseNodes, Way), an Info user (Node, DenseNodes,
+    Way) and a member role."""
+    from pbf_spark.wire.varint import encode_varints
+
+    def packed(*v):
+        return encode_varints(np.array(v, np.uint64))
+
+    def sint(*v):
+        return _packed_sint64_delta(v)
+
+    def node():
+        return MessageBuilder().svarint(1, 1).svarint(8, 0).svarint(9, 0)
+
+    def dense():
+        return MessageBuilder().bytes_field(1, sint(1)).bytes_field(8, sint(0)).bytes_field(9, sint(0))
+
+    def way():
+        return MessageBuilder().varint(1, 7)
+
+    def tags(b):
+        return b.bytes_field(2, packed(150)).bytes_field(3, packed(1))
+
+    info = MessageBuilder().varint(1, 1).varint(5, 150)
+    dense_info = MessageBuilder().bytes_field(1, packed(1)).bytes_field(5, sint(150))
+    return {
+        "node tags": (1, tags(node())),
+        "node user": (1, node().message(4, info)),
+        "dense tags": (2, dense().bytes_field(10, packed(150, 1, 0))),
+        "dense user": (2, dense().message(5, dense_info)),
+        "way tags": (3, tags(way())),
+        "way user": (3, way().message(4, info)),
+        "member role": (4, way().bytes_field(8, packed(150)).bytes_field(9, sint(5)).bytes_field(10, packed(0))),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_out_of_range_string_id_groups()))
+def test_string_ids_checked_in_columns_not_built(case):
+    """A string id outside the block's table raises whether or not the
+    decode builds its column: every projection of the decode, and a
+    parse that builds only the ids, reject it."""
+    from pbf_spark.operators.decode import decode_blob_payload
+
+    group_field, msg = _out_of_range_string_id_groups()[case]
+    raw = build_primitive_block([MessageBuilder().message(group_field, msg)], _STRINGS)
+    with pytest.raises(IndexError, match="string id 150 outside the block's 100-entry table"):
+        parse_primitive_block(raw, {})
+    for kw in ({}, dict(columns=frozenset()), dict(kinds=("node",)), dict(kinds=("way",), columns=frozenset())):
+        with pytest.raises(ValueError, match="malformed blob .*string id 150"):
+            decode_blob_payload(raw, "raw", len(raw), **kw)
