@@ -493,15 +493,14 @@ _HAVERSINE_SQL = (
 
 def knn_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN of 20 query points (every 500th event) over all event points
-    via one hex k-ring candidate pass plus the brute-force fallback;
-    oracle is an exhaustive SQL scan."""
+    via one histogram-sized hex-cell candidate join; oracle is an
+    exhaustive SQL scan."""
     from .operators.knn import knn_join
 
     pts = event_points(spark, sf_dir)
     # query side: 20 rows survive the filter — build them from the plain
-    # scan (parallel=False): knn_join reads it twice (the candidate pass
-    # and the anti join that picks its brute-force queries), and neither
-    # read should re-execute the fact-side exchange
+    # scan (parallel=False): the candidate join reads them once, and a
+    # fact-side exchange would cost more than it parallelizes
     queries = (
         event_points(spark, sf_dir, parallel=False)
         .where(F.col("id") % 500 == 0)

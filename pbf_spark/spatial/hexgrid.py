@@ -165,9 +165,14 @@ def unpack(cell):
 
 def geo_to_cell(lat, lon, res: int = 9) -> np.ndarray:
     """Degrees → hex cell id at resolution ``res`` (the geoToH3 analogue)."""
+    return geo_to_cells(lat, lon, (res,))[0]
+
+
+def geo_to_cells(lat, lon, resolutions) -> np.ndarray:
+    """``geo_to_cell`` at each of ``resolutions`` from one projection,
+    shape (len(resolutions), n)."""
     face, px, py = geo_to_face_xy(np.asarray(lat, np.float64), np.asarray(lon, np.float64))
-    q, r = hex_round(*_xy_to_axial(px, py, res))
-    return pack(face, q, r, res)
+    return np.stack([pack(face, *hex_round(*_xy_to_axial(px, py, r)), r) for r in resolutions])
 
 
 def cell_to_geo(cell) -> tuple[np.ndarray, np.ndarray]:

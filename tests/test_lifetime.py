@@ -75,6 +75,19 @@ def test_concurrent_calls_match_serial(spark):
     assert concurrent == serial
 
 
+def test_knn_join_holds_no_storage(spark):
+    """knn_join returns a lazy frame: neither the call nor its result
+    leaves an SQL-cache entry or a persisted RDD."""
+    pts = Q.event_points(spark, SF)
+    probes = pts.where(F.col("id") % 40 == 0).select(F.col("id").alias("query_id"), "lat", "lon")
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    entries, before = _cache_entries(spark), persistent()
+    out = knn_join(pts, probes, k=5)
+    assert out.collect()
+    assert _cache_entries(spark) == entries, "knn_join left entries in the SQL cache"
+    assert persistent() == before, "knn_join left an RDD persisted"
+
+
 def test_write_pbf_releases_its_checkpoint(spark, fixture_dir, tmp_path, monkeypatch):
     from pbf_spark.operators.decode import decode_documents
     from pbf_spark.sources import iceberg_lite, pbf_sink

@@ -182,23 +182,15 @@ def test_range_join_no_cross_join(spark):
     assert any(n == "BroadcastHashJoinExec" and "Asin" in c for n, _, c, _ in nodes)
 
 
-def test_knn_refine_in_codegen(spark, monkeypatch):
-    """knn_events returns a checkpoint scan, so the ranked candidate plan
-    is checked on its way into the checkpoint, after it ran."""
-    from pbf_spark.operators import knn
-
-    plans = []
-    materialize = knn.checkpoint_and_release
-
-    def capture(df, *scratch):
-        out = materialize(df, *scratch)
-        plans.append(executed_nodes(df))
-        return out
-
-    monkeypatch.setattr(knn, "checkpoint_and_release", capture)
-    Q.knn_events(spark, SF).collect()
-    (nodes,) = plans
+def test_knn_refine_in_codegen(spark):
+    """knn_events is one cell equi-join ranked by a window: the distance
+    refine runs in codegen and no pass crosses queries with all points."""
+    df = Q.knn_events(spark, SF)
+    df.collect()
+    nodes = executed_nodes(df)
     assert_refine_in_codegen(nodes)
+    names = {n for n, _, _, _ in nodes}
+    assert not names & {"CartesianProductExec", "BroadcastNestedLoopJoinExec"}, names
 
 
 def test_higher_order_lambdas_are_codegen_fallbacks(spark):
@@ -228,26 +220,13 @@ def test_latest_events_single_window_exchange(spark):
     assert "Join" not in plan
 
 
-def test_spatial_join_udfs_evaluate_once(spark, monkeypatch):
-    """Each Python UDF chain of the kNN and range candidate pass runs in
+def test_spatial_join_udfs_evaluate_once(spark):
+    """Each Python UDF chain of the kNN and range candidate joins runs in
     one ``ArrowEvalPython`` node: the point's cell, and the query's cell
-    → ring. Catalyst would otherwise copy a deterministic UDF into the
-    null and size filters it infers and pushes below the projection."""
-    from pbf_spark.operators import knn
-
-    ranked = []
-    materialize = knn.checkpoint_and_release
-
-    def capture(df, *scratch):
-        out = materialize(df, *scratch)
-        ranked.append(df)
-        return out
-
-    monkeypatch.setattr(knn, "checkpoint_and_release", capture)
-    Q.knn_events(spark, SF).collect()
-    in_range = Q.range_join_events(spark, SF)
-    in_range.collect()
-    for df in (*ranked, in_range):
+    set. Catalyst would otherwise copy a deterministic UDF into the null
+    and size filters it infers and pushes below the projection."""
+    for df in (Q.knn_events(spark, SF), Q.range_join_events(spark, SF)):
+        df.collect()
         evals = [n for n, _, _, _ in executed_nodes(df) if n == "ArrowEvalPythonExec"]
         assert len(evals) == 2, evals
 

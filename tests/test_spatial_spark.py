@@ -240,40 +240,91 @@ def _ulps(a, b) -> int:
     return int(np.abs(np.asarray(a).view(np.int64) - np.asarray(b).view(np.int64)).max(initial=0))
 
 
-@pytest.mark.parametrize("start_ring", [1, 3, 4, 8])
-def test_knn_any_ring_matches_brute_force(spark, fixture_dir, nodes, nodes_np, start_ring):
-    """Every ring returns the exhaustive answer; only the share of
-    queries that take the brute-force pass changes. Ring 1 covers no
-    disc (``covered_m`` is 0), so every query goes brute force; the two
-    queries ≥ 20 km from every point have no candidate at any ring; a
-    3-point cloud with k=5 gives each query 3 rows."""
+def _knn_case(spark, nodes, nodes_np, case):
+    """(points frame, (ids, lat, lon)) for one exactness input."""
     import pandas as pd
 
-    from pbf_spark.spatial import hexgrid
+    ids, lat, lon = nodes_np
+    if case == "dense":
+        return nodes, nodes_np
+    if case == "cloud":  # fewer points than k
+        cloud = (ids[:3], lat[:3], lon[:3])
+    elif case == "empty":
+        cloud = (ids[:0], lat[:0], lon[:0])
+    else:  # skewed: three ~2 m clusters (a third of each at 0 m: ties) hold most points
+        rng = np.random.default_rng(16)
+        at = np.repeat([0, len(ids) // 2, len(ids) - 1], len(ids) // 2)
+        jitter = np.where(np.arange(at.size) % 3 == 0, 0.0, rng.uniform(-1e-5, 1e-5, (2, at.size)))
+        cloud = (
+            np.concatenate([ids, 10**7 + np.arange(at.size)]),
+            np.concatenate([lat, lat[at] + jitter[0]]),
+            np.concatenate([lon, lon[at] + jitter[1]]),
+        )
+        assert at.size > len(ids)
+    pdf = pd.DataFrame({"id": cloud[0], "lat": cloud[1], "lon": cloud[2]})
+    return spark.createDataFrame(pdf, "id long, lat double, lon double"), cloud
 
-    assert hexgrid.covered_m(knn.RES, 1) == 0.0
+
+@pytest.mark.parametrize("case", ["dense", "cloud", "empty", "skewed"])
+def test_knn_matches_brute_force(spark, fixture_dir, nodes, nodes_np, case):
+    """The exhaustive answer on every input the histogram can see: the
+    dense nodes, a 3-point cloud with k=5 (each query gets 3 rows), an
+    empty point frame (no rows) and a skewed cloud where three cells
+    hold most points. Every query set includes two queries ≥ 20 km from
+    every node and two queries on nodes (on the skewed cloud's clusters)."""
+    import pandas as pd
+
     ids, lat, lon = nodes_np
     qp = spark.read.parquet(str(fixture_dir / "query_points.parquet")).limit(20).toPandas()
     far = pd.DataFrame({"query_id": [10**6, 10**6 + 1], "lat": [52.2, 51.5], "lon": [-0.1, 1.0]})
     for r in far.itertuples():
         assert geometry.haversine_m(r.lat, r.lon, lat, lon).min() >= 20_000.0
-    qp = pd.concat([qp[["query_id", "lat", "lon"]], far], ignore_index=True)
+    on = pd.DataFrame({"query_id": [10**6 + 2, 10**6 + 3], "lat": lat[[0, -1]], "lon": lon[[0, -1]]})
+    qp = pd.concat([qp[["query_id", "lat", "lon"]], far, on], ignore_index=True)
     queries = spark.createDataFrame(qp)
-    cloud = pd.DataFrame({"id": ids[:3], "lat": lat[:3], "lon": lon[:3]})
+    pts, (p_ids, p_lat, p_lon) = _knn_case(spark, nodes, nodes_np, case)
+    k = 5
+    if case == "skewed":
+        assert np.sort(knn._histogram(pts, k)[2])[-3:].sum() > len(p_ids) / 2
+    got = knn.knn_join(pts, queries, k=k).toPandas()
+    assert len(got) == len(qp) * min(k, len(p_ids))
+    for q in qp.itertuples():
+        d = geometry.haversine_m(q.lat, q.lon, p_lat, p_lon)
+        order = np.lexsort((p_ids, d))[:k]
+        sub = got[got.query_id == q.query_id].sort_values("rank")
+        assert list(sub["id"]) == list(p_ids[order]), f"query {q.query_id}"
+        assert list(sub["rank"]) == list(range(1, len(order) + 1))
+        assert _ulps(sub["dist_m"].to_numpy(), d[order]) <= 4
 
-    for pts, (p_ids, p_lat, p_lon), k in [
-        (nodes, nodes_np, 5),
-        (spark.createDataFrame(cloud), (ids[:3], lat[:3], lon[:3]), 5),
-    ]:
-        got = knn.knn_join(pts, queries, k=k, start_ring=start_ring).toPandas()
-        assert len(got) == len(qp) * min(k, len(p_ids))
-        for q in qp.itertuples():
-            d = geometry.haversine_m(q.lat, q.lon, p_lat, p_lon)
-            order = np.lexsort((p_ids, d))[:k]
-            sub = got[got.query_id == q.query_id].sort_values("rank")
-            assert list(sub["id"]) == list(p_ids[order]), f"query {q.query_id}"
-            assert list(sub["rank"]) == list(range(1, len(order) + 1))
-            assert _ulps(sub["dist_m"].to_numpy(), d[order]) <= 4
+
+def test_knn_start_ring_has_no_effect(spark, fixture_dir, nodes):
+    """``start_ring`` is accepted and ignored: rings 1, 4 and 8 return
+    identical frames."""
+    queries = spark.read.parquet(str(fixture_dir / "query_points.parquet")).limit(20)
+    rows = [
+        knn.knn_join(nodes, queries, k=5, start_ring=r).orderBy("query_id", "rank").collect()
+        for r in (1, 4, 8)
+    ]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
+
+
+def test_knn_histogram_resolution(spark, nodes, nodes_np):
+    """The histogram counts every point with coordinates at the finest
+    resolution whose non-empty cells hold ≥ k points on average, and at
+    the coarsest when there are fewer than k points."""
+    from pbf_spark.spatial import hexgrid
+
+    ids, lat, lon = nodes_np
+    for k in (1, 5, 50):
+        res, cells, counts = knn._histogram(nodes, k)
+        assert counts.sum() == len(ids) and cells.size * k <= len(ids)
+        expect_cells, expect_counts = np.unique(hexgrid.geo_to_cell(lat, lon, res), return_counts=True)
+        order = np.argsort(cells)
+        assert (cells[order] == expect_cells).all() and (counts[order] == expect_counts).all()
+        if res < knn.KNN_RES[-1]:
+            assert np.unique(hexgrid.geo_to_cell(lat, lon, res + 1)).size * k > len(ids)
+    assert knn._histogram(nodes.limit(3), 5)[0] == knn.KNN_RES[0]
+    assert knn._histogram(nodes.limit(0), 5)[1].size == 0
 
 
 @pytest.mark.parametrize("radius_m", [30.0, 500.0, 3000.0, 20_000.0])
