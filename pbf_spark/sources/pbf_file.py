@@ -25,16 +25,6 @@ from pyspark.sql import types as T
 from ..wire.frame import iter_blob_frames, read_blob_header, split_blob, unpack_blob
 from ..wire.osmformat import Header, parse_header_block
 
-INDEX_SCHEMA = T.StructType(
-    [
-        T.StructField("blob_seq", T.LongType(), False),
-        T.StructField("blob_type", T.StringType(), False),
-        T.StructField("offset", T.LongType(), False),
-        T.StructField("length", T.LongType(), False),
-    ]
-)
-
-
 def index_blobs(path: str | Path) -> list[tuple[int, str, int, int]]:
     """Framing-only scan → [(blob_seq, blob_type, payload_offset, length)].
 

@@ -6,16 +6,16 @@ The inverse pipeline re-expressed Spark-first:
   chunking each Arrow batch by type inside the UDF (Coalesce,
   /root/reference/internal/encoder/batch.go:12-37; EntityLimit
   encoder/primitive.go:38-41)
-- bbox side aggregate (A20) → one ``agg(min/max)`` (ExtractBoundingBoxes,
-  encoder/batch.go:39-68)
+- bbox side aggregate (A20) → min/max ``observe()``d on the encode pass
+  (ExtractBoundingBoxes, encoder/batch.go:39-68)
 - block extract + string table + delta encode (A21/A22) →
   ``osmformat.encode_block`` over each chunk's Arrow entity columns
 - pack + frame (A23) and two-pass assembly — header written first with
   the final bbox, body after (A24, encoder.go:158-185) — here the body
   blobs stream to the driver via ``toLocalIterator`` in partition order
-  and the header is written first because the bbox aggregate already ran.
-  The blocks are encoded in one parallel job into a ``localCheckpoint``
-  that the write releases when it ends.
+  and the header is written first because the bbox is known by then:
+  the blocks are encoded in one parallel job into a ``localCheckpoint``
+  (released when the write ends), and that job observes the header facts.
 
 Single-file output is inherently a driver-side sink; at cluster scale
 one PBF shard per partition would replace it (not built here).
@@ -31,7 +31,7 @@ from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -84,7 +84,7 @@ def encode_blocks(entities: DataFrame) -> DataFrame:
 
 def write_pbf(entities: DataFrame, path: str | Path) -> dict:
     """Write an entity DataFrame to a single framed .osm.pbf file."""
-    # everything the header needs, in one pass over the input
+    # everything the header needs, observed on the one encode pass
     node = F.col("entity_type") == "node"
     facts = [
         F.min(F.when(node, F.col("lat_nano"))).alias("bottom"),
@@ -100,9 +100,10 @@ def write_pbf(entities: DataFrame, path: str | Path) -> dict:
         # lat/lon counts to match refs on EVERY way, so mixed presence
         # (e.g. assemble_way_geometries(how='left') output, or a union
         # of sources with and without locations) would silently write a
-        # file our own decoder rejects. Validate eagerly with a clear
-        # error instead; the count rides in the same pass, so it reads
-        # refs and both location columns even when no way has locations.
+        # file our own decoder rejects. Validate before the file is
+        # opened, with a clear error; the count rides in the same pass,
+        # so it reads refs and both location columns even when no way
+        # has locations.
         facts += [
             F.expr(
                 "bool_or(entity_type='way' AND way_lats IS NOT NULL AND size(way_lats) > 0)"
@@ -114,33 +115,34 @@ def write_pbf(entities: DataFrame, path: str | Path) -> dict:
                 " OR size(way_lons) <> size(refs)))"
             ).alias("bad"),
         ]
-    head = entities.agg(*facts).first().asDict()
-    way_locs = bool(head.get("way_locs"))
-    if way_locs and head["bad"]:
-        raise ValueError(
-            f"LocationsOnWays presence is mixed: {head['bad']} way(s) with refs lack "
-            "full-length way_lats/way_lons while others carry them. Either "
-            "supply locations for every way (assemble_way_geometries(how="
-            "'inner')) or drop the way_lats/way_lons columns to write the "
-            "file without LocationsOnWays."
-        )
-    features = ["OsmSchema-V0.6", "DenseNodes"] + (
-        ["HistoricalInformation"] if head["visible_false"] else []
-    )
-    header = Header(
-        bbox_nano=(head["left"], head["right"], head["top"], head["bottom"])
-        if head["left"] is not None
-        else None,
-        required_features=tuple(features),
-        optional_features=("LocationsOnWays",) if way_locs else (),
-        writing_program="pbf_spark",
-    )
+    observed = Observation()
     # every partition encodes in one job; toLocalIterator over the plan
     # itself would run one job per partition, one after another
-    blocks = encode_blocks(entities).localCheckpoint(eager=True)
+    blocks = encode_blocks(entities.observe(observed, *facts)).localCheckpoint(eager=True)
     n_blobs = 0
     n_entities = 0
     try:
+        head = observed.get
+        way_locs = bool(head.get("way_locs"))
+        if way_locs and head["bad"]:
+            raise ValueError(
+                f"LocationsOnWays presence is mixed: {head['bad']} way(s) with refs lack "
+                "full-length way_lats/way_lons while others carry them. Either "
+                "supply locations for every way (assemble_way_geometries(how="
+                "'inner')) or drop the way_lats/way_lons columns to write the "
+                "file without LocationsOnWays."
+            )
+        features = ["OsmSchema-V0.6", "DenseNodes"] + (
+            ["HistoricalInformation"] if head["visible_false"] else []
+        )
+        header = Header(
+            bbox_nano=(head["left"], head["right"], head["top"], head["bottom"])
+            if head["left"] is not None
+            else None,
+            required_features=tuple(features),
+            optional_features=("LocationsOnWays",) if way_locs else (),
+            writing_program="pbf_spark",
+        )
         with open(path, "wb") as f:
             f.write(wire_frame.frame_blob("OSMHeader", wire_frame.pack_blob(build_header_block(header))))
             for row in blocks.toLocalIterator():

@@ -79,8 +79,6 @@ _HEX0_R = _FACE_PLANE_R / 3.81
 _SQRT7 = np.sqrt(7.0)
 _ROT7 = np.arcsin(np.sqrt(3.0 / 28.0))  # aperture-7 inter-resolution rotation
 
-MAX_RES = 15
-
 
 def _res_basis(res: int) -> tuple[float, float]:
     """(hex circumradius, lattice rotation) at a resolution."""

@@ -15,7 +15,10 @@ and restarting with the same checkpoint resumes EXACTLY after the last
 committed batch — already-processed documents are never decoded twice,
 newly arrived document files are picked up. Per-batch lineage rows are
 appended from ``foreachBatch``, one per decode partition, each
-traceable and re-derivable (lineage.py).
+traceable and re-derivable (lineage.py). A micro-batch makes one Spark
+write, its entities; the driver writes the batch's lineage rows as one
+file, so ``lineage_dir`` must be reachable from the driver, like the
+iceberg_lite metadata.
 """
 
 from __future__ import annotations

@@ -13,6 +13,7 @@ query and the stateful operators to that rule:
   return exactly what they return when run one at a time;
 * ``write_pbf`` holds its encoded blocks in a checkpoint only while it
   writes;
+* the document stream leaves no storage behind once it returns;
 * no module in the package keeps mutable module-level state.
 """
 
@@ -204,3 +205,21 @@ def test_no_module_level_mutable_state():
     state that outlives a call belongs to the object it returns."""
     found = sorted(w for p in PACKAGE.rglob("*.py") for w in _module_state_writes(p))
     assert not found, "module-level state written in: " + "; ".join(found)
+
+
+def test_stream_decode_holds_no_storage(spark, fixture_dir, tmp_path):
+    """After the document stream returns, neither its micro-batches nor
+    their lineage leave an SQL-cache entry or a persisted RDD."""
+    from pbf_spark.sources import iceberg_lite
+    from pbf_spark.streaming.pipeline import stream_decode_documents
+
+    blobs = iceberg_lite.read_table(spark, fixture_dir / "media_blobs")
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    entries, before = _cache_entries(spark), persistent()
+    stream_decode_documents(
+        spark, fixture_dir / "documents_interleaved", blobs,
+        tmp_path / "out", tmp_path / "ckpt", tmp_path / "lineage",
+    )
+    assert spark.read.parquet(str(tmp_path / "lineage")).count() > 0
+    assert _cache_entries(spark) == entries, "the stream left entries in the SQL cache"
+    assert persistent() == before, "the stream left an RDD persisted"

@@ -298,3 +298,24 @@ def test_streaming_decode_plans_no_exchange(spark, fixture_dir):
     plan = plan_of(decode_documents(docs, blobs))
     assert "StreamingRelation" in plan
     assert "Exchange" not in plan.replace("BroadcastExchange", "")
+
+
+def test_partition_lineage_is_narrow(spark, fixture_dir):
+    """Lineage summarizes each partition where it is: no exchange over a
+    spread multi-partition entity frame, and the plan names
+    ``spark_partition_id()`` (the perfbench stage split looks for it)."""
+    from pbf_spark.lineage import partition_lineage
+    from pbf_spark.operators.decode import decode_documents
+    from pbf_spark.sources import iceberg_lite
+    from pbf_spark.util import release_checkpoint, spread
+
+    docs = iceberg_lite.read_table(spark, fixture_dir / "documents_interleaved")
+    blobs = iceberg_lite.read_table(spark, fixture_dir / "media_blobs")
+    entities = spread(decode_documents(docs, blobs)).localCheckpoint(eager=True)
+    try:
+        assert entities.rdd.getNumPartitions() > 1
+        plan = plan_of(partition_lineage(entities, "r"))
+    finally:
+        release_checkpoint(entities)
+    assert "Exchange" not in plan
+    assert "spark_partition_id()" in plan.lower()

@@ -224,7 +224,7 @@ def test_roundtrip_keeps_null_changeset(spark, tmp_path_factory):
 def test_write_pbf_rejects_mixed_locations_on_ways(spark, tmp_path_factory):
     """LocationsOnWays is all-or-nothing per file (ADVICE r4): mixed
     presence would write a file our own decoder rejects, so write_pbf
-    must fail eagerly with a clear error."""
+    must fail with a clear error before it opens the file."""
     from pbf_spark.model.schema import MEDIA_BLOB_SCHEMA
     from pbf_spark.util import small_df
     from pbf_spark.wire.osmformat import encode_block
@@ -250,5 +250,11 @@ def test_write_pbf_rejects_mixed_locations_on_ways(spark, tmp_path_factory):
         MEDIA_BLOB_SCHEMA,
     )
     ents = decode.decode_blobs(blob_df, way_locations=True)
+    path = tmp_path_factory.mktemp("rtmix") / "mixed.osm.pbf"
+    persistent = lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    before = persistent()
     with pytest.raises(ValueError, match="LocationsOnWays presence is mixed"):
-        pbf_sink.write_pbf(ents, tmp_path_factory.mktemp("rtmix") / "mixed.osm.pbf")
+        pbf_sink.write_pbf(ents, path)
+    # raised before the file is opened, with the encoded blocks released
+    assert not path.exists()
+    assert persistent() == before

@@ -552,3 +552,122 @@ def test_stream_lineage_row_per_decode_partition(spark, fixture_dir, blobs, tmp_
         else:
             assert len(batches) == 1
             assert 1 < len(rows) <= spark.sparkContext.defaultParallelism
+
+
+# the lineage table's schema as Spark reads it back
+LINEAGE_SCHEMA = [
+    ("run_id", "string"),
+    ("batch_id", "bigint"),
+    ("partition_id", "int"),
+    ("n_rows", "bigint"),
+    ("n_nodes", "bigint"),
+    ("n_ways", "bigint"),
+    ("n_relations", "bigint"),
+    ("min_doc_id", "string"),
+    ("max_doc_id", "string"),
+    ("n_blobs", "bigint"),
+    ("recorded_at", "timestamp"),
+]
+SUMMARY_COLS = [c for c in lineage.LINEAGE_COLS if c not in ("run_id", "batch_id", "recorded_at")]
+
+
+def _fields(df) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+
+def _aggregate_lineage(entities):
+    """The lineage rows as one SQL aggregate per partition: a
+    ``groupBy(spark_partition_id())`` over ``entities``."""
+    count = lambda kind: F.sum(F.when(F.col("entity_type") == kind, 1).otherwise(0))
+    return (
+        entities.withColumn("partition_id", F.spark_partition_id())
+        .groupBy("partition_id")
+        .agg(
+            F.count("*").alias("n_rows"),
+            count("node").alias("n_nodes"),
+            count("way").alias("n_ways"),
+            count("relation").alias("n_relations"),
+            F.min("doc_id").alias("min_doc_id"),
+            F.max("doc_id").alias("max_doc_id"),
+            F.countDistinct("blob_seq").alias("n_blobs"),
+        )
+    )
+
+
+@pytest.mark.parametrize("layout", ["spread", "one_partition"])
+def test_partition_lineage_matches_aggregate(spark, fixture_dir, blobs, layout):
+    """Each partition's summary row equals the SQL aggregate of that
+    partition's rows; empty partitions have no row."""
+    from pbf_spark.util import release_checkpoint, spread
+
+    docs = iceberg_lite.read_table(spark, fixture_dir / "documents_interleaved")
+    entities = decode.decode_documents(docs, blobs)
+    entities = spread(entities) if layout == "spread" else entities.coalesce(1)
+    entities = entities.localCheckpoint(eager=True)
+    try:
+        rows = lineage.partition_lineage(entities, "r", 7).collect()
+        oracle = _aggregate_lineage(entities).select(SUMMARY_COLS).collect()
+    finally:
+        release_checkpoint(entities)
+    assert sorted(tuple(r[c] for c in SUMMARY_COLS) for r in rows) == sorted(map(tuple, oracle))
+    if layout == "spread":
+        assert len(rows) > 1
+    else:
+        assert len(rows) == 1
+    assert {(r["run_id"], r["batch_id"]) for r in rows} == {("r", 7)}
+    assert all(r["recorded_at"] is not None for r in rows)
+
+
+def test_header_only_stream_leaves_empty_lineage_table(spark, fixture_dir, blobs, tmp_path_factory):
+    """A micro-batch that decodes nothing (its one blob is the file
+    header) still leaves a readable lineage table: no rows, the
+    lineage schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = tmp_path_factory.mktemp("stream_header")
+    header_ref = blobs.where("blob_type = 'OSMHeader'").first()["media_ref"]
+    src = fixture_dir / "documents_interleaved" / "data"
+    (tmp / "docs" / "data").mkdir(parents=True)
+    span = {"kind": "media", "text": None, "media_ref": header_ref, "offset": 0}
+    pq.write_table(
+        pa.Table.from_pylist([{"doc_id": "d0", "spans": [span]}], pq.read_schema(next(src.glob("*.parquet")))),
+        tmp / "docs" / "data" / "part-0.parquet",
+    )
+    out, ckpt, lin = tmp / "entities", tmp / "ckpt", tmp / "lineage"
+    q = stream_decode_documents(spark, tmp / "docs", blobs, out, ckpt, lin, run_id="h")
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [1]
+    assert spark.read.parquet(str(out)).count() == 0
+    lin_df = lineage.read_lineage(spark, lin)
+    assert _fields(lin_df) == LINEAGE_SCHEMA
+    assert lin_df.count() == 0
+
+
+def test_lineage_reads_spark_and_driver_written_files(spark, fixture_dir, blobs, tmp_path):
+    """A lineage dir holding a Spark-written file (the table's earlier
+    layout) and driver-written appends reads back as one table."""
+    import datetime
+
+    docs = iceberg_lite.read_table(spark, fixture_dir / "documents_interleaved")
+    entities = decode.decode_documents(docs, blobs).persist()
+    try:
+        _aggregate_lineage(entities).select(
+            F.lit("spark").alias("run_id"),
+            F.lit(0).cast("long").alias("batch_id"),
+            *SUMMARY_COLS,
+            F.current_timestamp().alias("recorded_at"),
+        ).write.mode("append").parquet(str(tmp_path))
+        lineage.append_lineage(entities, "driver", tmp_path, batch_id=1)
+        lineage.append_lineage(entities.where("false"), "empty", tmp_path, batch_id=2)
+        n_parts = _aggregate_lineage(entities).count()
+    finally:
+        entities.unpersist()
+    assert not list(tmp_path.glob("*.tmp")), "a temp file was left behind"
+    lin_df = lineage.read_lineage(spark, tmp_path)
+    assert _fields(lin_df) == LINEAGE_SCHEMA
+    rows = lin_df.collect()
+    by_run = {run: sorted(tuple(r[c] for c in SUMMARY_COLS) for r in rows if r["run_id"] == run)
+              for run in ("spark", "driver")}
+    assert len(rows) == 2 * n_parts and by_run["spark"] == by_run["driver"]
+    now = datetime.datetime.now()
+    assert all(abs(now - r["recorded_at"]) < datetime.timedelta(hours=1) for r in rows)
